@@ -106,8 +106,18 @@ def windowed_agg(enriched: DataFrame, watermark: str | None = None) -> DataFrame
     if watermark is not None:
         enriched = enriched.withWatermark("ts", watermark)
     sevs = sorted(SEVERITIES)
+    # the per-severity counts see only the closed domain: any other
+    # value would count in event_count yet vanish from `severities`, so
+    # fail the query instead (in-plan, no extra job; NULL is skipped,
+    # as collect_list skipped it)
+    sev = F.col("severity")
+    guarded = F.when(sev.isNull() | sev.isin(*sevs), sev).otherwise(
+        F.raise_error(
+            F.concat(F.lit(f"windowed_agg: severity outside {sevs}: "), sev)
+        )
+    )
     return (
-        enriched
+        enriched.withColumn("severity", guarded)
         .groupBy(F.window("ts", "5 minutes").alias("w"), "city", "event_type")
         .agg(
             F.count("*").alias("event_count"),

@@ -28,7 +28,29 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def host_cpus() -> int:
+    """Cores for ``local[N]``: ``SPARK_GRAFT_CPUS`` if set, else the
+    cores this process may run on (its affinity mask, which a container
+    or ``taskset`` narrows; ``os.cpu_count()`` would count the whole
+    machine)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` if set, else
+    40% of physical RAM, at most 16g — in local mode the driver heap
+    holds every executor's tasks, and a fixed 16g on a smaller host
+    lets the JVM grow past what the machine has."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, min(16 * 1024, int(phys * 0.4) >> 20))}m"
+
+
+DEFAULT_CPUS = host_cpus()
 
 
 def get_spark(
@@ -118,7 +140,7 @@ def get_spark(
         # not NTZ: under the UTC session TZ the values match the DuckDB
         # oracle exactly, and LTZ keeps unix_micros()/date-math usable.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # Streaming state at scale: RocksDB spills state to local disk
         # instead of holding it on-heap (SURVEY.md §4.2).

@@ -61,7 +61,11 @@ file contents: at 100 TB with thousands of buckets it stays a few MB
 of JSON, and the single put-if-absent commit is the same O(1)
 metadata operation Delta runs on S3. Bucket pruning happens at the
 manifest (driver) level — a point lookup reads only the one bucket's
-files, no directory listing at all.
+files. Readers never list a directory: Spark gets the manifest's
+explicit file paths and only stats each one — on the driver up to
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) paths,
+in a distributed listing job beyond it. A commit's write is one
+shuffle, sized to the buckets it touches (``_by_bucket``).
 """
 
 from __future__ import annotations
@@ -595,55 +599,50 @@ def history(table_dir: str) -> list[dict]:
 # ------------------------------------------------------------- write
 
 
+def _txn_rel(version: int) -> str:
+    """A fresh transaction directory name (data-dir relative) for an
+    attempt at ``version``: unique per attempt, so a retried or
+    conflicting writer never writes into another attempt's files."""
+    return f"txn-{version:010d}-{uuid.uuid4().hex[:8]}"
+
+
+def _by_bucket(df: DataFrame, buckets) -> DataFrame:
+    """``df`` hash-partitioned by ``kb`` into one partition per bucket
+    the commit touches, at most one per core — the input contract of
+    ``_write_txn_files``. Each bucket lands wholly in one task, so the
+    partitioned write emits exactly one file per touched bucket (Delta's
+    optimizeWrite, as one shuffle). The count is explicit because AQE
+    never coalesces a user-given partition count, and capped at the
+    core count because beyond it extra partitions only add waves of
+    tiny write tasks. Callers that transform rows per key (the upsert's
+    last-writer-wins window) apply it BEFORE that step: hash
+    partitioning on ``kb`` satisfies a ``(kb, key)`` window's
+    clustering, so the window and the write share this one exchange."""
+    n = min(len(set(buckets)), df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartition(max(1, n), "kb")
+
+
 def _write_txn_files(
     merged: DataFrame,
     table_dir: str,
-    version: int,
+    txn_rel: str,
     stats_cols: list[str] | None = None,
     max_records_per_file: int | None = None,
-    presorted: bool = False,
-    n_buckets: int | None = None,
 ) -> list[dict]:
-    """Write one transaction's data files under a fresh directory and
-    return manifest entries. `partitionBy` on a duplicated bucket
-    column splits the write per bucket while keeping ``kb`` as a data
-    column (uniform schema across commits — readers take explicit file
-    lists, no hive discovery); the hive dirs are renamed to plain
-    names so Spark never infers a partition column from them.
+    """Write one transaction's data files under ``txn_rel`` and return
+    manifest entries. ``merged`` must come out of ``_by_bucket``: this
+    function adds no shuffle of its own, so each bucket is written by
+    the one task holding it — exactly one file per touched bucket,
+    unless ``max_records_per_file`` splits an oversized one. Readers
+    take explicit file lists, so every extra file would tax each later
+    read_table with per-file planning and footer reads.
 
-    ``n_buckets`` (r14): the bucket column has at most this many
-    distinct values, so the pre-write shuffle is sized to exactly that
-    — without it the repartition inherits the session's AQE initial
-    partition count (256 locally) for a ≤n_buckets-value key space,
-    paying empty-task scheduling and an AQE coalesce pass per commit
-    by construction. Two buckets hashing to one partition is fine:
-    partitionBy still writes one file per bucket value."""
-    txn_rel = f"txn-{version:010d}-{uuid.uuid4().hex[:8]}"
+    `partitionBy` on a duplicated bucket column splits the write per
+    bucket while keeping ``kb`` as a data column (uniform schema across
+    commits, no hive discovery); the hive dirs are renamed to plain
+    names so Spark never infers a partition column from them."""
     txn_abs = os.path.join(_data_dir(table_dir), txn_rel)
-    # OPTIMIZED WRITE (r8 verdict #1): repartition by bucket before the
-    # partitioned write. Without it each of the writer's input
-    # partitions emits one file PER bucket it contains — a 32-partition
-    # dedupe shuffle × 16 buckets wrote ~128-500 row files per commit,
-    # and since readers take explicit file lists, every subsequent
-    # read_table / DV scan paid per-file planning+footer cost that
-    # COMPOUNDED across the lifecycle's commits (the measured source of
-    # the full-sweep regression: 242 manifest files by v1 at sf0.1).
-    # Hash-repartitioning on the bucket value lands each bucket wholly
-    # in one task → exactly one file per touched bucket;
-    # maxRecordsPerFile still splits oversized buckets at scale, and
-    # AQE coalesces the tiny-commit shuffle. This is Delta's
-    # optimizeWrite bin-packing, expressed as one Spark shuffle.
-    # ``presorted=True`` (compact) skips it: the input is already
-    # repartitioned by bucket AND row-clustered (sort/Z-order), and a
-    # second shuffle would scramble exactly the clustering compact
-    # exists to create.
-    out = merged.withColumn("_kb_part", F.col("kb"))
-    if not presorted:
-        if n_buckets is not None:
-            out = out.repartition(int(n_buckets), F.col("_kb_part"))
-        else:
-            out = out.repartition(F.col("_kb_part"))
-    writer = out.write.partitionBy("_kb_part")
+    writer = merged.withColumn("_kb_part", F.col("kb")).write.partitionBy("_kb_part")
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
     writer.parquet(txn_abs)
@@ -775,7 +774,7 @@ def _dv_delete_entries(
             return None
         matches, counts = planned
         return _dv_write_sidecar(
-            spark, table_dir, new_version, cand_entries, matches, counts
+            spark, table_dir, _txn_rel(new_version), cand_entries, matches, counts
         )
     finally:
         if owns_live:
@@ -802,7 +801,7 @@ def _dv_match_counts(live, matcher):
 def _dv_write_sidecar(
     spark: SparkSession,
     table_dir: str,
-    new_version: int,
+    txn_rel: str,
     cand_entries: list[dict],
     matches,
     counts: dict,
@@ -826,7 +825,6 @@ def _dv_write_sidecar(
         )
         carried = old_dv.filter(F.col("_file").isin(sorted(counts)))
         sidecar = sidecar.unionByName(carried)
-    txn_rel = f"txn-{new_version:010d}-{uuid.uuid4().hex[:8]}"
     dv_rel = f"{txn_rel}/_dv"
     # partition the sidecar BY FILE: a commit deleting billions of
     # rows across many files writes one sidecar file per data-file
@@ -847,6 +845,47 @@ def _dv_write_sidecar(
         else:
             out.append(e)
     return out
+
+
+def _dv_overlapped_writes(
+    spark: SparkSession,
+    table_dir: str,
+    version: int,
+    cand_entries: list[dict],
+    matches,
+    counts: dict,
+    rows: DataFrame | None,
+    stats_cols: list[str] | None,
+) -> tuple[list[dict], list[dict]]:
+    """Phase 2 of an UPDATE/MERGE DV commit: the sidecar write and the
+    append of ``rows`` (bucket-partitioned; None when nothing is
+    appended) are independent writes over the candidate scan phase 1
+    materialized, so they run concurrently. Returns (replacement
+    candidate entries, appended entries). Each write gets its own txn
+    dir; if either fails, both dirs are removed (best effort) before
+    the error is re-raised — the survivor's files are referenced by no
+    manifest, and vacuum's age gate would keep them for a day."""
+    import shutil
+    from concurrent.futures import ThreadPoolExecutor
+
+    side_rel, app_rel = _txn_rel(version), _txn_rel(version)
+    # leaving the pool waits for both writes, so neither is still
+    # writing into its dir when the cleanup below removes it
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_side = pool.submit(
+            _dv_write_sidecar, spark, table_dir, side_rel, cand_entries, matches, counts
+        )
+        f_app = None
+        if rows is not None:
+            f_app = pool.submit(
+                _write_txn_files, rows, table_dir, app_rel, stats_cols=stats_cols
+            )
+    try:
+        return f_side.result(), (f_app.result() if f_app is not None else [])
+    except BaseException:
+        for rel in (side_rel, app_rel):
+            shutil.rmtree(os.path.join(_data_dir(table_dir), rel), ignore_errors=True)
+        raise
 
 
 def upsert(
@@ -946,14 +985,14 @@ def upsert(
             order = [F.desc("_epoch")] + ([F.desc(order_col)] if order_col else [])
             w = Window.partitionBy("kb", *key_cols).orderBy(*order)
             deduped = (
-                merged.withColumn("_rn", F.row_number().over(w))
+                _by_bucket(merged, affected)
+                .withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             )
             eff_stats = stats_cols if stats_cols is not None else old_manifest.get("stats_cols")
             new_entries = _write_txn_files(
-                deduped, table_dir, old_version + 1, stats_cols=eff_stats,
-                n_buckets=n_buckets,
+                deduped, table_dir, _txn_rel(old_version + 1), stats_cols=eff_stats
             )
             # the manifest schema is the UNION of the old table schema and
             # this epoch's columns — never narrowed by which buckets this
@@ -1053,9 +1092,8 @@ def delete(
                 F.broadcast(tagged.select(*key_cols)), key_cols, "left_anti"
             )
             new_entries = _write_txn_files(
-                remaining, table_dir, old_version + 1,
+                _by_bucket(remaining, affected), table_dir, _txn_rel(old_version + 1),
                 stats_cols=old_manifest.get("stats_cols"),
-                n_buckets=n_buckets,
             )
         manifest = dict(
             old_manifest,
@@ -1128,9 +1166,9 @@ def delete_where(
                 spark, table_dir, candidates, old_manifest.get("schema")
             ).filter(~F.coalesce(cond, F.lit(False)))
             new_entries = _write_txn_files(
-                remaining, table_dir, old_version + 1,
+                _by_bucket(remaining, [f["kb"] for f in candidates]),
+                table_dir, _txn_rel(old_version + 1),
                 stats_cols=old_manifest.get("stats_cols"),
-                n_buckets=old_manifest["n_buckets"],
             )
         manifest = dict(
             old_manifest,
@@ -1375,33 +1413,16 @@ def merge(
                 merged = parts[0]
                 for p in parts[1:]:
                     merged = merged.unionByName(p)
+                merged = _by_bucket(merged, affected)
             if mode == "dv" and dv_plan is not None:
-                # overlap the two independent writes (sidecar + append)
-                # over the already-materialized candidate scan
-                from concurrent.futures import ThreadPoolExecutor
-
-                matches, counts = dv_plan
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    f_side = pool.submit(
-                        _dv_write_sidecar, spark, table_dir, old_version + 1,
-                        cand, matches, counts,
-                    )
-                    f_app = (
-                        pool.submit(
-                            _write_txn_files, merged, table_dir, old_version + 1,
-                            stats_cols=old_manifest.get("stats_cols"),
-                            n_buckets=n_buckets,
-                        )
-                        if merged is not None
-                        else None
-                    )
-                    cand_entries = f_side.result()
-                    new_entries = f_app.result() if f_app is not None else []
+                cand_entries, new_entries = _dv_overlapped_writes(
+                    spark, table_dir, old_version + 1, cand, *dv_plan,
+                    merged, old_manifest.get("stats_cols"),
+                )
             elif merged is not None:
                 new_entries = _write_txn_files(
-                    merged, table_dir, old_version + 1,
+                    merged, table_dir, _txn_rel(old_version + 1),
                     stats_cols=old_manifest.get("stats_cols"),
-                    n_buckets=n_buckets,
                 )
             else:
                 new_entries = []
@@ -1484,6 +1505,7 @@ def update_where(
         if not candidates:
             return old_version  # stats prove nothing matches
         cand_paths = {f["path"] for f in candidates}
+        cand_buckets = [f["kb"] for f in candidates]
         keep = [f for f in old_manifest["files"] if f["path"] not in cand_paths]
         matched = F.coalesce(cond, F.lit(False))
 
@@ -1512,23 +1534,11 @@ def update_where(
                 updated_rows = _apply(
                     live_pos.drop("_file", "_pos").filter(matched), always=True
                 )
-                # the sidecar and the updated-row append are
-                # independent writes over the scan the count job just
-                # materialized — overlap them (guide §2.6); the commit
-                # below still publishes both atomically or neither
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    f_side = pool.submit(
-                        _dv_write_sidecar, spark, table_dir, old_version + 1,
-                        candidates, matches, counts,
-                    )
-                    f_app = pool.submit(
-                        _write_txn_files, updated_rows, table_dir, old_version + 1,
-                        stats_cols=old_manifest.get("stats_cols"),
-                        n_buckets=old_manifest["n_buckets"],
-                    )
-                    new_cand, appended = f_side.result(), f_app.result()
+                new_cand, appended = _dv_overlapped_writes(
+                    spark, table_dir, old_version + 1, candidates, matches, counts,
+                    _by_bucket(updated_rows, cand_buckets),
+                    old_manifest.get("stats_cols"),
+                )
             finally:
                 live_pos.unpersist()
             files = keep + new_cand + appended
@@ -1536,9 +1546,8 @@ def update_where(
             live = _read_entries(spark, table_dir, candidates, old_manifest.get("schema"))
             rewritten = _apply(live, always=False)
             files = keep + _write_txn_files(
-                rewritten, table_dir, old_version + 1,
+                _by_bucket(rewritten, cand_buckets), table_dir, _txn_rel(old_version + 1),
                 stats_cols=old_manifest.get("stats_cols"),
-                n_buckets=old_manifest["n_buckets"],
             )
         manifest = dict(
             old_manifest,
@@ -1571,7 +1580,7 @@ def compact(
     resolving until vacuumed.
 
     ``sort_cols`` clusters rows inside each bucket before the write
-    (repartition by bucket + sortWithinPartitions — the poor man's
+    (the bucket shuffle + sortWithinPartitions — the poor man's
     Z-order, one dimension at a time), and ``max_records_per_file``
     splits each bucket into several files: together they turn the
     per-file min/max stats into DISJOINT ranges, so data skipping on
@@ -1596,6 +1605,7 @@ def compact(
         return None
     version, manifest = snap
     df = read_table(spark, table_dir, version)
+    kbs = [f["kb"] for f in manifest["files"]]
     if zorder_cols:
         from ..sources.maintenance import zorder_value
 
@@ -1609,20 +1619,18 @@ def compact(
             [rng[f"hi_{c}"] for c in zorder_cols],
         )
         df = (
-            df.withColumn("_z", z)
-            .repartition("kb")
+            _by_bucket(df.withColumn("_z", z), kbs)
             .sortWithinPartitions("kb", "_z")
             .drop("_z")
         )
     elif sort_cols:
-        df = df.repartition("kb").sortWithinPartitions("kb", *sort_cols)
+        df = _by_bucket(df, kbs).sortWithinPartitions("kb", *sort_cols)
+    else:
+        df = _by_bucket(df, kbs)
     entries = _write_txn_files(
-        df, table_dir, version + 1,
+        df, table_dir, _txn_rel(version + 1),
         stats_cols=manifest.get("stats_cols"),
         max_records_per_file=max_records_per_file,
-        # sorted/z-ordered input is already repartitioned by bucket;
-        # the optimized-write shuffle would scramble the clustering
-        presorted=bool(sort_cols or zorder_cols),
     )
     new_manifest = dict(
         manifest, version=version + 1, op="compact", epoch=None, eff_epoch=None,

@@ -462,3 +462,36 @@ def test_atomic_pipeline_fresh_checkpoint_applies_epochs(spark, sf_small, tmp_pa
     got = _rows(read_table(spark, cfg.path("raw_events")).drop("_epoch", "kb"))
     want = _rows(read_table(spark, ref.path("raw_events")).drop("_epoch", "kb"))
     assert got == want
+
+
+def test_windowed_agg_out_of_domain_severity_fails_loudly(spark, tmp_path):
+    """windowed_agg counts the four enrichment severities only, so a
+    row with any other severity would count in event_count yet vanish
+    from `severities`. The query must fail instead, in batch and in
+    streaming form; in-domain and NULL severities aggregate as before."""
+    import datetime
+
+    schema = "ts timestamp, city string, event_type string, severity string"
+    t = datetime.datetime(2024, 1, 1, 12, 1)
+    good = [(t, "NYC", "click", "high"), (t, "NYC", "click", "low"),
+            (t, "NYC", "click", None)]
+    ok = windowed_agg(spark.createDataFrame(good, schema)).collect()
+    assert [(r.event_count, r.severities) for r in ok] == [(3, "high,low")]
+
+    bad = good + [(t, "NYC", "click", "urgent")]
+    with pytest.raises(Exception, match="severity outside"):
+        windowed_agg(spark.createDataFrame(bad, schema)).collect()
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(bad, schema).coalesce(1).write.parquet(src)
+    q = (
+        windowed_agg(spark.readStream.schema(schema).parquet(src), watermark="10 minutes")
+        .writeStream.format("memory").queryName("agg_bad_severity")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match="severity outside"):
+        q.awaitTermination(120)
+    assert not q.isActive

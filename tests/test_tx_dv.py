@@ -962,3 +962,42 @@ def test_concurrent_schema_evolution_merge_compaction(spark, tmp_path):
                     state.append((r.k, r.v, r.w))
         state.sort(key=str)
         assert state == content_at(v), f"replay diverged at v{v}"
+
+
+@pytest.mark.parametrize("failing", ["_dv_write_sidecar", "_write_txn_files"])
+@pytest.mark.parametrize("op", ["update_where", "merge"])
+def test_dv_overlapped_write_failure_leaves_no_orphan(spark, tmp_path, monkeypatch, op, failing):
+    """UPDATE/MERGE in dv mode write the DV sidecar and the appended
+    rows concurrently, each into its own txn dir. When one write fails,
+    the other's already-written dir must be removed before the error
+    propagates: no txn dir the manifest does not reference is left
+    under data/, and the table still reads as its previous version."""
+    tx = str(tmp_path / "tx")
+    _build(spark, tx)
+    v0 = tx_table.latest_version(tx)
+    before = _content(spark, tx)
+
+    def boom(*a, **k):
+        raise RuntimeError(f"injected {failing} failure")
+
+    monkeypatch.setattr(tx_table, failing, boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        if op == "update_where":
+            tx_table.update_where(spark, tx, F.col("v") >= 5, {"v": F.col("v") * 10},
+                                  mode="dv")
+        else:
+            tx_table.merge(spark, tx, _batch(spark, [("a", 100), ("z", 50)]),
+                           when_matched_update={"v": F.col("_src_v")}, mode="dv")
+    monkeypatch.undo()
+
+    referenced = {
+        p.split("/", 1)[0]
+        for v in tx_table.list_versions(tx)
+        for f in tx_table.read_manifest(tx, v)["files"]
+        for p in (f["path"], f.get("dv") or f["path"])
+    }
+    on_disk = {d.name for d in (pathlib.Path(tx) / "data").iterdir()
+               if d.name.startswith("txn-")}
+    assert on_disk == referenced
+    assert tx_table.latest_version(tx) == v0
+    assert _content(spark, tx) == before

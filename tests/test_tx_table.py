@@ -1015,3 +1015,102 @@ def test_tx_clone_carries_dv_state_and_ledger(spark, tmp_path):
         assert tx_table.latest_version(dst) == v_before
         assert {(r.k, r.v) for r in tx_table.read_table(spark, dst)
                 .select("k", "v").collect()} == want
+
+
+def _buckets_of(spark, keys, n_buckets):
+    """The tx_table bucket ids these string keys hash into."""
+    return {
+        r.kb
+        for r in spark.createDataFrame([(k,) for k in keys], "k string")
+        .select(F.pmod(F.xxhash64("k"), F.lit(n_buckets)).cast("int").alias("kb"))
+        .collect()
+    }
+
+
+def _fresh_files(tx, v_old, v_new):
+    """Manifest entries that entered the table at ``v_new``."""
+    old = {f["path"] for f in tx_table.read_manifest(tx, v_old)["files"]}
+    return [f for f in tx_table.read_manifest(tx, v_new)["files"] if f["path"] not in old]
+
+
+def _last_write_plan_tree(spark) -> str:
+    """The final (post-AQE) physical plan tree of the newest SQL
+    execution that wrote files, from Spark's own SQL status store
+    (kept with the UI disabled)."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    for i in range(execs.size() - 1, -1, -1):
+        desc = execs.apply(i).physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in desc:
+            tree = desc.split("\n\n")[0]
+            return tree.split("== Final Plan ==")[-1].split("== Initial Plan ==")[0]
+    raise AssertionError("no file-writing SQL execution recorded")
+
+
+def test_tx_upsert_commit_is_one_sized_shuffle(spark, tmp_path):
+    """An upsert touching k of n buckets writes exactly k files, runs
+    its write stage with min(k, defaultParallelism) tasks, and its
+    executed write plan has ONE exchange: the bucket repartition that
+    the last-writer-wins window and the partitioned write share."""
+    import re
+
+    tx = str(tmp_path / "tx")
+    n = 16
+    tx_table.upsert(spark, tx, _batch(spark, [(f"key{i}", i) for i in range(200)]),
+                    ["k"], n_buckets=n, order_col="v", epoch_id=0)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for epoch, keys in enumerate([["key7"], [f"key{i}" for i in range(0, 200, 7)]], 1):
+        touched = _buckets_of(spark, keys, n)
+        group = f"tx-shape-{tmp_path.name}-{epoch}"
+        sc.setJobGroup(group, "tx commit shape")
+        try:
+            v = tx_table.upsert(spark, tx, _batch(spark, [(k, 1000) for k in keys]),
+                                ["k"], n_buckets=n, order_col="v", epoch_id=epoch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        fresh = _fresh_files(tx, v - 1, v)
+        assert len(fresh) == len(touched)
+        assert {f["kb"] for f in fresh} == touched
+        # the write is the commit's last stage
+        stages = [s for j in tracker.getJobIdsForGroup(group)
+                  for s in tracker.getJobInfo(j).stageIds]
+        write = tracker.getStageInfo(max(stages))
+        want = min(len(touched), sc.defaultParallelism)
+        assert write.numTasks == write.numCompletedTasks == want
+        tree = _last_write_plan_tree(spark)
+        assert len(re.findall(r"(?<![A-Za-z])Exchange \(", tree)) == 1, tree
+    got = dict(_content(spark, tx))
+    assert len(got) == 200 and got["key7"] == 1000 and got["key1"] == 1
+
+
+def test_tx_cow_writers_write_one_file_per_touched_bucket(spark, tmp_path):
+    """delete (cow), delete_where, update_where and merge size their
+    write the same way: every bucket they rewrite gets exactly one
+    file, whatever the core count."""
+    tx = str(tmp_path / "tx")
+    n = 16
+    tx_table.upsert(spark, tx, _batch(spark, [(f"key{i}", i) for i in range(200)]),
+                    ["k"], n_buckets=n, order_col="v", epoch_id=0)
+    all_buckets = set(range(n))
+
+    def commit(op, touched):
+        v_old = tx_table.latest_version(tx)
+        v = op()
+        fresh = _fresh_files(tx, v_old, v)
+        assert sorted(f["kb"] for f in fresh) == sorted(touched), v
+
+    dead = ["key3", "key50", "key121"]
+    commit(lambda: tx_table.delete(
+        spark, tx, spark.createDataFrame([(k,) for k in dead], "k string")
+    ), _buckets_of(spark, dead, n))
+    commit(lambda: tx_table.delete_where(spark, tx, F.col("v") % 10 == 0), all_buckets)
+    commit(lambda: tx_table.update_where(spark, tx, F.col("v") < 20, {"v": F.col("v") + 1}),
+           all_buckets)
+    src_keys = ["key5", "key77", "key500"]
+    commit(lambda: tx_table.merge(
+        spark, tx, _batch(spark, [(k, -1) for k in src_keys]),
+        when_matched_update={"v": F.col("_src_v")},
+    ), _buckets_of(spark, src_keys, n))
+    got = dict(_content(spark, tx))
+    assert "key3" not in got and "key10" not in got
+    assert got["key5"] == -1 and got["key500"] == -1 and got["key1"] == 2
