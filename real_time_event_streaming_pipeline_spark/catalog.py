@@ -14,6 +14,7 @@ predicate pushdown + column pruning from Catalyst for free.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -177,15 +178,37 @@ def events_arrival_schema(spark: SparkSession, sf_dir: str):
 # every action still computes from the parquet files; no rows, no
 # results, no intermediates are cached. Keyed by (applicationId,
 # realpath, table) so a stopped/recreated context can never see a
-# stale session's plan, PLUS a freshness token (mtime_ns + size of
-# the table path, one os.stat per load — r13 ADVICE): a harness that
-# rewrites a table in place under an already-loaded path gets a
-# fresh scan instead of the pinned file listing of first load, so
-# the fail-safe is mechanical, not a clear_load_memo() convention.
-# (A rewrite that preserves both mtime_ns and byte size is not a
-# realistic filesystem event; clear_load_memo() remains the explicit
-# escape hatch.)
-_LOAD_MEMO: dict[tuple[str, str, str], tuple[tuple[int, int], DataFrame]] = {}
+# stale session's plan, PLUS a freshness token (_freshness_token):
+# a harness that rewrites a table in place under an already-loaded
+# path gets a fresh scan instead of the pinned file listing of first
+# load, so the fail-safe is mechanical, not a clear_load_memo()
+# convention. (A rewrite that preserves both mtime_ns and byte size
+# is not a realistic filesystem event; clear_load_memo() remains the
+# explicit escape hatch.)
+_LOAD_MEMO: dict[tuple[str, str, str], tuple[tuple, DataFrame]] = {}
+
+
+def _freshness_token(path: str) -> tuple:
+    """(mtime_ns, size) of a single-file table — one os.stat per load.
+    A directory table also folds in its files' max mtime_ns, summed
+    size and count (recursively): overwriting a part file in place
+    under the same name changes neither the directory's own mtime nor
+    its size, so the path stat alone would keep serving the memoized
+    scan's stale file listing."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return (-1, -1)  # let spark.read raise the real error
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_mtime_ns, st.st_size)
+    newest, total, count = 0, 0, 0
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            fst = os.stat(os.path.join(root, f))
+            newest = max(newest, fst.st_mtime_ns)
+            total += fst.st_size
+            count += 1
+    return (st.st_mtime_ns, st.st_size, newest, total, count)
 
 
 def clear_load_memo() -> None:
@@ -202,14 +225,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_session_defaults(spark)
     app_id = spark.sparkContext.applicationId
     key = (app_id, os.path.realpath(sf_dir), name)
-    # freshness token (r13 ADVICE): an in-place rewrite changes the
-    # path's mtime/size, so the memo misses and relists instead of
-    # serving a stale pinned file set
-    try:
-        st = os.stat(table_path(sf_dir, name))
-        token = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        token = (-1, -1)  # let spark.read raise the real error below
+    # an in-place rewrite changes the token, so the memo misses and
+    # relists instead of serving a stale pinned file set
+    token = _freshness_token(table_path(sf_dir, name))
     hit = _LOAD_MEMO.get(key)
     # The memoized DataFrame is bound to the SparkSession that built
     # it: under newSession() (several sessions over one context — the

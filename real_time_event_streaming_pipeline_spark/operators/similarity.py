@@ -1376,7 +1376,18 @@ def nearest_cells(vec, cents: list[tuple[int, list[float]]], n: int) -> Column:
     zip_with/aggregate fold, same struct field names and types, same
     array_sort comparator — parity pinned bitwise in
     tests/test_llmdata.py. Column inputs keep the original path
-    (external callers may pass derived expressions)."""
+    (external callers may pass derived expressions).
+
+    Every centroid component must be finite: a NaN/Inf component
+    raises ValueError naming the cell, on both paths (the string path
+    would otherwise fail later as an opaque parse error on ``nanD``,
+    and the Column path would silently rank NaN distances)."""
+    for cid, cvec in cents:
+        if not all(math.isfinite(x) for x in cvec):
+            raise ValueError(
+                f"nearest_cells: centroid of cell {cid} has a non-finite "
+                "component (NaN or Inf)"
+            )
     if isinstance(vec, str):
         def dot_sql(cvec):
             arr = "array(" + ", ".join(repr(float(x)) + "D" for x in cvec) + ")"

@@ -36,18 +36,12 @@ def compact_parquet(
     sort_cols: list[str] | None = None,
     ttl_col: str | None = None,
     now_epoch: int | None = None,
-    partition_by: list[str] | None = None,
 ) -> dict:
     """Rewrite a parquet directory into ~target_bytes files, optionally
-    dropping TTL-expired rows.
-
-    ``partition_by`` preserves a hive-partitioned layout (e.g. the
-    bucketed upsert sink's kb=N dirs): the rewrite repartitions BY the
-    partition columns and writes with partitionBy, so the directory
-    scheme survives compaction. Flattening a bucketed table would
-    corrupt it — the next bucketed upsert epoch overwrites kb=N
-    subdirs dynamically and would leave every pre-compaction row
-    alive in the flat root files, duplicating keys.
+    dropping TTL-expired rows. The output is flat: a hive-partitioned
+    input comes back as root-level files. The one partitioned upsert
+    layout, `streaming/tx_table`, compacts through its own manifest
+    commit (`tx_table.compact`), never through this function.
 
     File count = ceil(total_bytes / target_bytes) on the *compressed*
     size — the right granularity for scan parallelism. Optional
@@ -92,16 +86,9 @@ def compact_parquet(
         out = df.repartitionByRange(n_out, *sort_cols).sortWithinPartitions(
             *sort_cols
         )
-    elif partition_by:
-        # co-locate each hive partition's rows so partitionBy emits
-        # ~one file per partition dir instead of n_out per dir
-        out = df.repartition(n_out, *partition_by)
     else:
         out = df.repartition(n_out)
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
+    out.write.mode("overwrite").parquet(staging)
     if os.path.exists(old):
         shutil.rmtree(old)
     os.rename(path, old)

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions import ALERT_SEVERITIES, event_key, ttl_from
 from ..plans.citystream import enrich_events, windowed_agg
-from .sinks import append_parquet, upsert_parquet, upsert_parquet_bucketed
+from .sinks import append_parquet, upsert_parquet
 from .tx_table import upsert_tx
 
 
@@ -62,18 +62,16 @@ class PipelineConfig:
     # stops on its own — the batch-backfill trigger (the reference has
     # only ASAP micro-batches)
     available_now: bool = False
-    # >0 switches the upsert sinks to the hash-bucketed copy-on-write
-    # layout (kb=N hive partitions; an epoch rewrites only the buckets
-    # its keys hash into — the at-scale sink short of Delta MERGE)
-    upsert_buckets: int = 0
     # stamp each raw event with ttl = event_time + 30d (the reference's
     # DynamoDB TTL attribute, setup-dynamodb.sh:29-32 /
     # SparkDynamoDBConsumer.java:259-262); expired rows are dropped by
     # run_retention(), the maintenance pass standing in for DynamoDB's
     # background expiry
     with_ttl: bool = False
-    # atomic=True commits every upsert epoch through the manifest log
-    # (streaming/tx_table.py): all-or-nothing across buckets,
+    # atomic picks the upsert sink. False: sinks.upsert_parquet, the
+    # whole-table rewrite. True: tx_table.upsert_tx (64 buckets), which
+    # rewrites only the buckets an epoch's keys hash into and commits
+    # through the manifest log: all-or-nothing across buckets,
     # exactly-once epoch application, snapshot-isolated readers. The
     # tables are then read back with tx_table.read_table, not a bare
     # spark.read.parquet (the data directory alone is not the table).
@@ -89,7 +87,6 @@ class PipelineConfig:
             return upsert_tx(
                 self.path(name),
                 key_cols,
-                n_buckets=self.upsert_buckets or 64,
                 order_col=order_col,
                 stats_cols=stats,
                 # ledger scope rides the CHECKPOINT's identity: a query
@@ -99,10 +96,6 @@ class PipelineConfig:
                 # the previous run — silent data loss upsert_tx's own
                 # docstring warns about but this caller never guarded
                 app_id=_checkpoint_app_id(self.checkpoint(name.replace("_", "-"))),
-            )
-        if self.upsert_buckets > 0:
-            return upsert_parquet_bucketed(
-                self.path(name), key_cols, n_buckets=self.upsert_buckets, order_col=order_col
             )
         return upsert_parquet(self.path(name), key_cols, order_col=order_col)
 
@@ -241,10 +234,6 @@ def run_retention(spark: SparkSession, cfg: PipelineConfig, now_epoch: int) -> d
         cfg.path("raw_events"),
         ttl_col="ttl",
         now_epoch=now_epoch,
-        # a bucketed table's kb=N layout must survive the rewrite —
-        # flattening it would leave stale flat files the next bucketed
-        # upsert epoch cannot overwrite (duplicate keys)
-        partition_by=["kb"] if cfg.upsert_buckets > 0 else None,
     )
 
 

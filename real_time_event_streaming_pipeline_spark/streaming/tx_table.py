@@ -1,10 +1,10 @@
 """Manifest-committed transactional table: ATOMIC multi-bucket upsert.
 
-Closes the documented gap in `sinks.upsert_parquet_bucketed`: dynamic
-partition overwrite commits each bucket directory independently, so a
-crash mid-write can expose a half-upserted table. Here every commit is
-one atomic filesystem operation, whatever the number of buckets it
-rewrites.
+The engine's bucketed upsert sink (`upsert_tx`, chosen by
+`PipelineConfig(atomic=True)`; the other sink, `sinks.upsert_parquet`,
+rewrites the whole table). Every commit is one atomic filesystem
+operation, whatever the number of buckets it rewrites, so a crash
+mid-write can never expose a half-upserted table.
 
 Protocol (the public Delta Lake / Iceberg design — M. Armbrust et al.,
 "Delta Lake: High-Performance ACID Table Storage over Cloud Object
@@ -53,9 +53,8 @@ so a crashed micro-batch leaves a PARTIALLY applied epoch visible):
   pattern, on top of the bucket pruning the key hash already gives.
 
 Scale posture: an upsert epoch rewrites only the buckets its keys
-hash into — cost O(table x |affected| / n_buckets), same as the
-copy-on-write sink — and, unlike the overwrite sink, writes land in a
-FRESH directory while old files are read, so no localCheckpoint
+hash into — cost O(table x |affected| / n_buckets) — and writes land
+in a FRESH directory while old files are read, so no localCheckpoint
 materialization barrier is needed. The manifest lists file paths, not
 file contents: at 100 TB with thousands of buckets it stays a few MB
 of JSON, and the single put-if-absent commit is the same O(1)
@@ -1854,10 +1853,12 @@ def upsert_tx(
     stats_cols: list[str] | None = None,
     app_id: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch factory: the atomic, exactly-once upsert sink.
-    Drop-in for `sinks.upsert_parquet_bucketed` wherever the
-    half-committed-epoch window is unacceptable. ``stats_cols``
-    records per-file min/max for data skipping at read time.
+    """foreachBatch factory: the atomic, exactly-once upsert sink that
+    `PipelineConfig(atomic=True)` runs. Same last-writer-wins contract
+    as `sinks.upsert_parquet`, but an epoch rewrites only the buckets
+    its keys hash into and readers never see a half-committed epoch.
+    ``stats_cols`` records per-file min/max for data skipping at read
+    time.
 
     ``app_id`` scopes the replay ledger to this (query, checkpoint)
     pair; pass a fresh value when restarting a query from a FRESH

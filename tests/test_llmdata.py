@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from real_time_event_streaming_pipeline_spark.catalog import load
@@ -1379,3 +1380,15 @@ def test_nearest_cells_sql_string_matches_column_form(spark, sf_small):
             ).collect()
         ]
         assert a and a == b
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+def test_nearest_cells_non_finite_centroid_fails_loudly(spark, bad):
+    """A NaN/Inf centroid component must raise a ValueError naming the
+    cell at plan build — on the SQL-string path it used to surface
+    later as an opaque parse error on ``nanD``/``infD``."""
+    cents = [(0, [1.0, 0.0]), (7, [0.5, bad])]
+    with pytest.raises(ValueError, match="cell 7"):
+        S.nearest_cells("embedding", cents, 1)
+    with pytest.raises(ValueError, match="cell 7"):
+        S.nearest_cells(F.col("embedding"), cents, 1)

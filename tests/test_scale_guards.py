@@ -355,3 +355,40 @@ def test_load_memo_detects_inplace_rewrite(spark, tmp_path):
     assert n2 == max(1, tbl.num_rows // 2), (
         "memo served a stale pinned file listing after an in-place rewrite"
     )
+
+
+def test_load_memo_detects_inplace_rewrite_of_directory_table(spark, tmp_path):
+    """A directory table whose part file is overwritten in place under
+    the same name keeps the directory's own mtime and size, so the
+    freshness token must fold in the entries' stats too — otherwise
+    the memo keeps serving the first load's file listing, whose stale
+    file length hides the rewritten file's later row groups."""
+    import time as _time
+
+    import pyarrow.parquet as pq
+
+    from conftest import SF_SMALL
+    from real_time_event_streaming_pipeline_spark.catalog import load
+
+    tbl = pq.read_table(os.path.join(SF_SMALL, "nation.parquet"))
+    table_dir = tmp_path / "sf_dir" / "nation.parquet"
+    os.makedirs(table_dir)
+    half = tbl.num_rows // 2
+    pq.write_table(tbl.slice(0, half), str(table_dir / "part-0.parquet"))
+    pq.write_table(tbl.slice(half, 3), str(table_dir / "part-1.parquet"))
+    sf = str(table_dir.parent)
+
+    def keys():
+        return sorted(r.n_nationkey for r in load(spark, sf, "nation").collect())
+
+    def col(t):
+        return t.column("n_nationkey").to_pylist()
+
+    assert keys() == sorted(col(tbl.slice(0, half)) + col(tbl.slice(half, 3)))
+
+    _time.sleep(0.01)  # ensure a distinct mtime_ns even on coarse clocks
+    # same name, every row, many small row groups
+    pq.write_table(tbl, str(table_dir / "part-1.parquet"), row_group_size=2)
+    assert keys() == sorted(col(tbl.slice(0, half)) + col(tbl)), (
+        "memo served a stale file listing after a part file was rewritten in place"
+    )

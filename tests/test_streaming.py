@@ -244,110 +244,6 @@ def test_streaming_dedup_matches_batch_distinct(spark, sf_small, tmp_path):
     assert set(got) == want
 
 
-def test_bucketed_upsert_semantics_match_full_rewrite(spark, tmp_path):
-    """The bucketed copy-on-write sink and the full-rewrite sink must
-    agree on final table contents for the same epoch sequence."""
-    from real_time_event_streaming_pipeline_spark.streaming.sinks import (
-        upsert_parquet_bucketed,
-    )
-
-    full, cow = str(tmp_path / "full"), str(tmp_path / "cow")
-    s_full = upsert_parquet(full, ["k"], order_col="v")
-    s_cow = upsert_parquet_bucketed(cow, ["k"], n_buckets=8, order_col="v")
-    epochs = [
-        [("a", 1), ("b", 2), ("c", 3), ("d", 4)],
-        [("a", 9), ("e", 5)],
-        [("b", 7), ("a", 8)],
-    ]
-    for i, rows in enumerate(epochs):
-        b = spark.createDataFrame(rows, "k string, v int")
-        s_full(b, i)
-        s_cow(b, i)
-    want = {(r.k, r.v) for r in spark.read.parquet(full).select("k", "v").collect()}
-    got = {(r.k, r.v) for r in spark.read.parquet(cow).select("k", "v").collect()}
-    assert got == want == {("a", 8), ("b", 7), ("c", 3), ("d", 4), ("e", 5)}
-
-
-def test_bucketed_upsert_rewrites_only_affected_buckets(spark, tmp_path):
-    """The copy-on-write contract: an epoch must not touch bucket
-    directories its keys don't hash into (at 100 TB this is the
-    difference between rewriting gigabytes and rewriting everything)."""
-    import os
-    import pathlib
-
-    from real_time_event_streaming_pipeline_spark.streaming.sinks import (
-        upsert_parquet_bucketed,
-    )
-
-    out = str(tmp_path / "t")
-    sink = upsert_parquet_bucketed(out, ["k"], n_buckets=16, order_col="v")
-    rows0 = [(f"key{i}", i) for i in range(200)]
-    sink(spark.createDataFrame(rows0, "k string, v int"), 0)
-
-    def snapshot():
-        snap = {}
-        for p in pathlib.Path(out).rglob("*.parquet"):
-            st = os.stat(p)
-            snap[str(p)] = (st.st_mtime_ns, st.st_size)
-        return snap
-
-    before = snapshot()
-    buckets = {d.name for d in pathlib.Path(out).iterdir() if d.name.startswith("kb=")}
-    assert len(buckets) > 4  # keys actually spread over buckets
-
-    sink(spark.createDataFrame([("key7", 999)], "k string, v int"), 1)
-    after = snapshot()
-
-    from pyspark.sql import functions as SF
-
-    hit = spark.range(1).select(
-        SF.pmod(SF.xxhash64(SF.lit("key7")), SF.lit(16)).cast("int").alias("kb")
-    ).first().kb
-    changed_dirs = {
-        p.split("kb=")[1].split("/")[0]
-        for p in set(before) ^ set(after) | {p for p in before if before.get(p) != after.get(p)}
-    }
-    assert changed_dirs == {str(hit)}
-    got = {(r.k, r.v) for r in spark.read.parquet(out).select("k", "v").collect()}
-    assert ("key7", 999) in got and len(got) == 200
-
-
-def test_bucketed_upsert_replay_same_epoch_idempotent(spark, tmp_path):
-    from real_time_event_streaming_pipeline_spark.streaming.sinks import (
-        upsert_parquet_bucketed,
-    )
-
-    out = str(tmp_path / "t")
-    sink = upsert_parquet_bucketed(out, ["k"], n_buckets=8, order_col="v")
-    sink(spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int"), 0)
-    b1 = spark.createDataFrame([("a", 5), ("c", 3)], "k string, v int")
-    sink(b1, 1)
-    snap = {(r.k, r.v) for r in spark.read.parquet(out).select("k", "v").collect()}
-    assert snap == {("a", 5), ("b", 2), ("c", 3)}
-    sink(b1, 1)  # verbatim replay
-    table = spark.read.parquet(out)
-    assert {(r.k, r.v) for r in table.select("k", "v").collect()} == snap
-    assert table.count() == 3
-
-
-def test_pipeline_bucketed_sink_matches_batch(spark, sf_small, tmp_path):
-    """The 4-query pipeline with the copy-on-write bucketed upsert
-    sinks produces the same Q2 table as the batch twin, laid out as
-    kb=N partitions."""
-    import pathlib
-
-    cfg = PipelineConfig(out_dir=str(tmp_path), upsert_buckets=8)
-    src = events_file_stream(spark, sf_small)
-    queries = start_pipeline(spark, src, cfg)
-    run_to_completion(queries)
-
-    got = spark.read.parquet(cfg.path("aggregations")).drop("_epoch", "kb")
-    want = windowed_agg(city_events(spark, sf_small))
-    assert _rows(got) == _rows(want)
-    dirs = {d.name for d in pathlib.Path(cfg.path("aggregations")).iterdir()}
-    assert any(d.startswith("kb=") for d in dirs)
-
-
 def test_pipeline_ttl_retention_drops_expired(spark, sf_small, tmp_path):
     """Reference DynamoDB-TTL behavior end-to-end
     (setup-dynamodb.sh:29-32): the pipeline stamps raw events with
@@ -389,40 +285,6 @@ def test_append_sink_epoch_replay_idempotent(spark, sf_small, tmp_path):
     assert spark.read.parquet(out).count() == 50
     w(ev, 1)  # a NEW epoch appends
     assert spark.read.parquet(out).count() == 100
-
-
-def test_bucketed_retention_preserves_layout(spark, sf_small, tmp_path):
-    """Retention on a BUCKETED (non-atomic) table must keep the kb=N
-    hive layout: a flat rewrite would strand every pre-retention row
-    in root files the next bucketed upsert epoch cannot overwrite
-    (duplicate keys + broken partition discovery)."""
-    import pathlib
-
-    from real_time_event_streaming_pipeline_spark.streaming.pipeline import run_retention
-
-    cfg = PipelineConfig(out_dir=str(tmp_path), with_ttl=True, upsert_buckets=4)
-    run_to_completion(start_pipeline(spark, events_file_stream(spark, sf_small), cfg))
-
-    raw_dir = pathlib.Path(cfg.path("raw_events"))
-    ttls = sorted(r.ttl for r in spark.read.parquet(str(raw_dir)).select("ttl").collect())
-    cutoff = ttls[len(ttls) // 2]
-    stats = run_retention(spark, cfg, now_epoch=cutoff)
-    assert stats["expired_rows"] == sum(1 for t in ttls if t <= cutoff)
-
-    # layout survived: kb= dirs present, no stray root-level data files
-    entries = list(raw_dir.iterdir())
-    assert any(e.name.startswith("kb=") for e in entries)
-    assert not [e for e in entries if e.name.endswith(".parquet")]
-    kept = spark.read.parquet(str(raw_dir))
-    assert kept.filter(F.col("ttl") <= cutoff).count() == 0
-
-    # and a subsequent bucketed upsert epoch still lands cleanly with
-    # unique keys (the corruption mode was duplicates after retention)
-    sink = cfg.upsert("raw_events", ["event_key"], "ts")
-    more = spark.read.parquet(str(raw_dir)).drop("_epoch", "kb").limit(20)
-    sink(more, 999)
-    after = spark.read.parquet(str(raw_dir))
-    assert after.groupBy("event_key").count().filter(F.col("count") > 1).count() == 0
 
 
 def test_atomic_pipeline_fresh_checkpoint_applies_epochs(spark, sf_small, tmp_path):

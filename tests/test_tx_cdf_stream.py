@@ -142,7 +142,7 @@ def test_cdf_stream_mirrors_atomic_pipeline_table(spark, sf_small, tmp_path):
         start_pipeline,
     )
 
-    cfg = PipelineConfig(out_dir=str(tmp_path / "pipe"), atomic=True, upsert_buckets=4)
+    cfg = PipelineConfig(out_dir=str(tmp_path / "pipe"), atomic=True)
     run_to_completion(start_pipeline(spark, events_file_stream(spark, sf_small), cfg))
     table = cfg.path("aggregations")
 

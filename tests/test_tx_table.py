@@ -13,9 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from real_time_event_streaming_pipeline_spark.streaming import tx_table
-from real_time_event_streaming_pipeline_spark.streaming.sinks import (
-    upsert_parquet_bucketed,
-)
+from real_time_event_streaming_pipeline_spark.streaming.sinks import upsert_parquet
 
 EPOCHS = [
     [("a", 1), ("b", 2), ("c", 3), ("d", 4)],
@@ -35,15 +33,16 @@ def _content(spark, table_dir, version=None):
 
 
 def test_tx_upsert_matches_overwrite_sink_semantics(spark, tmp_path):
-    """Same epoch sequence through the non-atomic copy-on-write sink
-    and the transactional table must land on identical contents."""
-    cow, tx = str(tmp_path / "cow"), str(tmp_path / "tx")
-    sink = upsert_parquet_bucketed(cow, ["k"], n_buckets=8, order_col="v")
+    """Same epoch sequence through the whole-table-rewrite sink (the
+    last-writer-wins reference) and the transactional table must land
+    on identical contents."""
+    full, tx = str(tmp_path / "full"), str(tmp_path / "tx")
+    sink = upsert_parquet(full, ["k"], order_col="v")
     for i, rows in enumerate(EPOCHS):
         sink(_batch(spark, rows), i)
         tx_table.upsert(spark, tx, _batch(spark, rows), ["k"], n_buckets=8,
                         order_col="v", epoch_id=i)
-    want = {(r.k, r.v) for r in spark.read.parquet(cow).select("k", "v").collect()}
+    want = {(r.k, r.v) for r in spark.read.parquet(full).select("k", "v").collect()}
     assert _content(spark, tx) == want == FINAL
 
 
@@ -292,7 +291,7 @@ def test_pipeline_atomic_sink_matches_batch(spark, sf_small, tmp_path):
         start_pipeline,
     )
 
-    cfg = PipelineConfig(out_dir=str(tmp_path), atomic=True, upsert_buckets=8)
+    cfg = PipelineConfig(out_dir=str(tmp_path), atomic=True)
     src = events_file_stream(spark, sf_small)
     run_to_completion(start_pipeline(spark, src, cfg))
 
@@ -492,8 +491,7 @@ def test_tx_atomic_ttl_retention(spark, sf_small, tmp_path):
         start_pipeline,
     )
 
-    cfg = PipelineConfig(out_dir=str(tmp_path), with_ttl=True, atomic=True,
-                         upsert_buckets=8)
+    cfg = PipelineConfig(out_dir=str(tmp_path), with_ttl=True, atomic=True)
     src = events_file_stream(spark, sf_small)
     run_to_completion(start_pipeline(spark, src, cfg))
 
