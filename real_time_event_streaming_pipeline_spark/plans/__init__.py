@@ -1,852 +1,84 @@
 """Named query plans. Each submodule exposes QUERIES (name -> callable
 (spark, sf_dir) -> DataFrame) and ORACLE (name -> DuckDB SQL twin).
-``all_queries()`` / ``all_oracles()`` merge them for __spark_entry__."""
+``all_queries()`` / ``all_oracles()`` merge them for __spark_entry__.
+
+The external correctness gate checks only the first ``WINDOW``
+registry entries against the DuckDB oracle each round, so the registry
+is in deadline order over the recorded ``CORRECTNESS_r*.json``
+verdicts: rows touched since their latest verdict first, then oldest
+latest verdict first (never verified counts as round 0), ties in
+module order."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import glob
+import json
+import os
+import re
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+
+WINDOW = 50  # rows the external correctness gate checks per round
+
+# Rows whose plan code changed after their latest verdict: they
+# sort first so the next round's window re-verifies them. Drop a name
+# once a CORRECTNESS_r*.json newer than its change lists it.
+TOUCHED_SINCE_VERDICT = (
+    "cs_windowed_agg",  # closed-domain severity counts + domain guard
+    "cs_summary_city",  # rolls up windowed_agg
+    "cs_aggregations_filtered",  # selects windowed_agg's severities
+    "cs_tx_dml_lifecycle",  # tx_table: one shuffle per commit
+    "cs_upsert_lww",  # tx_table: one shuffle per commit
+    "llm_corpus_build",  # nd_docs checkpoint paired with its count
+)
+
+_REPO_DIR = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def load_history(repo_dir: str = _REPO_DIR) -> tuple[dict[str, int], int]:
+    """{query: latest round with an external verdict}, and the upcoming
+    round number (max recorded round + 1)."""
+    latest: dict[str, int] = {}
+    max_round = 0
+    for path in sorted(glob.glob(os.path.join(repo_dir, "CORRECTNESS_r*.json"))):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        max_round = max(max_round, rnd)
+        with open(path) as fh:
+            for q in json.load(fh):
+                latest[q] = max(latest.get(q, 0), rnd)
+    return latest, max_round + 1
+
+
+def rotation_order(names: Iterable[str], latest: dict[str, int]) -> list[str]:
+    """``names`` in deadline order (the sort is stable, so ties keep
+    the order given)."""
+    return sorted(names, key=lambda q: 0 if q in TOUCHED_SINCE_VERDICT else latest.get(q, 0))
+
+
+def __getattr__(name: str):
+    # computed on access: it reads the verdict history, import must not
+    if name == "PRIORITY_WINDOW":
+        return tuple(all_queries())[:WINDOW]
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 def _modules():
     # hard imports: a broken module must fail the registry loudly, not
-    # silently shrink the driver contract to whatever still imports
-    from . import (
-        citystream,
-        curation,
-        filters,
-        llmdata,
-        relational,
-        scalar,
-        tokenize,
-        tpch_extra,
-        windowing,
-    )
+    # silently shrink the registry to whatever still imports
+    from . import citystream, curation, filters, llmdata, relational, scalar, tokenize
+    from . import tpch_extra, windowing
 
     return [
-        llmdata,
-        tokenize,
-        curation,
-        filters,
-        windowing,
-        scalar,
-        citystream,
-        relational,
-        tpch_extra,
+        llmdata, tokenize, curation, filters, windowing, scalar, citystream, relational, tpch_extra
     ]
 
 
-# The verify driver checks only the FIRST 50 registry entries against
-# the DuckDB oracle each round. Round 7 (per the r6 verdict #1/#3/#4):
-# the 7 r3-era verdicts at age 3 (MUST rotate or the staleness
-# invariant breaks — fn_posexplode retired instead, folded into
-# fn_array), the r6-era rows whose oracles convert to bitwise this
-# round (IVF/PQ ANN) or whose decode path changes (image aHash
-# caching: llm_image_dedup_pairs, llm_multimodal_features), the
-# r5-era conversions (rel_ewma_user_value bitwise since r6, the
-# sketch family's exact-surface oracles, rel_grouping_sets' extended
-# lattice, llm_corpus_build's r6 plan-shape change, the two r5-era
-# image queries touched by the caching), and 30 r4-era rotations —
-# exactly 50. The 13 deferred r4-era rows (the cs_* reference family
-# + cs_sliding_agg + fn_window_analytic, untouched since r4) sit at
-# age 3 after r7 and are the committed core of the r8 window: with
-# the five r7 retirements the registry is 144, so r8's forced set is
-# 49 of 50 — one slot spare, ceiling slack 6.
-_PRIORITY_R7 = (
-    # r3-era — age 3, staleness-forced
-    "fn_url",
-    "fn_array",
-    "fn_unpivot",
-    "rel_large_volume_customer",
-    "rel_dominant_part_suppliers",
-    "rel_sql_subqueries",
-    "rel_retention_cohorts",
-    # r6-era — oracle converts (IVF/PQ) or code changed (aHash cache)
-    "llm_emb_ann_ivf",
-    "llm_emb_ann_pq",
-    "llm_image_dedup_pairs",
-    "llm_multimodal_features",
-    # r5-era — conversions and r7 code changes
-    "rel_ewma_user_value",
-    "rel_grouping_sets",
-    "fn_hll_mergeable",
-    "fn_kll_quantiles",
-    "fn_sketch_set_algebra",
-    "rel_approx_distinct_users",
-    "llm_corpus_build",
-    "llm_multimodal_meta",
-    "llm_multimodal_frames",
-    # r4-era rotation (otherwise forced into r8)
-    "llm_corpus_ingest_epochs",
-    "llm_multimodal_png",
-    "fn_math",
-    "llm_dedup_clusters",
-    "llm_multimodal_wav",
-    "llm_multimodal_avi",
-    "llm_normalize",
-    "llm_token_freq",
-    "llm_doc_repetition",
-    "llm_contamination",
-    "llm_stratified_sample",
-    "llm_per_source_cap",
-    "llm_tfidf",
-    "llm_pii_redact",
-    "llm_source_mixture",
-    "llm_dup_chunk_fraction",
-    "llm_unigram_logprob",
-    "llm_gopher_rules",
-    "llm_fuzzy_linkage",
-    "fn_map",
-    "fn_json",
-    "fn_higher_order",
-    "fn_string",
-    "fn_datetime",
-    "rel_pricing_summary",
-    "rel_shipping_priority",
-    "rel_local_supplier_volume",
-    "rel_customer_order_counts",
-    "rel_customers_with_urgent_orders",
-    "rel_nation_profit",
-)
-
-# Round 6's window, kept for the record. Round 6 per the r5 verdict: the 4
-# queries new this round (the baseline-JPEG decode face, the tx-table
-# DML-lifecycle face, and the two BPE tokenizer faces — train +
-# encode), the 3 whose RESULTS changed this round
-# (llm_semdedup/_survivors on the null-calibrated operating point;
-# cs_upsert_lww on the de-collected localCheckpoint read-back), and
-# all 45 queries whose latest driver verdict is r3 — exactly 50.
-# (llm_corpus_build and llm_corpus_ingest_epochs also changed in r6
-# but only in plan shape — checkpointed diamond, closed-form epoch
-# tiles — with bitwise-identical results, re-verified locally; they
-# hold r5/r4 verdicts and rotate in r7.) Registry-capacity note: the
-# steady-state ceiling is WINDOW × MAX_STALENESS = 150 registered
-# queries; at 144 every new registration must earn its slot.
-# Round 8's window, wired as the round's FIRST commit (r7 verdict #1)
-# from the staged _PRIORITY_R8_PLAN: all 13 r4-era rows deferred from
-# r7 (staleness-forced at age 3), the three codecs whose generators
-# the r7 under-parallel `_spread` touched (one-round-lag commitment),
-# 30 r5-era pre-drains, and the four faces round 8 itself changes —
-# cs_tx_dml_lifecycle (gains the CLONE-branch leg, r7 verdict #6),
-# fn_conditional (absorbs the retired fn_try_arith battery),
-# llm_multimodal_frames (absorbs the retired llm_multimodal_meta —
-# shared decode lineage), and llm_dedup_minhash_lsh (absorbs the
-# retired llm_dedup_minhash_survivors as a mode) — each displacing
-# one of the four most-stable r5-era pre-drains (rel_promo_revenue,
-# rel_supplier_part_cnt, rel_priority_linecount, rel_part_value_share
-# — pure TPC-H aggregates, strict-green every round since r1) into
-# the r9 plan, where their r9 deadline is met.
-_PRIORITY_R8 = (
-    # r4-era (age 3 — staleness-forced)
-    "cs_raw_events",
-    "cs_windowed_agg",
-    "cs_alerts",
-    "cs_events_by_city",
-    "cs_summary_city",
-    "cs_cities",
-    "cs_aggregations_filtered",
-    "cs_stats",
-    "cs_global_counts",
-    "cs_alerts_recent",
-    "cs_raw_with_ttl",
-    "cs_sliding_agg",
-    "fn_window_analytic",
-    # r6-era, code touched by the r7 spread — one-round-lag commitment
-    "llm_multimodal_jpeg",
-    "llm_multimodal_gif",
-    "llm_multimodal_flac",
-    # changed by round 8 itself (see block comment above)
-    "cs_tx_dml_lifecycle",
-    "fn_conditional",
-    "llm_multimodal_frames",
-    "llm_dedup_minhash_lsh",
-    # r5-era (deadline r9; pre-drained here so r9 can hold the r6-era block)
-    "rel_recursive_sessions",
-    "rel_window_frames",
-    "rel_session_window_native",
-    "rel_null_aware_anti_join",
-    "rel_customers_without_orders",
-    "rel_setops_suppliers",
-    "rel_top_orders_per_customer",
-    "rel_running_revenue_by_supplier",
-    "rel_user_event_gaps",
-    "rel_cube_events",
-    "rel_distinct_parts_per_flag",
-    "rel_pivot_event_matrix",
-    "rel_asof_purchase_view",
-    "rel_events_within_window_pairs",
-    "rel_user_sessions",
-    "rel_skew_salted_counts",
-    "rel_revenue_delta",
-    "rel_priority_late_orders",
-    "rel_top_return_customers",
-    "rel_deterministic_split",
-    "rel_resample_hourly_gapfill",
-    "rel_small_quantity_revenue",
-    "rel_order_count_distribution",
-    "rel_min_cost_supplier",
-    "rel_cross_nation_volume",
-    "rel_market_share",
-    "rel_top_revenue_supplier",
-    "rel_disjunctive_band_join",
-    "rel_waiting_suppliers",
-    "rel_dormant_rich_customers",
-)
-
-# Round 9's window, wired as the round's FIRST commit (r8 verdict #2)
-# from the staged _PRIORITY_R9_PLAN, verbatim: the four r5-era
-# pre-drains displaced by r8's changed-face swap-ins (deadline r9 —
-# staleness-forced), every row whose latest verdict is r6 and
-# survives the r8 retirements (deadline r10, pre-drained so r10 keeps
-# slack), the six faces r8's code touched (one-round-lag commitment:
-# sketch ≥3σ envelopes, two-stage cosine kernels, multi-probe image
-# dedup, adaptive pointer-halving clusters), and fn_datetime as the
-# deadline-r11 filler. Every face round 9 itself changes (semdedup /
-# bpe / image-dedup / clusters / ngram per the r8 verdict asks) is
-# ALREADY in this window — the only r9-touched face outside it,
-# cs_tx_dml_lifecycle (verdict #1 perf fix), carries its r8-green
-# verdict and rotates into the r10 plan below.
-_PRIORITY_R9 = (
-    # displaced r5-era pre-drains — deadline r9, staleness-forced
-    "rel_promo_revenue",
-    "rel_supplier_part_cnt",
-    "rel_priority_linecount",
-    "rel_part_value_share",
-    # (fn_try_arith, deadline r9, retired into fn_conditional in r8 —
-    # row left the registry, filler fn_datetime returned below)
-    # r6-verdict block — deadline r10, pre-drained
-    "cs_alert_followups",
-    "cs_kafka_producer_frame",
-    "cs_producer_metrics",
-    "cs_upsert_lww",
-    "fn_percentiles",
-    "fn_variant",
-    "llm_bigram_logprob",
-    "llm_bpe_encode",
-    "llm_bpe_train",
-    "llm_char_entropy",
-    "llm_corpus_pipeline",
-    "llm_corpus_stats_cube",
-    "llm_dedup_exact",
-    "llm_dedup_ngram_jaccard",
-    "llm_dedup_simhash_pairs",
-    "llm_doc_chunking",
-    "llm_dsir_weights",
-    "llm_dup_span_removal",
-    "llm_emb_ann_lsh",
-    "llm_emb_cosine_topk",
-    "llm_emb_neardup",
-    "llm_emb_quantize",
-    "llm_fingerprint",
-    "llm_knn_classify",
-    "llm_lang_id",
-    "llm_length_outliers",
-    "llm_pack_materialize",
-    "llm_quality",
-    "llm_semdedup",
-    "llm_semdedup_survivors",
-    "llm_seq_packing",
-    "llm_text_stats",
-    "llm_token_rarity",
-    "rel_cep_pattern",
-    "rel_event_transitions",
-    "rel_funnel_conversion",
-    "rel_lateral_topk",
-    "rel_ts_similarity",
-    "rel_value_outliers",
-    # r8 touched these (sketch error envelopes widened to ≥3σ per r7
-    # ADVICE; the two-stage BLAS-prefilter cosine kernel reached the
-    # corpus-build faces through pairs_from_cell_rows — results
-    # bitwise-identical, re-verified strict at sf0.01, so the
-    # r6-precedent one-round-lag commitment applies): deadline r11
-    # but committed here
-    "rel_approx_distinct_users",
-    "fn_kll_quantiles",
-    "llm_corpus_build",
-    "llm_corpus_ingest_epochs",
-    "llm_image_dedup_pairs",
-    "llm_dedup_clusters",
-    # r9 swap-in (displacing the fn_datetime filler into the r10
-    # plan): round 9 fixes the minhash permutation family — the old
-    # (i+1)·const scheme made the 32 hashes linearly dependent and
-    # biased the est_jaccard estimator (measured 17/32 matches on a
-    # true-0.905 pair) — so this face's RESULTS change this round and
-    # it must carry a fresh verdict.
-    "llm_dedup_minhash_lsh",
-)
-
-# The r10 window — the staged _PRIORITY_R10_PLAN wired verbatim as
-# round 10's first commit (the handoff discipline, fourth round
-# running): with _PRIORITY_R9 landing in round 9, ZERO rows were due
-# by r10 and 41 by r11 — this window pre-drains ALL 41 deadline-r11
-# rows (the entire r7-verdict block: fn_* scalar batteries, the llm
-# text/corpus wave, the IVF/PQ ANN pair, the TPC-H pricing/supplier
-# wave), adds cs_tx_dml_lifecycle (round 9 changed its write path for
-# the r8 verdict #1 sweep-regression fix — one-round-lag commitment;
-# every other r9-touched face was already in _PRIORITY_R9), and fills
-# the 8 remaining slots with the most stable r8-verdict relational
-# rows (deadline r12).
-_PRIORITY_R10 = (
-    # r9-changed face — one-round-lag commitment (r8 verdict #1)
-    "cs_tx_dml_lifecycle",
-    # deadline-r11 block: r7-verdict scalar batteries
-    "fn_array",
-    "fn_higher_order",
-    "fn_hll_mergeable",
-    "fn_json",
-    "fn_map",
-    "fn_math",
-    "fn_sketch_set_algebra",
-    "fn_string",
-    "fn_unpivot",
-    "fn_url",
-    # deadline-r11 block: llm text/corpus wave
-    "llm_contamination",
-    "llm_doc_repetition",
-    "llm_dup_chunk_fraction",
-    "llm_emb_ann_ivf",
-    "llm_emb_ann_pq",
-    "llm_fuzzy_linkage",
-    "llm_gopher_rules",
-    "llm_multimodal_avi",
-    "llm_multimodal_features",
-    "llm_multimodal_png",
-    "llm_multimodal_wav",
-    "llm_normalize",
-    "llm_per_source_cap",
-    "llm_pii_redact",
-    "llm_source_mixture",
-    "llm_stratified_sample",
-    "llm_tfidf",
-    "llm_token_freq",
-    "llm_unigram_logprob",
-    # deadline-r11 block: relational / TPC-H wave
-    "rel_customer_order_counts",
-    "rel_customers_with_urgent_orders",
-    "rel_dominant_part_suppliers",
-    "rel_ewma_user_value",
-    "rel_grouping_sets",
-    "rel_large_volume_customer",
-    "rel_local_supplier_volume",
-    "rel_nation_profit",
-    "rel_pricing_summary",
-    "rel_retention_cohorts",
-    "rel_shipping_priority",
-    "rel_sql_subqueries",
-    # displaced r9 filler — fn_datetime left the r9 window for the
-    # minhash-fix swap-in, so its deadline stays r11 and it pre-drains
-    # here
-    "fn_datetime",
-    # r10 swap-ins (displacing five deadline-r12 fillers into the r11
-    # plan): round 10's estimator-family sweep (r9 verdict #4) found
-    # the split_bucket multiplicative family degenerate on structured
-    # ids (multiples of 100 all hit bucket 0 — 100% train,
-    # always-sampled, cap-exempt); the fix moves bucketing to the
-    # md5-60bit base hash, so every face built on it changes results
-    # this round and must carry a fresh verdict. The other four
-    # affected faces (llm_contamination, llm_stratified_sample,
-    # llm_per_source_cap, llm_source_mixture) are already in this
-    # window above.
-    "rel_deterministic_split",
-    "llm_seq_packing",
-    "llm_pack_materialize",
-    "llm_corpus_build",
-    "llm_corpus_pipeline",
-    # deadline-r12 fillers — stable r8-verdict relational rows
-    "rel_setops_suppliers",
-    "rel_top_orders_per_customer",
-)
-
-# The PLANNED r11 window, staged ahead so the repo does not go
-# structurally red the moment CORRECTNESS_r10.json lands (the handoff
-# discipline; tools/rotation_check.py presumes this plan as the next
-# window between rounds — pass-with-warning, --strict-handoff exit 3).
-# With _PRIORITY_R10 landing in round 10, ZERO rows are due by r11 and
-# 41 by r12 — this plan pre-drains all 41 deadline-r12 rows (the
-# entire r8-verdict block: the cs_* reference family, the multimodal
-# codec faces, the relational/TPC-H wave) and fills the remaining
-# slots with deadline-r13 rows from the r9 window, preferring faces
-# whose CODE round 10 touched (one-round-lag commitment):
-# llm_dedup_ngram_jaccard (the corpus-size LSH route switch landed on
-# the registered face), and the semdedup/cosine family whose kernels
-# r10 rewrote for the sf30 superlinearity fix (two-stage f32-gated
-# assignment, UDF+explode topology, f32 pair gates) — results
-# bitwise-unchanged at driver sfs (r10 gate green) but the discipline
-# re-verifies changed code externally next round. The estimator pins
-# (test-only) did not change simhash/minhash code, so those faces
-# keep their r9 verdicts. Revisited at r10 close-out.
-_PRIORITY_R11_PLAN = (
-    # r10-touched faces — one-round-lag commitment
-    "llm_dedup_ngram_jaccard",
-    "llm_semdedup",
-    "llm_semdedup_survivors",
-    "llm_emb_neardup",
-    # deadline-r12 block: cs_* reference family (r8 verdicts)
-    "cs_aggregations_filtered",
-    "cs_alerts",
-    "cs_alerts_recent",
-    "cs_cities",
-    "cs_events_by_city",
-    "cs_global_counts",
-    "cs_raw_events",
-    "cs_raw_with_ttl",
-    "cs_sliding_agg",
-    "cs_stats",
-    "cs_summary_city",
-    "cs_windowed_agg",
-    # deadline-r12 block: scalar + multimodal codec faces
-    "fn_conditional",
-    "fn_window_analytic",
-    "llm_multimodal_flac",
-    "llm_multimodal_frames",
-    "llm_multimodal_gif",
-    "llm_multimodal_jpeg",
-    # deadline-r12 block: relational / TPC-H wave
-    # (rel_deterministic_split moved up into the live r10 window — the
-    # split_bucket family fix changes its results this round)
-    "rel_asof_purchase_view",
-    "rel_cross_nation_volume",
-    "rel_cube_events",
-    "rel_disjunctive_band_join",
-    "rel_distinct_parts_per_flag",
-    "rel_dormant_rich_customers",
-    "rel_events_within_window_pairs",
-    "rel_market_share",
-    "rel_min_cost_supplier",
-    "rel_order_count_distribution",
-    "rel_pivot_event_matrix",
-    "rel_priority_late_orders",
-    "rel_resample_hourly_gapfill",
-    "rel_revenue_delta",
-    "rel_running_revenue_by_supplier",
-    "rel_skew_salted_counts",
-    "rel_small_quantity_revenue",
-    "rel_top_return_customers",
-    "rel_top_revenue_supplier",
-    "rel_user_event_gaps",
-    "rel_user_sessions",
-    "rel_waiting_suppliers",
-    # deadline-r12 block: the five fillers the split-family swap-ins
-    # displaced from the live r10 window (their latest verdict stays
-    # r8, so they are staleness-forced here)
-    "rel_recursive_sessions",
-    "rel_window_frames",
-    "rel_session_window_native",
-    "rel_null_aware_anti_join",
-    "rel_customers_without_orders",
-    # deadline-r13 filler — stable r9-verdict relational row
-    "rel_promo_revenue",
-)
-
-# Wired live in round 11's first commit (r10 verdict #2): the staged
-# plan above lands verbatim as the round's window.
-_PRIORITY_R11 = _PRIORITY_R11_PLAN
-
-# The PLANNED r12 window (deadline analysis at r11 mid-round, refined
-# from the wire-time placeholder): with _PRIORITY_R11 landing in r11,
-# ZERO rows are due by r12 and 41 by r13 — the entire r9-verdict block
-# (cs_ producer/upsert faces, the BPE/text-analysis wave, the
-# dedup/ANN faces with r9 verdicts, the CEP/funnel/ts relational
-# rows). This plan pre-drains all 41 and fills the remaining 9 slots
-# with the one-round-lag commitment first: round 11 rewrote
-# _topk_kernel (two-stage f32 gate — consumed by every ANN/cosine
-# face) and gave llm_emb_ann_ivf the corpus-scaled scheme, and added
-# the cap-observation plumbing to llm_contamination — results
-# bitwise-unchanged at driver sfs (r11 full-sweep green) but changed
-# code gets re-verified externally next round. The last 6 fillers are
-# stable deadline-r14 text-battery rows from the r10 window.
-_PRIORITY_R12_PLAN = (
-    # r11-touched faces not already due-r13 — one-round-lag commitment
-    "llm_emb_ann_ivf",
-    "llm_emb_ann_pq",
-    "llm_contamination",
-    # deadline-r13 block: the full r9-verdict wave (41 rows; includes
-    # the r11-touched llm_emb_cosine_topk / llm_emb_ann_lsh /
-    # llm_knn_classify / llm_dedup_clusters / llm_length_outliers)
-    "cs_alert_followups",
-    "cs_kafka_producer_frame",
-    "cs_producer_metrics",
-    "cs_upsert_lww",
-    "fn_kll_quantiles",
-    "fn_percentiles",
-    "fn_variant",
-    "llm_bigram_logprob",
-    "llm_bpe_encode",
-    "llm_bpe_train",
-    "llm_char_entropy",
-    "llm_corpus_ingest_epochs",
-    "llm_corpus_stats_cube",
-    "llm_dedup_clusters",
-    "llm_dedup_exact",
-    "llm_dedup_minhash_lsh",
-    "llm_dedup_simhash_pairs",
-    "llm_doc_chunking",
-    "llm_dsir_weights",
-    "llm_dup_span_removal",
-    "llm_emb_ann_lsh",
-    "llm_emb_cosine_topk",
-    "llm_emb_quantize",
-    "llm_fingerprint",
-    "llm_image_dedup_pairs",
-    "llm_knn_classify",
-    "llm_lang_id",
-    "llm_length_outliers",
-    "llm_quality",
-    "llm_text_stats",
-    "llm_token_rarity",
-    "rel_approx_distinct_users",
-    "rel_cep_pattern",
-    "rel_event_transitions",
-    "rel_funnel_conversion",
-    "rel_lateral_topk",
-    "rel_part_value_share",
-    "rel_priority_linecount",
-    "rel_supplier_part_cnt",
-    "rel_ts_similarity",
-    "rel_value_outliers",
-    # deadline-r14 fillers — stable r10-verdict text-battery rows
-    "llm_normalize",
-    "llm_tfidf",
-    "llm_token_freq",
-    "llm_gopher_rules",
-    "llm_pii_redact",
-    "llm_unigram_logprob",
-)
-
-# Wired live in round 12's first commit (r11 verdict #2): the staged
-# plan above lands verbatim as the round's window.
-_PRIORITY_R12 = _PRIORITY_R12_PLAN
-
-# The PLANNED r13 window (refined at r12 close-out per the handoff
-# discipline): with _PRIORITY_R12 landing in r12, ZERO rows are
-# forced by r13 and the whole r11-verdict wave (the 50 rows of the
-# r11 window) is due by r14. This plan pre-drains that entire wave,
-# which ALSO happens to discharge the one-round-lag commitment for
-# everything round 12 actually touched outside the live r12 window:
-# the asym semdedup unification changed llm_semdedup /
-# llm_semdedup_survivors (rows 2-3 of the r11 plan), and the
-# session-level 8× initialPartitionNum posture plan-changes every
-# face — covered by the r12 window's own 50 external verdicts this
-# round plus this full-wave drain next round. (The r12-touched
-# minhash/simhash presize route, the contamination presize route,
-# and the tfidf broadcast all sat INSIDE the live r12 window and
-# carry fresh external verdicts already.)
-_PRIORITY_R13_PLAN = _PRIORITY_R11_PLAN
-
-# Wired live in round 13's first commit (r12 verdict #2): the staged
-# plan above lands verbatim as the round's window.
-_PRIORITY_R13 = _PRIORITY_R13_PLAN
-
-# The r14 window, wired live in round 14's first commit. NOTE: the
-# plan staged at r13 close-out (a verbatim copy of _PRIORITY_R12_PLAN)
-# was WRONG — its close-out analysis claimed "the next deadline
-# pressure is the r12-verdict wave (due by r16)", overlooking that the
-# r10-verdict wave (the 41 rows last externally verified in r10, never
-# refreshed by the r11/r12/r13 windows) hits age 4 at r14.
-# rotation_check caught it at r14 open (41 violations). Corrected
-# here by deadline analysis against the recorded CORRECTNESS history:
-#   - all 41 due-by-r14 rows (latest verdict r10) — the fn_* scalar
-#     battery, the corpus/sampling/packing family, multimodal
-#     png/wav/avi/features, the TPC-H pricing/supplier wave,
-#     cs_tx_dml_lifecycle, rel misc;
-#   - 9 fillers, chosen to discharge the r13 one-round-lag
-#     commitments and cover every face round 14 plans to touch:
-#     llm_dedup_minhash_lsh + llm_dedup_simhash_pairs (r13 verdict
-#     task #8 — their expression trees were rewritten in r13 while
-#     rotated out), llm_image_dedup_pairs (r13 codec fusion + r14
-#     banding-join work), llm_emb_ann_ivf / _lsh (r14 probed-set
-#     prune) and _pq (r13 lloyd cap), llm_contamination (r13
-#     Observation removal; the SHJ-flag adjudication face),
-#     llm_tfidf (r13 df-broadcast route), llm_dedup_ngram_jaccard
-#     (r14 capped-shingle materialization re-test).
-# With this window landing in r14 and the staged r15 plan below,
-# the replayed history shows ZERO violations through r16.
-_PRIORITY_R14_PLAN = (
-    # due-by-r14 block (41 rows, latest external verdict r10)
-    "cs_tx_dml_lifecycle",
-    "fn_array",
-    "fn_datetime",
-    "fn_higher_order",
-    "fn_hll_mergeable",
-    "fn_json",
-    "fn_map",
-    "fn_math",
-    "fn_sketch_set_algebra",
-    "fn_string",
-    "fn_unpivot",
-    "fn_url",
-    "llm_corpus_build",
-    "llm_corpus_pipeline",
-    "llm_doc_repetition",
-    "llm_dup_chunk_fraction",
-    "llm_fuzzy_linkage",
-    "llm_multimodal_avi",
-    "llm_multimodal_features",
-    "llm_multimodal_png",
-    "llm_multimodal_wav",
-    "llm_pack_materialize",
-    "llm_per_source_cap",
-    "llm_seq_packing",
-    "llm_source_mixture",
-    "llm_stratified_sample",
-    "rel_customer_order_counts",
-    "rel_customers_with_urgent_orders",
-    "rel_deterministic_split",
-    "rel_dominant_part_suppliers",
-    "rel_ewma_user_value",
-    "rel_grouping_sets",
-    "rel_large_volume_customer",
-    "rel_local_supplier_volume",
-    "rel_nation_profit",
-    "rel_pricing_summary",
-    "rel_retention_cohorts",
-    "rel_setops_suppliers",
-    "rel_shipping_priority",
-    "rel_sql_subqueries",
-    "rel_top_orders_per_customer",
-    # fillers: r13 one-round-lag commitments + every r14-touched face
-    "llm_dedup_minhash_lsh",
-    "llm_dedup_simhash_pairs",
-    "llm_image_dedup_pairs",
-    "llm_emb_ann_ivf",
-    "llm_emb_ann_lsh",
-    "llm_emb_ann_pq",
-    "llm_contamination",
-    "llm_tfidf",
-    "llm_dedup_ngram_jaccard",
-)
-
-_PRIORITY_R14 = _PRIORITY_R14_PLAN
-
-# The live window alias: rotation tooling and tests reference THIS
-# name so each round's rewire is a one-line change, not a test edit.
-PRIORITY_WINDOW = _PRIORITY_R14
-
-# The PLANNED r15 window: the 42 r12-verdict rows not already pulled
-# forward into the r14 fillers above (due by r16), plus 8 fillers
-# from the r13-verdict wave (due r17 — the cs endpoint family, the
-# lowest-risk members). After this lands in r15, the replayed history
-# shows zero rows due at r16 and the r13 wave's remainder due r17.
-_PRIORITY_R15_PLAN = tuple(
-    q for q in _PRIORITY_R12_PLAN if q not in set(_PRIORITY_R14_PLAN)
-) + (
-    "cs_aggregations_filtered",
-    "cs_alerts",
-    "cs_alerts_recent",
-    "cs_cities",
-    "cs_events_by_city",
-    "cs_global_counts",
-    "cs_raw_events",
-    "cs_raw_with_ttl",
-)
-
-STAGED_NEXT_WINDOW = _PRIORITY_R15_PLAN
-
-_PRIORITY_R6 = (
-    # new in round 6 — no driver verdict yet (rotation_check enforces
-    # window membership for these)
-    "llm_multimodal_jpeg",
-    "cs_tx_dml_lifecycle",
-    "llm_bpe_train",
-    "llm_bpe_encode",
-    "llm_multimodal_gif",
-    "llm_multimodal_flac",
-    "llm_image_dedup_pairs",
-    # results changed in round 6
-    "llm_semdedup",
-    "llm_semdedup_survivors",
-    "cs_upsert_lww",
-    # results changed in round 6: minhash/simhash moved to the
-    # engine-portable md5-60bit hash and gained bitwise oracles
-    # (simhash_pairs is below in the r3-era block), and
-    # llm_multimodal_features dropped its display round to compare raw
-    # doubles bitwise. To make room, fn_posexplode, fn_url, and
-    # fn_array (last verdict r3 → age 3 after this round, still within
-    # MAX_STALENESS) wait for the r7 window.
-    "llm_dedup_minhash_lsh",
-    "llm_dedup_minhash_survivors",
-    "llm_multimodal_features",
-    # last driver verdict r3: llm text/emb/corpus family
-    "llm_text_stats",
-    "llm_lang_id",
-    "llm_fingerprint",
-    "llm_quality",
-    "llm_dedup_exact",
-    "llm_dedup_exact_hash",
-    "llm_dedup_ngram_jaccard",
-    "llm_dedup_simhash_pairs",
-    "llm_emb_cosine_topk",
-    "llm_emb_neardup",
-    "llm_emb_ann_lsh",
-    "llm_emb_ann_ivf",
-    "llm_emb_ann_pq",
-    "llm_emb_quantize",
-    "llm_knn_classify",
-    "llm_corpus_pipeline",
-    "llm_token_rarity",
-    "llm_seq_packing",
-    "llm_dup_span_removal",
-    "llm_length_outliers",
-    "llm_pack_materialize",
-    "llm_char_entropy",
-    "llm_doc_chunking",
-    "llm_corpus_stats_cube",
-    "llm_dsir_weights",
-    "llm_bigram_logprob",
-    # last driver verdict r3: windowing-analytics wave
-    # (rel_retention_cohorts yields its slot to llm_multimodal_flac
-    # and joins the r7 window at age 3)
-    "rel_event_transitions",
-    "rel_funnel_conversion",
-    "rel_value_outliers",
-    "rel_cep_pattern",
-    "rel_ts_similarity",
-    # last driver verdict r3: fn_* scalar batch
-    # (fn_unpivot yields its slot to llm_image_dedup_pairs and joins
-    # the r7 window at age 3)
-    "fn_variant",
-    "fn_percentiles",
-    # last driver verdict r3: subqueries / lateral / citystream / TPC-H
-    # (rel_sql_subqueries yields its slot to llm_multimodal_gif and
-    # joins the r7 window at age 3)
-    "rel_lateral_topk",
-    "cs_kafka_producer_frame",
-    "cs_producer_metrics",
-    "cs_alert_followups",
-    # rel_large_volume_customer and rel_dominant_part_suppliers
-    # (last verdict r3, code untouched since) yield their slots to the
-    # two new BPE queries and join fn_posexplode/fn_url/fn_array in
-    # the r7 window at age 3 — still within MAX_STALENESS.
-)
-
-# Round 5's window, kept for the record (see git history for r1-r3).
-_PRIORITY_R5 = (
-    # new / changed in round 5 — verdicts must reflect current code
-    "llm_corpus_build",
-    "cs_upsert_lww",
-    "llm_semdedup",
-    "llm_semdedup_survivors",
-    # never in any driver window (added r4)
-    "fn_hll_mergeable",
-    "fn_sketch_set_algebra",
-    "fn_kll_quantiles",
-    # last driver verdict r2
-    "llm_multimodal_meta",
-    "llm_multimodal_features",
-    "llm_multimodal_frames",
-    "rel_recursive_sessions",
-    "rel_ewma_user_value",
-    "rel_window_frames",
-    "rel_session_window_native",
-    "rel_null_aware_anti_join",
-    "fn_try_arith",
-    "fn_conditional",
-    # last driver verdict r1: the rel_* analytics second wave
-    "rel_customers_without_orders",
-    "rel_setops_suppliers",
-    "rel_top_orders_per_customer",
-    "rel_running_revenue_by_supplier",
-    "rel_user_event_gaps",
-    "rel_rollup_returns",
-    "rel_cube_events",
-    "rel_distinct_parts_per_flag",
-    "rel_approx_distinct_users",
-    "rel_pivot_event_matrix",
-    "rel_asof_purchase_view",
-    "rel_events_within_window_pairs",
-    "rel_user_sessions",
-    "rel_grouping_sets",
-    "rel_skew_salted_counts",
-    "rel_revenue_delta",
-    "rel_priority_late_orders",
-    "rel_top_return_customers",
-    "rel_deterministic_split",
-    "rel_resample_hourly_gapfill",
-    "rel_small_quantity_revenue",
-    "rel_order_count_distribution",
-    "rel_min_cost_supplier",
-    "rel_cross_nation_volume",
-    "rel_market_share",
-    "rel_top_revenue_supplier",
-    "rel_disjunctive_band_join",
-    "rel_waiting_suppliers",
-    "rel_dormant_rich_customers",
-    "rel_part_value_share",
-    "rel_priority_linecount",
-    "rel_promo_revenue",
-    "rel_supplier_part_cnt",
-)
-
-_PRIORITY_R4 = (
-    # new in round 4 — no driver verdict yet
-    "llm_dedup_ngram_survivors",
-    "llm_dedup_minhash_survivors",
-    "llm_semdedup_survivors",
-    "llm_corpus_ingest_epochs",
-    "llm_multimodal_png",
-    "llm_multimodal_wav",
-    "llm_multimodal_avi",
-    "cs_upsert_lww",
-    # code changed in round 4 (integer-div ratios, deletion guard,
-    # connected-components loop, minhash band-row refactor)
-    "llm_gopher_rules",
-    "llm_fuzzy_linkage",
-    "llm_dedup_clusters",
-    "llm_semdedup",
-    "llm_dedup_minhash_lsh",
-    # stale-verdict rotation: cs_* reference family (last driver row r1)
-    "cs_raw_events",
-    "cs_windowed_agg",
-    "cs_alerts",
-    "cs_events_by_city",
-    "cs_summary_city",
-    "cs_cities",
-    "cs_aggregations_filtered",
-    "cs_stats",
-    "cs_global_counts",
-    "cs_alerts_recent",
-    "cs_raw_with_ttl",
-    "cs_sliding_agg",
-    # stale-verdict rotation: llm text/corpus ops (last driver row r2)
-    "llm_tfidf",
-    "llm_normalize",
-    "llm_token_freq",
-    "llm_contamination",
-    "llm_doc_repetition",
-    "llm_stratified_sample",
-    "llm_per_source_cap",
-    "llm_pii_redact",
-    "llm_source_mixture",
-    "llm_dup_chunk_fraction",
-    "llm_unigram_logprob",
-    # stale-verdict rotation: fn_* scalar families (last driver row r2)
-    "fn_string",
-    "fn_datetime",
-    "fn_json",
-    "fn_map",
-    "fn_higher_order",
-    "fn_math",
-    "fn_window_analytic",
-    "fn_bitwise",
-    # fn_try_arith and fn_conditional rotate in round 5 (dropped to
-    # keep this list at exactly 50 after llm_multimodal_avi and
-    # cs_upsert_lww landed; lowest-risk members — pure scalar
-    # expressions, strict-green locally every round)
-    # stale-verdict rotation: TPC-H pricing/shipping/supplier wave (r1)
-    "rel_pricing_summary",
-    "rel_shipping_priority",
-    "rel_local_supplier_volume",
-    "rel_customer_order_counts",
-    "rel_customers_with_urgent_orders",
-    "rel_nation_profit",
-)
-
-
 def _reorder(merged: dict) -> dict:
-    out = {k: merged[k] for k in PRIORITY_WINDOW if k in merged}
-    out.update((k, v) for k, v in merged.items() if k not in out)
-    return out
+    return {k: merged[k] for k in rotation_order(merged, load_history()[0])}
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -857,43 +89,26 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 # Rows whose oracle generator degraded to rows-only in the LAST
-# all_oracles() call, with the reason — so a downgrade is visible to
-# verification tooling (tools/verify_local.py prints these loudly),
-# not just a stderr line (r7 ADVICE, medium).
+# all_oracles() call, with the reason (tools/verify_local.py prints them).
 DEGRADED_ORACLES: dict[str, str] = {}
 
 
 def all_oracles(sf_dir: str | None = None) -> dict[str, str]:
     """ORACLE values are SQL strings, or callables (sf_dir) -> SQL for
-    twins that inline trained literals derived from the data (IVF/PQ:
-    centroids/codebooks are deterministic functions of the md5-ordered
-    sample, replayed by the generator without Spark and frozen into
-    the SQL — the r6 LSH inlined-literal technique extended to
-    data-dependent parameters). Generators read ``sf_dir`` — pass the
-    sf under test explicitly (tools/verify_local.py does); the
-    SPARK_GRAFT_ORACLE_SF_DIR env var is the fallback for callers on
-    the fixed driver contract (__spark_entry__.oracle_sql, verified at
-    sf0.01, the default) (r7 ADVICE, low).
-
-    Generator failures: ONLY expected missing-data errors (a corpus
-    lacking the generator's table — e.g. a partial /tmp soak dir with
-    documents only) degrade that row to rows-only, recorded in
-    ``DEGRADED_ORACLES``; genuine bugs in a twin generator (numpy /
-    duckdb drift breaking a trained-literal replay) re-raise so a
-    bitwise-checked row can never silently lose oracle coverage
-    (r7 ADVICE, medium)."""
-    import os
+    twins that inline literals trained deterministically from the data
+    (IVF/PQ centroids and codebooks). Generators read ``sf_dir``; the
+    SPARK_GRAFT_ORACLE_SF_DIR env var is the fallback for callers of
+    the fixed entry point (__spark_entry__.oracle_sql, sf0.01 by
+    default). Only missing-data errors (a corpus lacking a generator's
+    table) degrade a row to rows-only, recorded in ``DEGRADED_ORACLES``;
+    any other generator failure re-raises, and a ``sf_dir`` that is not
+    a directory raises NotADirectoryError up front."""
     import sys
 
     import duckdb
 
     if sf_dir is None:
         sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    # Fail fast on a bogus sf_dir (r8 ADVICE): the per-row degrade
-    # loop below exists for an existing-but-PARTIAL corpus (a /tmp
-    # soak dir with documents only); a mistyped path or a flag string
-    # passed as the dir must raise, not silently strip oracle coverage
-    # from every trained-literal row.
     if not os.path.isdir(sf_dir):
         raise NotADirectoryError(
             f"all_oracles: sf_dir {sf_dir!r} is not a directory — "

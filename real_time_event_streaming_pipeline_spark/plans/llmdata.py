@@ -2052,6 +2052,7 @@ def q_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shuffle pair pipeline + a cell equi-join + one windowed cumsum
     per shard — every stage is the same plan the standalone query
     runs, so the 100x posture is inherited stage by stage."""
+    from ..operators.clustering import lazy_checkpoint_materialized
     from .filters import gopher_rules_df
     from .relational import split_bucket
 
@@ -2076,32 +2077,21 @@ def q_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nd_docs feeds BOTH the semantic-pair source and the final
     # anti-join: without a checkpoint the gate→exact-dedup→ngram-pair
     # subtree sits twice in the DAG (exchange reuse does not reliably
-    # catch it across the join boundary). localCheckpoint materializes
-    # it once on the executors and truncates the lineage — the same
-    # discipline connected_components applies to its edge set.
-    # r14 (r13 verdict #6, job-count audit): the checkpoint is LAZY
-    # and the IVF stage's cell-count sizing scan (sem_src.count()
-    # inside neardup_pairs_ivf_candidates, which runs at plan-build
-    # time and references nd_docs exactly ONCE) is the materializing
-    # action — one query runs the gate→dedup→pair pipeline AND counts
-    # the semantic source, where the eager checkpoint previously spent
-    # a dedicated materialization pass first. Counted with the
-    # job-group profiler at sf0.1: plan-build jobs 19 → 18 (the one
-    # removed is the eager checkpoint's own job; the rest are the
-    # count query's AQE per-stage jobs and the centroid sampler),
-    # wall flat at sf0.1 within the box's noise band. The r8
-    # single-reference invariant holds by ordering: the count (below,
-    # inside the candidates call) runs before any plan references
-    # nd_docs twice.
-    nd_docs = exact_docs.join(nd_dropped, "doc_id", "left_anti").localCheckpoint(
-        eager=False
+    # catch it across the join boundary). Counting the semantic source
+    # materializes the checkpoint through its single reference, and the
+    # count sizes the IVF stage.
+    def semantic_source(d: DataFrame) -> DataFrame:
+        return emb.join(d.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi")
+
+    nd_docs, n_sem = lazy_checkpoint_materialized(
+        exact_docs.join(nd_dropped, "doc_id", "left_anti"),
+        lambda d: semantic_source(d).count(),
     )
 
     # 4 — semantic survivors over the remaining docs' embeddings
-    sem_src = emb.join(
-        nd_docs.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
+    sem_pairs = S.neardup_pairs_ivf_candidates(
+        semantic_source(nd_docs), threshold=0.45, n_rows=n_sem
     )
-    sem_pairs = S.neardup_pairs_ivf_candidates(sem_src, threshold=0.45)
     sem_dropped = sem_pairs.select(F.col("b_id").alias("doc_id")).distinct()
     final_docs = nd_docs.join(sem_dropped, "doc_id", "left_anti")
 

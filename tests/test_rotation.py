@@ -2,9 +2,9 @@
 entry driver window over a 140+-query registry, every registered
 query's latest external verdict must stay within MAX_STALENESS
 rounds — enforced by tools/rotation_check.py, wrapped here so pytest
-fails a bad rotation BEFORE the round is judged. Tooling references
-plans.PRIORITY_WINDOW / plans.STAGED_NEXT_WINDOW so each round's
-rewire is a one-line alias change, not a test edit (r7 verdict #1)."""
+fails a bad rotation BEFORE the round is judged. The window is the
+registry prefix in deadline order (plans.rotation_order); the pure
+cases below drive that order and the check over synthetic histories."""
 
 from __future__ import annotations
 
@@ -25,123 +25,78 @@ def test_rotation_invariant_holds():
 def test_priority_window_is_the_registry_prefix():
     from real_time_event_streaming_pipeline_spark.plans import (
         PRIORITY_WINDOW,
-        all_queries,
+        TOUCHED_SINCE_VERDICT,
+        WINDOW,
         all_oracles,
+        all_queries,
     )
 
     registry = list(all_queries())
-    assert list(PRIORITY_WINDOW) == registry[: rotation_len()]
-    # every window entry resolves (a dangling name would silently
-    # shrink the checked set)
-    assert all(q in registry for q in PRIORITY_WINDOW)
+    assert list(PRIORITY_WINDOW) == registry[:WINDOW]
+    # a dangling touched name would silently do nothing
+    missing = [q for q in TOUCHED_SINCE_VERDICT if q not in registry]
+    assert not missing, missing
     # oracles stay aligned with queries
     assert set(all_oracles()) <= set(registry)
 
 
-def rotation_len():
+def _synthetic(n_rows, latest_round):
+    names = [f"q{i:03d}" for i in range(n_rows)]
+    return names, {q: latest_round for q in names}
+
+
+def test_window_holds_every_row_at_its_deadline():
     import rotation_check
+    from real_time_event_streaming_pipeline_spark.plans import WINDOW, rotation_order
 
-    return rotation_check.WINDOW
+    # upcoming r5: the 40 rows last verified in r1 reach age 4 unless
+    # this window takes them; they sit late in module order on purpose
+    names, latest = _synthetic(140, 4)
+    overdue = names[-40:]
+    latest.update({q: 3 for q in names[:60]})
+    latest.update({q: 1 for q in overdue})
+    order = rotation_order(names, latest)
+    assert set(overdue) <= set(order[:WINDOW])
+    assert not rotation_check._violations(order, set(order[:WINDOW]), latest, 5)
 
 
-def test_staged_next_plan_resolves():
-    """The pre-staged next-round window (close-out discipline — r6
-    shipped without one and went red): 50 unique names, all resolving
-    in the current registry, and every query with the earliest
-    (upcoming+1) deadline covered, so the between-rounds handoff state
-    passes rotation_check as soon as the driver lands this round's
-    CORRECTNESS file."""
+def test_never_verified_row_is_in_the_window():
+    from real_time_event_streaming_pipeline_spark.plans import WINDOW, rotation_order
+
+    names, latest = _synthetic(140, 4)
+    del latest[names[-1]]
+    assert names[-1] in rotation_order(names, latest)[:WINDOW]
+
+
+def test_touched_rows_are_in_the_window():
     from real_time_event_streaming_pipeline_spark.plans import (
-        STAGED_NEXT_WINDOW,
-        all_queries,
+        TOUCHED_SINCE_VERDICT,
+        WINDOW,
+        rotation_order,
     )
 
-    registry = set(all_queries())
-    assert len(STAGED_NEXT_WINDOW) == rotation_len()
-    assert len(set(STAGED_NEXT_WINDOW)) == len(STAGED_NEXT_WINDOW)
-    missing = [q for q in STAGED_NEXT_WINDOW if q not in registry]
-    assert not missing, missing
+    # the touched rows carry the freshest verdicts and come last in
+    # module order, so only the touched rule can pull them forward
+    names, latest = _synthetic(140, 3)
+    names += list(TOUCHED_SINCE_VERDICT)
+    latest.update({q: 4 for q in TOUCHED_SINCE_VERDICT})
+    assert set(TOUCHED_SINCE_VERDICT) <= set(rotation_order(names, latest)[:WINDOW])
 
 
-def _write_synthetic_history(tmp_path):
-    """A SELF-CONSISTENT simulated driver history, independent of how
-    many real CORRECTNESS_r*.json rounds have landed (the r9 lesson:
-    the old simulation copied the repo's live files and broke the
-    moment the driver dropped an untracked one after round close).
-
-    Construction: D = staged-plan rows not in the live window — the
-    exact set only the staged plan can cure. r01 verifies everything;
-    r02..r04 verify everything EXCEPT D. With upcoming fixed at r5 the
-    live window (presumed landing r5) leaves every D row at age 4 > 3,
-    while all other rows sit at age 1 — so exactly D violates, exactly
-    |D| <= 50 rows are due within one round (Hall-feasible), and the
-    staged plan cures all of them by construction. Returns (D, 5)."""
-    import json
-
-    from real_time_event_streaming_pipeline_spark import plans
-
-    registry = list(plans.all_queries())
-    stranded = [q for q in plans.STAGED_NEXT_WINDOW if q not in set(plans.PRIORITY_WINDOW)]
-    assert stranded, "staged plan must rotate in at least one new row"
-    fresh = [q for q in registry if q not in set(stranded)]
-    row = lambda qs: json.dumps({q: {"hash_match": True} for q in qs})
-    (tmp_path / "CORRECTNESS_r01.json").write_text(row(registry))
-    for rnd in (2, 3, 4):
-        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(row(fresh))
-    return stranded, 5
-
-
-def test_handoff_state_passes_with_staged_plan(tmp_path, capsys):
-    """Simulate the between-rounds state that burned r6 and r7: the
-    backlog the staged plan owns has gone stale, the live window has
-    not been rewired — rotation_check must pass (with a warning)
-    because the staged next plan cures every would-be violation.
-    History is synthetic (see _write_synthetic_history) so no real
-    round-artifact drop can flip this test."""
+def test_lookahead_flags_more_rows_due_than_one_window():
     import rotation_check
-    from real_time_event_streaming_pipeline_spark import plans
+    from real_time_event_streaming_pipeline_spark.plans import WINDOW, rotation_order
 
-    _, upcoming = _write_synthetic_history(tmp_path)
-    staged_name = f"_PRIORITY_R{upcoming}_PLAN"
-    assert getattr(plans, staged_name, None) is None, "pick a deeper simulation"
-    try:
-        setattr(plans, staged_name, plans.STAGED_NEXT_WINDOW)
-        violations = rotation_check.check(str(tmp_path))
-    finally:
-        delattr(plans, staged_name)
-    assert not violations, "\n".join(violations)
-
-
-def test_handoff_pending_is_machine_detectable(tmp_path):
-    """r8 ADVICE: the staged-plan pass must be distinguishable from a
-    clean pass by exit-code gating — check_ex returns
-    handoff_pending=True in the between-rounds state, False once the
-    window is wired, and EXIT_HANDOFF_PENDING differs from 0/1."""
-    import rotation_check
-    from real_time_event_streaming_pipeline_spark import plans
-
-    assert rotation_check.EXIT_HANDOFF_PENDING not in (0, 1)
-    # wired state: clean pass, no pending handoff (real repo state —
-    # the live window must always satisfy the invariant on its own)
-    violations, pending = rotation_check.check_ex(REPO)
-    assert not violations and not pending
-    # stale between-rounds state (synthetic — see r9 verdict #1: the
-    # old copy-the-live-files simulation was repo-state-dependent):
-    # the staged plan's rows are stale, the live window can't cure
-    # them, the staged plan can — expect violations without it and
-    # pass-with-pending once it exists under the name the check uses
-    stranded, upcoming = _write_synthetic_history(tmp_path)
-    staged_name = f"_PRIORITY_R{upcoming}_PLAN"
-    assert getattr(plans, staged_name, None) is None, "pick a deeper simulation"
-    live_viol, _ = rotation_check.check_ex(str(tmp_path))  # no staged plan
-    assert live_viol, "the stranded backlog should violate without the staged plan"
-    assert len(live_viol) == len(stranded)
-    try:
-        setattr(plans, staged_name, plans.STAGED_NEXT_WINDOW)
-        violations, pending = rotation_check.check_ex(str(tmp_path))
-    finally:
-        delattr(plans, staged_name)
-    assert not violations and pending
+    # 101 rows last verified in r2: after a 50-row r5 window, 51 of
+    # them are due by r6 — no staleness yet, but r6 is over-committed
+    names, latest = _synthetic(2 * WINDOW + 1, 2)
+    order = rotation_order(names, latest)
+    violations = rotation_check._violations(order, set(order[:WINDOW]), latest, 5)
+    assert violations == [
+        f"lookahead: {WINDOW + 1} queries must be verified within the next 1 round(s) "
+        f"but only {WINDOW} window slots exist — retire/merge rows or rotate more of them "
+        "this round"
+    ]
 
 
 def test_all_oracles_rejects_bogus_sf_dir():

@@ -1,50 +1,38 @@
 """Rotation-staleness invariant for the external driver record.
 
-The driver's correctness gate checks only the FIRST 50 registry
-entries per round, so with a 140+-query registry the priority window
-(plans/__init__.PRIORITY_WINDOW, the registry prefix) must rotate: the invariant is that no
-registered query's latest external verdict is ever older than
-MAX_STALENESS rounds. This tool replays the recorded
-CORRECTNESS_r*.json history, assumes the CURRENT window lands in the
-upcoming round, and fails when any query would still violate the
-invariant — i.e. it catches a bad rotation BEFORE the round is judged.
+The external correctness gate checks only the first WINDOW registry
+entries per round. The registry is in deadline order over the recorded
+CORRECTNESS_r*.json verdicts, rows touched since their latest verdict
+first (plans.rotation_order), so the window is generated, not written
+by hand. The invariant is that no registered query's latest external
+verdict is ever older than MAX_STALENESS rounds. This tool replays the
+history, assumes the generated window lands in the upcoming round, and
+fails when any query would still violate the invariant or some later
+round is already over-committed.
 
     python tools/rotation_check.py            # exit 1 on violation
-    python tools/rotation_check.py --verbose  # per-query ages
+    python tools/rotation_check.py --verbose  # per-query ages + the window
 
-Run as part of the close-out sweep; also wrapped by
-tests/test_rotation.py so `pytest` enforces it.
+Wrapped by tests/test_rotation.py so `pytest` enforces it.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_DIR)
+
+from real_time_event_streaming_pipeline_spark.plans import (  # noqa: E402
+    TOUCHED_SINCE_VERDICT,
+    WINDOW,
+    all_queries,
+    load_history,
+    rotation_order,
+)
 
 MAX_STALENESS = 3  # a verdict may be at most this many rounds old
-WINDOW = 50  # the driver checks the first WINDOW registry entries
-
-
-def load_history(repo_dir: str) -> tuple[dict[str, int], int]:
-    """{query: latest round with a driver verdict}, and the upcoming
-    round number (max recorded round + 1)."""
-    latest: dict[str, int] = {}
-    max_round = 0
-    for path in sorted(glob.glob(os.path.join(repo_dir, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        max_round = max(max_round, rnd)
-        with open(path) as fh:
-            for q in json.load(fh):
-                latest[q] = max(latest.get(q, 0), rnd)
-    return latest, max_round + 1
 
 
 def _violations(
@@ -94,74 +82,34 @@ def _violations(
     return violations
 
 
-# main() exit code when the check passes ONLY via the staged plan and
-# --strict-handoff is given: distinct from 0 (clean) and 1 (violation)
-# so exit-code-gating callers can tell "plan staged but not wired"
-# apart from both (r8 ADVICE — a caller gating on exit 0 alone would
-# keep passing all round even if the plan is never wired).
-EXIT_HANDOFF_PENDING = 3
-
-
-def check(repo_dir: str, verbose: bool = False) -> list[str]:
-    """Violations with the LIVE window presumed to land in the upcoming
-    round (see check_ex for the handoff flag)."""
-    return check_ex(repo_dir, verbose=verbose)[0]
-
-
-def check_ex(repo_dir: str, verbose: bool = False) -> tuple[list[str], bool]:
-    """(violations, handoff_pending). Handoff-aware (r7 verdict #1):
-    between rounds — the driver has landed CORRECTNESS_r{N}.json but
-    round N+1's first commit has not yet rewired the window — the live
-    window simulates as already landed and the backlog looks red even
-    though the staged next-window plan covers it. If a staged
-    ``_PRIORITY_R{upcoming}_PLAN`` exists and presuming IT as the
-    upcoming window cures every violation, the check passes with
-    handoff_pending=True (a warning on stderr; ``--strict-handoff``
-    turns it into exit EXIT_HANDOFF_PENDING so exit-code gating can
-    refuse to coast on an unwired plan — r8 ADVICE)."""
-    import real_time_event_streaming_pipeline_spark.plans as plans
-
-    registry = list(plans.all_queries())
+def check(repo_dir: str = REPO_DIR, verbose: bool = False) -> list[str]:
+    """Violations with the window generated from `repo_dir`'s history
+    presumed to land in the upcoming round. `verbose` also prints that
+    window with each row's age before the round."""
     latest, upcoming = load_history(repo_dir)
-    live = _violations(registry, set(registry[:WINDOW]), latest, upcoming, verbose=verbose)
-    if not live:
-        return [], False
-    staged = getattr(plans, f"_PRIORITY_R{upcoming}_PLAN", None)
-    if staged is not None:
-        staged_viol = _violations(registry, set(staged), latest, upcoming)
-        if not staged_viol:
-            print(
-                f"rotation WARNING: live window stale for upcoming r{upcoming} "
-                f"({len(live)} would-be violations) but staged _PRIORITY_R{upcoming}_PLAN "
-                "cures all of them — wire it as the round's first commit",
-                file=sys.stderr,
-            )
-            return [], True
-    return live, False
+    registry = rotation_order(all_queries(), latest)
+    violations = _violations(registry, set(registry[:WINDOW]), latest, upcoming, verbose=verbose)
+    if verbose:
+        print(f"generated window for r{upcoming}:")
+        for i, q in enumerate(registry[:WINDOW], 1):
+            seen = "never verified"
+            if q in latest:
+                seen = f"latest r{latest[q]}, age {upcoming - latest[q]}"
+            touched = ", touched since verdict" if q in TOUCHED_SINCE_VERDICT else ""
+            print(f"  {i:2d}. {q} ({seen}{touched})")
+    return violations
 
 
 def main() -> int:
-    repo_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    verbose = "--verbose" in sys.argv
-    strict_handoff = "--strict-handoff" in sys.argv
-    violations, handoff_pending = check_ex(repo_dir, verbose=verbose)
+    violations = check(verbose="--verbose" in sys.argv)
     if violations:
         print(f"ROTATION CHECK FAILED ({len(violations)} violations):")
         for v in violations:
             print("  " + v)
         return 1
-    latest, upcoming = load_history(repo_dir)
-    from real_time_event_streaming_pipeline_spark.plans import all_queries
-
-    if handoff_pending and strict_handoff:
-        print(
-            f"rotation HANDOFF PENDING (--strict-handoff): staged plan for r{upcoming} "
-            "cures the stale live window but has not been wired as PRIORITY_WINDOW"
-        )
-        return EXIT_HANDOFF_PENDING
+    _, upcoming = load_history(REPO_DIR)
     print(
-        f"rotation OK{' (handoff pending)' if handoff_pending else ''}: "
-        f"{len(list(all_queries()))} registered queries, "
+        f"rotation OK: {len(all_queries())} registered queries, "
         f"window {WINDOW}, upcoming round r{upcoming}, max staleness {MAX_STALENESS}"
     )
     return 0
