@@ -28,8 +28,8 @@ TOUCHED_SINCE_VERDICT = (
     "cs_windowed_agg",  # closed-domain severity counts + domain guard
     "cs_summary_city",  # rolls up windowed_agg
     "cs_aggregations_filtered",  # selects windowed_agg's severities
-    "cs_tx_dml_lifecycle",  # tx_table: one shuffle per commit
-    "cs_upsert_lww",  # tx_table: one shuffle per commit
+    "cs_tx_dml_lifecycle",  # tx_table: one shuffle per commit, files packed by size
+    "cs_upsert_lww",  # tx_table: one shuffle per commit, files packed by size
     "llm_corpus_build",  # nd_docs checkpoint paired with its count
 )
 

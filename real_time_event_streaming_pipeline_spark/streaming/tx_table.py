@@ -10,13 +10,19 @@ Protocol (the public Delta Lake / Iceberg design — M. Armbrust et al.,
 "Delta Lake: High-Performance ACID Table Storage over Cloud Object
 Stores", VLDB 2020; data files are immutable, the log is the table):
 
-- ``<table>/data/txn-<version>-<uuid>/b<kb>/*.parquet`` — immutable
-  data files, one directory per transaction attempt, one subdirectory
-  per key bucket. A writer NEVER mutates an existing file.
+- ``<table>/data/txn-<version>-<uuid>/b<first kb>-<last kb>/*.parquet``
+  — immutable data files, one directory per transaction attempt, one
+  subdirectory per write group: a contiguous run of key buckets packed
+  into one file of at most about ``spark.sql.files.maxPartitionBytes``
+  (Delta's optimized-write sizing; a bucket bigger than that gets its
+  own group). A writer NEVER mutates an existing file. Tables written
+  when every file held one bucket (``b<kb>/``) read and rewrite as
+  they are.
 - ``<table>/_log/v<version>.json`` — the manifest: the complete list
-  of live data files (with each file's bucket id) plus the set of
-  stream epochs already folded in. The table IS whatever the highest
-  manifest says; data files not referenced by it are invisible.
+  of live data files (with the bucket ids each file may hold, ``kbs``,
+  and its ``size``) plus the set of stream epochs already folded in.
+  The table IS whatever the highest manifest says; data files not
+  referenced by it are invisible.
 - Commit = put-if-absent of ``v<N+1>.json``: the manifest is written
   to a temp name and hard-linked to its final name — ``os.link``
   fails with EEXIST if any other writer got there first, which is
@@ -52,24 +58,29 @@ so a crashed micro-batch leaves a PARTIALLY applied epoch visible):
   whose ranges provably can't match — the Delta/Iceberg file-stats
   pattern, on top of the bucket pruning the key hash already gives.
 
-Scale posture: an upsert epoch rewrites only the buckets its keys
-hash into — cost O(table x |affected| / n_buckets) — and writes land
-in a FRESH directory while old files are read, so no localCheckpoint
+Scale posture: the file, not the bucket, is the unit a commit reads
+and writes. An upsert epoch rewrites, whole, only the files that may
+hold a bucket its keys hash into — cost O(rewritten files), and since
+a file holds at most about the target size, the write amplification
+of touching one key is bounded by that size — and writes land in a
+FRESH directory while old files are read, so no localCheckpoint
 materialization barrier is needed. The manifest lists file paths, not
 file contents: at 100 TB with thousands of buckets it stays a few MB
 of JSON, and the single put-if-absent commit is the same O(1)
 metadata operation Delta runs on S3. Bucket pruning happens at the
-manifest (driver) level — a point lookup reads only the one bucket's
-files. Readers never list a directory: Spark gets the manifest's
-explicit file paths and only stats each one — on the driver up to
-``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) paths,
-in a distributed listing job beyond it. A commit's write is one
-shuffle, sized to the buckets it touches (``_by_bucket``).
+manifest (driver) level — a point lookup reads only the files that
+may hold its bucket. Readers never list a directory: Spark gets the
+manifest's explicit file paths and only stats each one — on the
+driver up to ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+(32) paths, in a distributed listing job beyond it, which a small
+table packed into a few files never reaches. A commit's write is one
+shuffle, one partition per write group (``_by_group``).
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import uuid
 from collections.abc import Callable
@@ -223,9 +234,11 @@ def read_table(
 ) -> DataFrame | None:
     """The table as of a commit (default: latest), as a DataFrame over
     exactly the manifest's files — snapshot-isolated against
-    concurrent commits. ``buckets`` prunes to the listed key buckets
-    at the manifest level (a point lookup touches one bucket's files
-    and nothing else). ``between`` ({col: (lo, hi)}) applies min/max
+    concurrent commits. ``buckets`` prunes to the listed key buckets:
+    only the files that may hold one of them are scanned (manifest
+    level), and an in-plan ``kb IN (...)`` filter drops the other
+    buckets those files share, so exactly those buckets' rows come
+    back. ``between`` ({col: (lo, hi)}) applies min/max
     data skipping over the manifest's file stats; the returned frame
     is a SUPERSET of the matching rows (whole files are skipped, not
     rows), so callers still apply their own .filter. ``timestamp``
@@ -245,11 +258,11 @@ def read_table(
     if between:
         files = prune_files({"files": files}, between)
     if buckets is not None:
-        want = set(buckets)
-        files = [f for f in files if f["kb"] in want]
+        files = _split_files(files, buckets)[1]
     if not files:
         return None
-    return _read_entries(spark, table_dir, files, manifest.get("schema"))
+    df = _read_entries(spark, table_dir, files, manifest.get("schema"))
+    return df if buckets is None else df.filter(F.col("kb").isin(sorted(set(buckets))))
 
 
 def _rel_path(col) -> "F.Column":
@@ -334,9 +347,9 @@ def read_changes(spark: SparkSession, table_dir: str, version: int) -> DataFrame
     ``_change_type`` in {insert, update_preimage, update_postimage,
     delete}. Only files that entered or left the manifest at this
     version are read (both still on disk until vacuum passes
-    ``keep_versions`` over them), so the cost is O(changed buckets),
-    and carried-over winner rows rewritten verbatim inside an affected
-    bucket are correctly excluded — a row is a change only if its KEY
+    ``keep_versions`` over them), so the cost is O(rewritten files),
+    and carried-over winner rows rewritten verbatim inside a rewritten
+    file are correctly excluded — a row is a change only if its KEY
     was written or removed at this version. Compactions change no
     rows and return None."""
     m_v = read_manifest(table_dir, version)
@@ -605,56 +618,140 @@ def _txn_rel(version: int) -> str:
     return f"txn-{version:010d}-{uuid.uuid4().hex[:8]}"
 
 
-def _by_bucket(df: DataFrame, buckets) -> DataFrame:
-    """``df`` hash-partitioned by ``kb`` into one partition per bucket
-    the commit touches, at most one per core — the input contract of
-    ``_write_txn_files``. Each bucket lands wholly in one task, so the
-    partitioned write emits exactly one file per touched bucket (Delta's
-    optimizeWrite, as one shuffle). The count is explicit because AQE
-    never coalesces a user-given partition count, and capped at the
-    core count because beyond it extra partitions only add waves of
-    tiny write tasks. Callers that transform rows per key (the upsert's
-    last-writer-wins window) apply it BEFORE that step: hash
-    partitioning on ``kb`` satisfies a ``(kb, key)`` window's
-    clustering, so the window and the write share this one exchange."""
-    n = min(len(set(buckets)), df.sparkSession.sparkContext.defaultParallelism)
-    return df.repartition(max(1, n), "kb")
+def _kbs(entry: dict) -> list[int]:
+    """The sorted bucket ids a manifest entry's file may hold: ``kbs``
+    on packed entries, the single ``kb`` of an entry written when every
+    file held exactly one bucket (those tables are read as they are,
+    never migrated)."""
+    return entry["kbs"] if "kbs" in entry else [entry["kb"]]
+
+
+def _split_files(files: list[dict], buckets) -> tuple[list[dict], list[dict]]:
+    """(carried, rewritten): a commit touching ``buckets`` rewrites
+    every file that may hold one of them, whole, and carries every
+    other file over by path."""
+    want = set(buckets)
+    carried, rewritten = [], []
+    for f in files:
+        (rewritten if want.intersection(_kbs(f)) else carried).append(f)
+    return carried, rewritten
+
+
+def _bucket_bytes(table_dir: str, entries: list[dict]) -> dict[int, float]:
+    """Estimated bytes per bucket in these files: each file's size
+    spread evenly over the buckets it may hold. Entries written before
+    sizes were recorded are stat'ed."""
+    est: dict[int, float] = {}
+    for f in entries:
+        size = f.get("size")
+        if size is None:
+            size = os.path.getsize(os.path.join(_data_dir(table_dir), f["path"]))
+        kbs = _kbs(f)
+        for kb in kbs:
+            est[kb] = est.get(kb, 0.0) + size / len(kbs)
+    return est
+
+
+def _add_cached_bytes(est: dict[int, float], df: DataFrame, counts: dict[int, int]) -> None:
+    """Fold a persisted frame's size into ``est``, spread over its
+    buckets by row count (``counts``: kb -> rows). The size is the
+    cached relation's own statistic, exact once an action has
+    materialized the cache, so it costs no job."""
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    total = sum(counts.values())
+    for kb, n in counts.items():
+        est[kb] = est.get(kb, 0.0) + size * n / total
+
+
+def _pack_buckets(est: dict[int, float], target: float) -> list[list[int]]:
+    """Bin-pack buckets into write groups, each written as one file
+    (Delta's optimized-write sizing). ``ceil(total / target)`` groups,
+    at least one and at most one per bucket, each a contiguous run of
+    bucket ids of about ``total / groups`` bytes: a bucket joins the
+    group its byte midpoint falls in. A bucket bigger than ``target``
+    gets a group of its own."""
+    kbs = sorted(est)
+    total = sum(est.values())
+    n = min(max(1, math.ceil(total / target)), len(kbs))
+    share = total / n
+    groups: list[list[int]] = []
+    acc, prev, prev_big = 0.0, None, False
+    for kb in kbs:
+        b = est[kb]
+        g = min(n - 1, int((acc + b / 2) // share)) if share else 0
+        big = b > target
+        if g != prev or big or prev_big:
+            groups.append([])
+        groups[-1].append(kb)
+        acc, prev, prev_big = acc + b, g, big
+    return groups
+
+
+def _write_groups(spark: SparkSession, est: dict[int, float]) -> list[list[int]]:
+    """The write groups of a commit that rewrites the buckets in
+    ``est``, sized so one file is about one read split
+    (``spark.sql.files.maxPartitionBytes``)."""
+    target = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return _pack_buckets(est, target)
+
+
+def _by_group(df: DataFrame, groups: list[list[int]]) -> DataFrame:
+    """``df`` with its write group ``_g`` and partitioned by it — the
+    input contract of ``_write_txn_files``. One partition per group,
+    at most one per core (groups beyond that share a task round-robin),
+    so each group lands wholly in one task and is written as one file:
+    Delta's optimizeWrite, as one shuffle. The partition count is
+    explicit because AQE never coalesces a user-given count. Callers
+    that transform rows per key (the upsert's last-writer-wins window)
+    apply it BEFORE that step and partition their window by
+    ``(_g, kb, key...)``, which this partitioning satisfies, so the
+    window and the write share this one exchange."""
+    g = None
+    for i in range(len(groups) - 1, -1, -1):
+        cond = F.col("kb") >= groups[i][0]
+        g = F.when(cond, i) if g is None else g.when(cond, i)
+    n = min(len(groups), df.sparkSession.sparkContext.defaultParallelism)
+    return df.withColumn("_g", g).repartitionById(n, "_g")
 
 
 def _write_txn_files(
     merged: DataFrame,
     table_dir: str,
     txn_rel: str,
+    groups: list[list[int]],
     stats_cols: list[str] | None = None,
     max_records_per_file: int | None = None,
 ) -> list[dict]:
     """Write one transaction's data files under ``txn_rel`` and return
-    manifest entries. ``merged`` must come out of ``_by_bucket``: this
-    function adds no shuffle of its own, so each bucket is written by
-    the one task holding it — exactly one file per touched bucket,
-    unless ``max_records_per_file`` splits an oversized one. Readers
-    take explicit file lists, so every extra file would tax each later
-    read_table with per-file planning and footer reads.
+    manifest entries. ``merged`` must come out of ``_by_group(...,
+    groups)``: this function adds no shuffle of its own, so each write
+    group is written by the one task holding it — exactly one file per
+    group, unless ``max_records_per_file`` splits an oversized one.
+    Readers take explicit file lists, so every extra file would tax
+    each later read_table with per-file planning and footer reads.
 
-    `partitionBy` on a duplicated bucket column splits the write per
-    bucket while keeping ``kb`` as a data column (uniform schema across
-    commits, no hive discovery); the hive dirs are renamed to plain
-    names so Spark never infers a partition column from them."""
+    Each entry records ``kbs`` (the group's buckets: the file may hold
+    only these) and ``size`` (bytes on disk, the next commit's packing
+    input). `partitionBy` on the group column splits the write per
+    group without writing ``_g`` as data; the hive dirs are renamed to
+    ``b<first kb>-<last kb>`` so Spark never infers a partition column
+    from them."""
     txn_abs = os.path.join(_data_dir(table_dir), txn_rel)
-    writer = merged.withColumn("_kb_part", F.col("kb")).write.partitionBy("_kb_part")
+    writer = merged.withColumnRenamed("_g", "_g_part").write.partitionBy("_g_part")
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
     writer.parquet(txn_abs)
     entries: list[dict] = []
     for d in sorted(os.listdir(txn_abs)):
-        if not d.startswith("_kb_part="):
+        if not d.startswith("_g_part="):
             continue
-        kbv = int(d.split("=", 1)[1])
-        safe = f"b{kbv:05d}"
+        kbs = groups[int(d.split("=", 1)[1])]
+        safe = f"b{kbs[0]:05d}-{kbs[-1]:05d}"
         os.rename(os.path.join(txn_abs, d), os.path.join(txn_abs, safe))
         for name in sorted(os.listdir(os.path.join(txn_abs, safe))):
             if name.endswith(".parquet"):
-                entries.append({"path": f"{txn_rel}/{safe}/{name}", "kb": kbv})
+                size = os.path.getsize(os.path.join(txn_abs, safe, name))
+                entries.append({"path": f"{txn_rel}/{safe}/{name}", "kbs": kbs, "size": size})
     if stats_cols:
         _attach_file_stats(merged.sparkSession, table_dir, entries, stats_cols)
     return entries
@@ -854,11 +951,12 @@ def _dv_overlapped_writes(
     matches,
     counts: dict,
     rows: DataFrame | None,
+    groups: list[list[int]],
     stats_cols: list[str] | None,
 ) -> tuple[list[dict], list[dict]]:
     """Phase 2 of an UPDATE/MERGE DV commit: the sidecar write and the
-    append of ``rows`` (bucket-partitioned; None when nothing is
-    appended) are independent writes over the candidate scan phase 1
+    append of ``rows`` (``_by_group(..., groups)``; None when nothing
+    is appended) are independent writes over the candidate scan phase 1
     materialized, so they run concurrently. Returns (replacement
     candidate entries, appended entries). Each write gets its own txn
     dir; if either fails, both dirs are removed (best effort) before
@@ -877,7 +975,7 @@ def _dv_overlapped_writes(
         f_app = None
         if rows is not None:
             f_app = pool.submit(
-                _write_txn_files, rows, table_dir, app_rel, stats_cols=stats_cols
+                _write_txn_files, rows, table_dir, app_rel, groups, stats_cols=stats_cols
             )
     try:
         return f_side.result(), (f_app.result() if f_app is not None else [])
@@ -904,9 +1002,10 @@ def upsert(
     key, committing atomically across every affected bucket. Returns
     the committed (or already-committed, for a replayed epoch) version.
 
-    Only the affected buckets' files are read and rewritten; files in
-    untouched buckets carry over into the new manifest by reference —
-    their data-skipping stats carry with them. ``stats_cols`` enables
+    Only the files that may hold an affected bucket are read and
+    rewritten (packed into write groups by size); every other file
+    carries over into the new manifest by reference — its
+    data-skipping stats carry with it. ``stats_cols`` enables
     per-file min/max stats for those columns (defaults to whatever the
     table's previous commit recorded, so one opt-in sticks).
     ``merge_schema=True`` permits ADDITIVE schema evolution: the union
@@ -963,15 +1062,16 @@ def upsert(
                         f"schema mismatch on columns {sorted(old_cols ^ new_cols)}; "
                         "pass merge_schema=True to evolve the table additively"
                     )
-            affected = sorted(r.kb for r in incoming.select("kb").distinct().collect())
-            if not affected:
+            counts = {
+                r["kb"]: r["count"] for r in incoming.groupBy("kb").count().collect()
+            }
+            if not counts:
                 return old_version
-            keep = [f for f in old_manifest["files"] if f["kb"] not in set(affected)]
-            existing = (
-                read_table(spark, table_dir, version=snap[0], buckets=affected)
-                if snap is not None
-                else None
-            )
+            keep, cand = _split_files(old_manifest["files"], counts)
+            est = _bucket_bytes(table_dir, cand)
+            _add_cached_bytes(est, incoming, counts)
+            groups = _write_groups(spark, est)
+            existing = _read_entries(spark, table_dir, cand, old_manifest.get("schema"))
             if existing is None:
                 merged = incoming
             else:
@@ -982,21 +1082,21 @@ def upsert(
                 # unchanged.
                 merged = existing.unionByName(incoming, allowMissingColumns=True)
             order = [F.desc("_epoch")] + ([F.desc(order_col)] if order_col else [])
-            w = Window.partitionBy("kb", *key_cols).orderBy(*order)
+            w = Window.partitionBy("_g", "kb", *key_cols).orderBy(*order)
             deduped = (
-                _by_bucket(merged, affected)
+                _by_group(merged, groups)
                 .withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             )
             eff_stats = stats_cols if stats_cols is not None else old_manifest.get("stats_cols")
             new_entries = _write_txn_files(
-                deduped, table_dir, _txn_rel(old_version + 1), stats_cols=eff_stats
+                deduped, table_dir, _txn_rel(old_version + 1), groups, stats_cols=eff_stats
             )
             # the manifest schema is the UNION of the old table schema and
             # this epoch's columns — never narrowed by which buckets this
             # epoch happened to touch
-            schema = deduped.schema
+            schema = merged.schema
             if old_schema is not None:
                 have = set(schema.fieldNames())
                 for f in old_schema.fields:
@@ -1038,15 +1138,15 @@ def delete(
     """Atomically delete every row whose key matches a row of ``keys``
     (columns must equal the table's key_cols) — the Delta DELETE /
     DynamoDB deleteItem analogue. With ``mode="cow"`` (default), only
-    the buckets the keys hash into are rewritten (anti-join against
-    the broadcastable key set), everything else carries over by
-    reference, and the whole multi-bucket removal is one manifest
-    commit. With ``mode="dv"`` (merge-on-read), no data file is
+    the files that may hold a bucket the keys hash into are rewritten
+    (anti-join against the broadcastable key set), everything else
+    carries over by reference, and the whole multi-bucket removal is
+    one manifest commit. With ``mode="dv"`` (merge-on-read), no data file is
     rewritten at all: the matching row POSITIONS go into a
     deletion-vector sidecar referenced by the affected files' manifest
     entries and are anti-joined out at read time — O(deleted rows)
-    write cost instead of O(affected buckets), the point-delete path
-    for tables whose buckets are large. Compaction folds DVs back
+    write cost instead of O(affected files), the point-delete path
+    for tables whose files are large. Compaction folds DVs back
     into clean files. Read-back equality between the two modes is
     pinned in tests. The epoch ledger gives replayed deletes the same
     exactly-once treatment as upserts."""
@@ -1070,8 +1170,7 @@ def delete(
         affected = sorted(r.kb for r in tagged.select("kb").distinct().collect())
         if not affected:
             return old_version
-        keep = [f for f in old_manifest["files"] if f["kb"] not in set(affected)]
-        cand = [f for f in old_manifest["files"] if f["kb"] in set(affected)]
+        keep, cand = _split_files(old_manifest["files"], affected)
         if not cand:
             return old_version  # no file holds these buckets: nothing to delete
         if mode == "dv":
@@ -1090,8 +1189,9 @@ def delete(
             remaining = existing.join(
                 F.broadcast(tagged.select(*key_cols)), key_cols, "left_anti"
             )
+            groups = _write_groups(spark, _bucket_bytes(table_dir, cand))
             new_entries = _write_txn_files(
-                _by_bucket(remaining, affected), table_dir, _txn_rel(old_version + 1),
+                _by_group(remaining, groups), table_dir, _txn_rel(old_version + 1), groups,
                 stats_cols=old_manifest.get("stats_cols"),
             )
         manifest = dict(
@@ -1164,9 +1264,9 @@ def delete_where(
             remaining = _read_entries(
                 spark, table_dir, candidates, old_manifest.get("schema")
             ).filter(~F.coalesce(cond, F.lit(False)))
+            groups = _write_groups(spark, _bucket_bytes(table_dir, candidates))
             new_entries = _write_txn_files(
-                _by_bucket(remaining, [f["kb"] for f in candidates]),
-                table_dir, _txn_rel(old_version + 1),
+                _by_group(remaining, groups), table_dir, _txn_rel(old_version + 1), groups,
                 stats_cols=old_manifest.get("stats_cols"),
             )
         manifest = dict(
@@ -1214,11 +1314,11 @@ def merge(
     inserts not-matched ones): this table maintains one row per key,
     so duplicate inserts would corrupt it just like matched fan-out.
 
-    ``mode="cow"`` rewrites the affected buckets (the source's key
-    hashes) — one manifest commit. ``mode="dv"`` is merge-on-read:
+    ``mode="cow"`` rewrites the files that may hold the source keys'
+    buckets — one manifest commit. ``mode="dv"`` is merge-on-read:
     matched rows a clause touches (updated or deleted) are killed via
     a deletion-vector sidecar and the updated + inserted rows are
-    appended as fresh per-bucket files in the same commit — no bucket
+    appended as fresh packed files in the same commit — no file
     rewrite, write cost O(source-touched rows), the Delta/Iceberg v2
     MERGE trade; matched rows no clause touches stay in place.
 
@@ -1296,11 +1396,15 @@ def merge(
                         "dedupe the source first"
                     )
                 src_checked = True
-            affected = sorted(r.kb for r in src.select("kb").distinct().collect())
-            if not affected:
+            counts = {r["kb"]: r["count"] for r in src.groupBy("kb").count().collect()}
+            if not counts:
                 return old_version
-            keep = [f for f in old_manifest["files"] if f["kb"] not in set(affected)]
-            cand = [f for f in old_manifest["files"] if f["kb"] in set(affected)]
+            keep, cand = _split_files(old_manifest["files"], counts)
+            # cow rewrites the candidates whole plus the source's rows;
+            # dv appends only rows written for the source's keys
+            est = {} if mode == "dv" else _bucket_bytes(table_dir, cand)
+            _add_cached_bytes(est, src, counts)
+            groups = _write_groups(spark, est)
             if mode == "dv" and cand:
                 # dv mode consumes the candidate rows three ways (the
                 # DV matcher count + sidecar write, the updated-row
@@ -1412,15 +1516,15 @@ def merge(
                 merged = parts[0]
                 for p in parts[1:]:
                     merged = merged.unionByName(p)
-                merged = _by_bucket(merged, affected)
+                merged = _by_group(merged, groups)
             if mode == "dv" and dv_plan is not None:
                 cand_entries, new_entries = _dv_overlapped_writes(
                     spark, table_dir, old_version + 1, cand, *dv_plan,
-                    merged, old_manifest.get("stats_cols"),
+                    merged, groups, old_manifest.get("stats_cols"),
                 )
             elif merged is not None:
                 new_entries = _write_txn_files(
-                    merged, table_dir, _txn_rel(old_version + 1),
+                    merged, table_dir, _txn_rel(old_version + 1), groups,
                     stats_cols=old_manifest.get("stats_cols"),
                 )
             else:
@@ -1472,7 +1576,7 @@ def update_where(
     ``mode="cow"`` rewrites the candidate files with the updated
     rows folded in. ``mode="dv"`` is merge-on-read: the matched rows'
     positions go into a deletion-vector sidecar (killing the OLD
-    versions) and the UPDATED rows are appended as fresh per-bucket
+    versions) and the UPDATED rows are appended as fresh packed
     files in the same commit — no candidate rewrite, write cost
     O(matched rows), the Delta/Iceberg v2 UPDATE trade. Keys must not
     be updated (that is an upsert+delete, not an UPDATE — a changed
@@ -1504,7 +1608,9 @@ def update_where(
         if not candidates:
             return old_version  # stats prove nothing matches
         cand_paths = {f["path"] for f in candidates}
-        cand_buckets = [f["kb"] for f in candidates]
+        # dv mode appends only the matched rows: the candidates' bytes
+        # bound them from above
+        groups = _write_groups(spark, _bucket_bytes(table_dir, candidates))
         keep = [f for f in old_manifest["files"] if f["path"] not in cand_paths]
         matched = F.coalesce(cond, F.lit(False))
 
@@ -1535,7 +1641,7 @@ def update_where(
                 )
                 new_cand, appended = _dv_overlapped_writes(
                     spark, table_dir, old_version + 1, candidates, matches, counts,
-                    _by_bucket(updated_rows, cand_buckets),
+                    _by_group(updated_rows, groups), groups,
                     old_manifest.get("stats_cols"),
                 )
             finally:
@@ -1545,7 +1651,7 @@ def update_where(
             live = _read_entries(spark, table_dir, candidates, old_manifest.get("schema"))
             rewritten = _apply(live, always=False)
             files = keep + _write_txn_files(
-                _by_bucket(rewritten, cand_buckets), table_dir, _txn_rel(old_version + 1),
+                _by_group(rewritten, groups), table_dir, _txn_rel(old_version + 1), groups,
                 stats_cols=old_manifest.get("stats_cols"),
             )
         manifest = dict(
@@ -1573,15 +1679,16 @@ def compact(
     max_records_per_file: int | None = None,
     zorder_cols: list[str] | None = None,
 ) -> int | None:
-    """Rewrite the current snapshot into one transaction directory
-    (one file set per bucket) and commit it as a new version — same
-    rows, fewer files. Readers are never disturbed: old manifests keep
-    resolving until vacuumed.
+    """Rewrite the current snapshot into one transaction directory,
+    its buckets re-packed into write groups by size (one file per
+    group), and commit it as a new version — same rows, fewer files.
+    Readers are never disturbed: old manifests keep resolving until
+    vacuumed.
 
-    ``sort_cols`` clusters rows inside each bucket before the write
-    (the bucket shuffle + sortWithinPartitions — the poor man's
+    ``sort_cols`` clusters rows inside each write group before the
+    write (the group shuffle + sortWithinPartitions — the poor man's
     Z-order, one dimension at a time), and ``max_records_per_file``
-    splits each bucket into several files: together they turn the
+    splits each group into several files: together they turn the
     per-file min/max stats into DISJOINT ranges, so data skipping on
     the sort column goes from "keeps most files" to "keeps the one
     file the range lives in". This is the periodic maintenance pass
@@ -1604,7 +1711,7 @@ def compact(
         return None
     version, manifest = snap
     df = read_table(spark, table_dir, version)
-    kbs = [f["kb"] for f in manifest["files"]]
+    groups = _write_groups(spark, _bucket_bytes(table_dir, manifest["files"]))
     if zorder_cols:
         from ..sources.maintenance import zorder_value
 
@@ -1618,16 +1725,16 @@ def compact(
             [rng[f"hi_{c}"] for c in zorder_cols],
         )
         df = (
-            _by_bucket(df.withColumn("_z", z), kbs)
-            .sortWithinPartitions("kb", "_z")
+            _by_group(df.withColumn("_z", z), groups)
+            .sortWithinPartitions("_g", "_z")
             .drop("_z")
         )
     elif sort_cols:
-        df = _by_bucket(df, kbs).sortWithinPartitions("kb", *sort_cols)
+        df = _by_group(df, groups).sortWithinPartitions("_g", *sort_cols)
     else:
-        df = _by_bucket(df, kbs)
+        df = _by_group(df, groups)
     entries = _write_txn_files(
-        df, table_dir, _txn_rel(version + 1),
+        df, table_dir, _txn_rel(version + 1), groups,
         stats_cols=manifest.get("stats_cols"),
         max_records_per_file=max_records_per_file,
     )
@@ -1855,10 +1962,10 @@ def upsert_tx(
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch factory: the atomic, exactly-once upsert sink that
     `PipelineConfig(atomic=True)` runs. Same last-writer-wins contract
-    as `sinks.upsert_parquet`, but an epoch rewrites only the buckets
-    its keys hash into and readers never see a half-committed epoch.
-    ``stats_cols`` records per-file min/max for data skipping at read
-    time.
+    as `sinks.upsert_parquet`, but an epoch rewrites only the files
+    that may hold the buckets its keys hash into and readers never
+    see a half-committed epoch. ``stats_cols`` records per-file
+    min/max for data skipping at read time.
 
     ``app_id`` scopes the replay ledger to this (query, checkpoint)
     pair; pass a fresh value when restarting a query from a FRESH

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 import pathlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,6 +31,33 @@ def _batch(spark, rows):
 def _content(spark, table_dir, version=None):
     df = tx_table.read_table(spark, table_dir, version=version)
     return set() if df is None else {(r.k, r.v) for r in df.select("k", "v").collect()}
+
+
+def _files_target(spark, size):
+    """Set ``spark.sql.files.maxPartitionBytes``, the write-group
+    target size, for one test and restore it after."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, size)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.fixture
+def small_files(spark):
+    """A 2 KiB target: a commit packs a few-hundred-row table into
+    several files of several buckets each, instead of one file."""
+    yield from _files_target(spark, "2k")
+
+
+@pytest.fixture
+def tiny_files(spark):
+    """A 128-byte target: nearly every bucket of a small table gets a
+    file of its own, the layout per-file min/max skipping needs when
+    the stats column does not follow the key hash."""
+    yield from _files_target(spark, "128b")
 
 
 def test_tx_upsert_matches_overwrite_sink_semantics(spark, tmp_path):
@@ -117,16 +145,18 @@ def test_tx_concurrent_commit_conflict_retries(spark, tmp_path, monkeypatch):
     assert [h["epoch"] for h in tx_table.history(tx)] == [0, 1, 2]
 
 
-def test_tx_only_affected_buckets_rewritten(spark, tmp_path):
-    """The new manifest must reference untouched buckets' files BY
-    PATH from the previous commit — the copy-on-write contract, now
-    checkable at the metadata level instead of via mtimes."""
+def test_tx_only_affected_buckets_rewritten(spark, tmp_path, small_files):
+    """The new manifest must reference every file that holds no
+    affected bucket BY PATH from the previous commit — the
+    copy-on-write contract, checkable at the metadata level. Only the
+    one file that may hold the upserted key's bucket is rewritten, and
+    its replacement holds the same buckets."""
     tx = str(tmp_path / "tx")
     rows0 = [(f"key{i}", i) for i in range(200)]
     tx_table.upsert(spark, tx, _batch(spark, rows0), ["k"], n_buckets=16,
                     order_col="v", epoch_id=0)
     m0 = tx_table.read_manifest(tx, 0)
-    assert len({f["kb"] for f in m0["files"]}) > 4  # keys spread over buckets
+    assert len(m0["files"]) > 2  # the table is packed into several files
 
     tx_table.upsert(spark, tx, _batch(spark, [("key7", 999)]), ["k"], n_buckets=16,
                     order_col="v", epoch_id=1)
@@ -134,11 +164,13 @@ def test_tx_only_affected_buckets_rewritten(spark, tmp_path):
     hit = spark.range(1).select(
         F.pmod(F.xxhash64(F.lit("key7")), F.lit(16)).cast("int").alias("kb")
     ).first().kb
-    old, new = {f["path"]: f["kb"] for f in m0["files"]}, {f["path"]: f["kb"] for f in m1["files"]}
-    carried = set(old) & set(new)
+    old = {f["path"]: set(tx_table._kbs(f)) for f in m0["files"]}
+    new = {f["path"]: set(tx_table._kbs(f)) for f in m1["files"]}
+    dropped = set(old) - set(new)
     fresh = set(new) - set(old)
-    assert {new[p] for p in fresh} == {hit}  # only the hit bucket got new files
-    assert {old[p] for p in set(old) - carried} == {hit}  # only its old files dropped
+    assert [hit in old[p] for p in dropped] == [True]  # only hit's file rewritten
+    assert {p for p in old if hit not in old[p]} <= set(new)  # the rest by path
+    assert set().union(*(new[p] for p in fresh)) == old[dropped.pop()]
     got = _content(spark, tx)
     assert ("key7", 999) in got and len(got) == 200
 
@@ -220,9 +252,10 @@ def test_tx_compact_preserves_content_and_epochs(spark, tmp_path):
     assert _content(spark, tx) == FINAL
 
 
-def test_tx_bucket_pruned_point_lookup(spark, tmp_path):
+def test_tx_bucket_pruned_point_lookup(spark, tmp_path, small_files):
     """Manifest-level pruning: a point lookup resolves the key's
-    bucket on the driver and reads only that bucket's files."""
+    bucket on the driver, scans only the files that may hold it, and
+    returns exactly that bucket's rows."""
     tx = str(tmp_path / "tx")
     rows0 = [(f"key{i}", i) for i in range(200)]
     tx_table.upsert(spark, tx, _batch(spark, rows0), ["k"], n_buckets=16,
@@ -233,9 +266,15 @@ def test_tx_bucket_pruned_point_lookup(spark, tmp_path):
     df = tx_table.read_table(spark, tx, buckets=[hit])
     got = {(r.k, r.v) for r in df.filter(F.col("k") == "key7").select("k", "v").collect()}
     assert got == {("key7", 7)}
-    # the pruned frame scans a strict subset of the table's files
+    # the pruned frame scans a strict subset of the table's files ...
     m = tx_table.read_manifest(tx, 0)
-    assert 0 < len([f for f in m["files"] if f["kb"] == hit]) < len(m["files"])
+    holding = [f["path"] for f in m["files"] if hit in tx_table._kbs(f)]
+    assert 0 < len(holding) < len(m["files"])
+    assert sorted(p.split("/data/")[-1] for p in df.inputFiles()) == sorted(holding)
+    # ... and keeps only the requested bucket's rows of those files
+    assert {r.kb for r in df.select("kb").distinct().collect()} == {hit}
+    in_hit = F.pmod(F.xxhash64("k"), F.lit(16)) == hit
+    assert df.count() == _batch(spark, rows0).filter(in_hit).count() > 0
 
 
 def test_tx_foreachbatch_stream_matches_batch(spark, tmp_path):
@@ -307,12 +346,12 @@ def test_pipeline_atomic_sink_matches_batch(spark, sf_small, tmp_path):
     assert [h["epoch"] for h in hist] == sorted(h["epoch"] for h in hist)
 
 
-def test_tx_file_stats_and_data_skipping(spark, tmp_path):
+def test_tx_file_stats_and_data_skipping(spark, tmp_path, tiny_files):
     """With stats_cols set, every new file entry carries min/max and
     read_table(between=...) provably skips non-overlapping files while
     still returning a superset of the matching rows."""
     tx = str(tmp_path / "tx")
-    # v values cluster per key so per-bucket files get distinct ranges
+    # few rows per file, so files get distinct v ranges
     rows = [(f"key{i}", i * 10) for i in range(64)]
     tx_table.upsert(spark, tx, _batch(spark, rows), ["k"], n_buckets=16,
                     order_col="v", epoch_id=0, stats_cols=["v"])
@@ -393,10 +432,10 @@ def test_tx_additive_schema_evolution(spark, tmp_path):
     assert "src" in tx_table.read_table(spark, tx, version=v).columns
 
 
-def test_tx_delete_removes_keys_atomically(spark, tmp_path):
-    """Keyed DELETE: matching rows vanish in one commit, untouched
-    buckets carry over by path, replay is exactly-once, and the
-    deleted state is a time-travelable version."""
+def test_tx_delete_removes_keys_atomically(spark, tmp_path, tiny_files):
+    """Keyed DELETE: matching rows vanish in one commit, files holding
+    no deleted key's bucket carry over by path, replay is exactly-once,
+    and the deleted state is a time-travelable version."""
     tx = str(tmp_path / "tx")
     rows0 = [(f"key{i}", i) for i in range(40)]
     tx_table.upsert(spark, tx, _batch(spark, rows0), ["k"], n_buckets=8,
@@ -413,7 +452,7 @@ def test_tx_delete_removes_keys_atomically(spark, tmp_path):
     assert tx_table.delete(spark, tx, keys, epoch_id=1) == v
     assert tx_table.latest_version(tx) == v
 
-    # untouched buckets were not rewritten
+    # files holding no touched bucket were not rewritten
     m1 = tx_table.read_manifest(tx, 1)
     hit = {
         r.kb
@@ -421,8 +460,8 @@ def test_tx_delete_removes_keys_atomically(spark, tmp_path):
         .select(F.pmod(F.xxhash64("k"), F.lit(8)).cast("int").alias("kb"))
         .collect()
     }
-    old_paths = {f["path"] for f in m0["files"] if f["kb"] not in hit}
-    assert old_paths <= {f["path"] for f in m1["files"]}
+    old_paths = {f["path"] for f in m0["files"] if not hit & set(tx_table._kbs(f))}
+    assert old_paths and old_paths <= {f["path"] for f in m1["files"]}
     assert m1["op"] == "delete"
 
     # time travel still sees the pre-delete table
@@ -442,7 +481,7 @@ def test_tx_delete_key_column_mismatch_fails(spark, tmp_path):
         tx_table.delete(spark, tx, spark.createDataFrame([(1,)], "wrong int"))
 
 
-def test_tx_delete_where_with_file_skipping(spark, tmp_path):
+def test_tx_delete_where_with_file_skipping(spark, tmp_path, tiny_files):
     """Predicate delete prunes candidate files via min/max stats and
     rewrites ONLY them; files whose range can't match carry over by
     path untouched, and the result is exact."""
@@ -749,7 +788,7 @@ def test_tx_schema_gate_holds_on_empty_buckets(spark, tmp_path):
                     epoch_id=1, merge_schema=True)
     # find a key hashing to a bucket with no files
     probe = spark.createDataFrame([(f"p{i}",) for i in range(200)], "k string")
-    used = {f["kb"] for f in tx_table.read_manifest(tx, 1)["files"]}
+    used = {kb for f in tx_table.read_manifest(tx, 1)["files"] for kb in tx_table._kbs(f)}
     empt = probe.select(
         "k", F.pmod(F.xxhash64("k"), F.lit(64)).cast("int").alias("kb")
     ).filter(~F.col("kb").isin(*used)).first()
@@ -1025,10 +1064,29 @@ def _buckets_of(spark, keys, n_buckets):
     }
 
 
-def _fresh_files(tx, v_old, v_new):
-    """Manifest entries that entered the table at ``v_new``."""
-    old = {f["path"] for f in tx_table.read_manifest(tx, v_old)["files"]}
-    return [f for f in tx_table.read_manifest(tx, v_new)["files"] if f["path"] not in old]
+def _packed_commit(tx, v_old, v_new, touched):
+    """Check one commit against the packed layout and return the
+    files it wrote. A file is rewritten iff it may hold a touched
+    bucket, every other file carries over by path, and the fresh files
+    form write groups: files of one group share its buckets, groups
+    are disjoint, and together they cover only rewritten buckets."""
+    old = tx_table.read_manifest(tx, v_old)["files"]
+    new = tx_table.read_manifest(tx, v_new)["files"]
+    new_paths = {f["path"] for f in new}
+    old_paths = {f["path"] for f in old}
+    for f in old:
+        assert (f["path"] not in new_paths) == bool(touched & set(tx_table._kbs(f))), f
+    fresh = [f for f in new if f["path"] not in old_paths]
+    groups = {tuple(f["kbs"]) for f in fresh}
+    covered = [kb for g in groups for kb in g]
+    assert len(covered) == len(set(covered))  # groups are disjoint
+    rewritten = set(touched).union(
+        *(tx_table._kbs(f) for f in old if f["path"] not in new_paths)
+    )
+    assert set(covered) <= rewritten
+    assert all(f["size"] == os.path.getsize(os.path.join(tx, "data", f["path"]))
+               for f in fresh)
+    return fresh
 
 
 def _last_write_plan_tree(spark) -> str:
@@ -1044,17 +1102,24 @@ def _last_write_plan_tree(spark) -> str:
     raise AssertionError("no file-writing SQL execution recorded")
 
 
-def test_tx_upsert_commit_is_one_sized_shuffle(spark, tmp_path):
-    """An upsert touching k of n buckets writes exactly k files, runs
-    its write stage with min(k, defaultParallelism) tasks, and its
-    executed write plan has ONE exchange: the bucket repartition that
-    the last-writer-wins window and the partitioned write share."""
-    import re
+def _group_jobs(sc, group):
+    """(job ids, job descriptions) Spark ran under a job group."""
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    store = sc._jsc.sc().statusStore()
+    descs = [store.job(j).description() for j in jobs]
+    return jobs, [d.get() for d in descs if d.isDefined()]
 
+
+def test_tx_upsert_commit_is_one_sized_shuffle(spark, tmp_path, small_files):
+    """An upsert writes exactly one file per write group, runs its
+    write stage with min(groups, defaultParallelism) tasks, and its
+    executed write plan has ONE exchange: the group repartition that
+    the last-writer-wins window and the partitioned write share."""
     tx = str(tmp_path / "tx")
     n = 16
     tx_table.upsert(spark, tx, _batch(spark, [(f"key{i}", i) for i in range(200)]),
                     ["k"], n_buckets=n, order_col="v", epoch_id=0)
+    assert len(tx_table.read_manifest(tx, 0)["files"]) > 2
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     for epoch, keys in enumerate([["key7"], [f"key{i}" for i in range(0, 200, 7)]], 1):
@@ -1066,25 +1131,62 @@ def test_tx_upsert_commit_is_one_sized_shuffle(spark, tmp_path):
                                 ["k"], n_buckets=n, order_col="v", epoch_id=epoch)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        fresh = _fresh_files(tx, v - 1, v)
-        assert len(fresh) == len(touched)
-        assert {f["kb"] for f in fresh} == touched
+        fresh = _packed_commit(tx, v - 1, v, touched)
+        groups = {tuple(f["kbs"]) for f in fresh}
+        assert len(fresh) == len(groups)  # one file per write group
         # the write is the commit's last stage
-        stages = [s for j in tracker.getJobIdsForGroup(group)
-                  for s in tracker.getJobInfo(j).stageIds]
+        jobs, _ = _group_jobs(sc, group)
+        stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
         write = tracker.getStageInfo(max(stages))
-        want = min(len(touched), sc.defaultParallelism)
+        want = min(len(groups), sc.defaultParallelism)
         assert write.numTasks == write.numCompletedTasks == want
         tree = _last_write_plan_tree(spark)
         assert len(re.findall(r"(?<![A-Za-z])Exchange \(", tree)) == 1, tree
+    assert len(groups) > 1  # the wide commit packed into several files
     got = dict(_content(spark, tx))
     assert len(got) == 200 and got["key7"] == 1000 and got["key1"] == 1
 
 
-def test_tx_cow_writers_write_one_file_per_touched_bucket(spark, tmp_path):
+def test_tx_wide_upsert_writes_one_file_read_without_listing_job(spark, tmp_path):
+    """A small upsert that touches most of a 64-bucket table's buckets
+    packs them all into ONE file (one bucket per file would have made
+    it dozens), and the next commit reads that file without Spark's
+    distributed "Listing leaf files" job, which a read of more than
+    ``parallelPartitionDiscovery.threshold`` (32) paths runs."""
+    tx = str(tmp_path / "tx")
+    n = 64
+    keys = [f"key{i}" for i in range(300)]
+    touched = _buckets_of(spark, keys, n)
+    assert len(touched) >= 40
+    tx_table.upsert(spark, tx, _batch(spark, [(k, 1) for k in keys]), ["k"],
+                    n_buckets=n, order_col="v", epoch_id=0)
+    (only,) = tx_table.read_manifest(tx, 0)["files"]
+    assert only["kbs"] == sorted(touched)
+
+    sc = spark.sparkContext
+    group = f"tx-listing-{tmp_path.name}"
+    sc.setJobGroup(group, "tx wide commit")
+    try:
+        tx_table.upsert(spark, tx, _batch(spark, [(k, 2) for k in keys[::5]]), ["k"],
+                        n_buckets=n, order_col="v", epoch_id=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs, descs = _group_jobs(sc, group)
+    assert jobs
+    assert not [d for d in descs if d.startswith("Listing leaf files")], descs
+    assert len(tx_table.read_manifest(tx, 1)["files"]) == 1
+    # the production single-group commit is one exchange too
+    tree = _last_write_plan_tree(spark)
+    assert len(re.findall(r"(?<![A-Za-z])Exchange \(", tree)) == 1, tree
+    got = dict(_content(spark, tx))
+    assert len(got) == 300 and got["key0"] == 2 and got["key1"] == 1
+
+
+def test_tx_cow_writers_write_one_file_per_write_group(spark, tmp_path, small_files):
     """delete (cow), delete_where, update_where and merge size their
-    write the same way: every bucket they rewrite gets exactly one
-    file, whatever the core count."""
+    write the same way: they rewrite exactly the files that may hold a
+    bucket they touch, and write one file per write group, whatever
+    the core count."""
     tx = str(tmp_path / "tx")
     n = 16
     tx_table.upsert(spark, tx, _batch(spark, [(f"key{i}", i) for i in range(200)]),
@@ -1094,8 +1196,8 @@ def test_tx_cow_writers_write_one_file_per_touched_bucket(spark, tmp_path):
     def commit(op, touched):
         v_old = tx_table.latest_version(tx)
         v = op()
-        fresh = _fresh_files(tx, v_old, v)
-        assert sorted(f["kb"] for f in fresh) == sorted(touched), v
+        fresh = _packed_commit(tx, v_old, v, touched)
+        assert len(fresh) == len({tuple(f["kbs"]) for f in fresh}), v
 
     dead = ["key3", "key50", "key121"]
     commit(lambda: tx_table.delete(
@@ -1112,3 +1214,118 @@ def test_tx_cow_writers_write_one_file_per_touched_bucket(spark, tmp_path):
     got = dict(_content(spark, tx))
     assert "key3" not in got and "key10" not in got
     assert got["key5"] == -1 and got["key500"] == -1 and got["key1"] == 2
+
+
+def test_tx_pack_buckets_contiguous_groups_by_size():
+    """The write-group rule: ceil(total / target) groups (at least one,
+    at most one per bucket), each a contiguous run of bucket ids, with
+    any bucket bigger than the target in a group of its own."""
+    pack = tx_table._pack_buckets
+    assert pack({kb: 10.0 for kb in range(64)}, 1000) == [list(range(64))]
+    groups = pack({kb: 100.0 for kb in range(64)}, 1000)
+    assert len(groups) == 7  # ceil(6400 / 1000)
+    assert [kb for g in groups for kb in g] == list(range(64))
+    assert all(100 * len(g) <= 1000 for g in groups)
+    assert pack({0: 30.0, 1: 5000.0, 2: 30.0}, 1000) == [[0], [1], [2]]
+    assert pack({3: 1e9, 9: 1e9}, 10) == [[3], [9]]  # never more groups than buckets
+    assert pack({2: 1.0, 7: 1.0, 40: 1.0}, 10) == [[2, 7, 40]]
+
+
+def _legacy_files(spark, tx, version, rows, n_buckets):
+    """Write ``rows`` ((k, v, _epoch) tuples) in the per-bucket layout
+    tables had before files were packed — one directory and one file
+    per bucket, ``txn-<version>-<id>/b<kb>/`` — and return its manifest
+    entries, which carry a single ``kb`` and no ``kbs`` or ``size``."""
+    rel = f"txn-{version:010d}-00000000"
+    out = os.path.join(tx, "data", rel)
+    df = spark.createDataFrame(rows, "k string, v int, _epoch int").withColumn(
+        "kb", F.pmod(F.xxhash64("k"), F.lit(n_buckets)).cast("int")
+    )
+    df.withColumn("_kb_part", F.col("kb")).write.partitionBy("_kb_part").parquet(out)
+    entries = []
+    for d in sorted(os.listdir(out)):
+        if d.startswith("_kb_part="):
+            kb = int(d.split("=", 1)[1])
+            os.rename(os.path.join(out, d), os.path.join(out, f"b{kb:05d}"))
+            entries += [{"path": f"{rel}/b{kb:05d}/{name}", "kb": kb}
+                        for name in sorted(os.listdir(os.path.join(out, f"b{kb:05d}")))
+                        if name.endswith(".parquet")]
+    return entries, df.schema.json()
+
+
+def test_tx_per_bucket_manifests_stay_readable_and_writable(spark, tmp_path):
+    """A table whose manifests list one file per bucket (entries with
+    only ``kb``, as written before files were packed) is read and
+    rewritten as it is, with no migration: upsert, delete, merge,
+    update_where, read_changes, compact and time travel all match the
+    last-writer-wins reference, and the next commit writes packed
+    ``kbs`` entries while carrying untouched per-bucket files by path."""
+    tx, ref = str(tmp_path / "tx"), str(tmp_path / "ref")
+    n = 8
+    epochs = [
+        [(f"key{i}", i) for i in range(40)],
+        [("key3", 300), ("key17", 1700), ("new1", 1)],
+        [("key5", 500), ("key3", 301), ("new2", 2)],
+    ]
+    sink = upsert_parquet(ref, ["k"], order_col="v")
+    bucket = {
+        r.k: r.kb
+        for r in _batch(spark, epochs[0] + epochs[1])
+        .select("k", F.pmod(F.xxhash64("k"), F.lit(n)).cast("int").alias("kb"))
+        .collect()
+    }
+    state: dict[str, tuple[int, int]] = {}
+    for epoch, rows in enumerate(epochs[:2]):
+        sink(_batch(spark, rows), epoch)
+        state.update({k: (v, epoch) for k, v in rows})
+        touched = {bucket[k] for k, _ in rows}
+        prev = [] if epoch == 0 else tx_table.read_manifest(tx, epoch - 1)["files"]
+        files, schema = _legacy_files(
+            spark, tx, epoch,
+            [(k, v, e) for k, (v, e) in state.items() if bucket[k] in touched], n,
+        )
+        tx_table._commit(tx, epoch, {
+            "version": epoch, "op": "upsert", "epoch": epoch, "eff_epoch": epoch,
+            "app_id": None, "epochs": {"_default": list(range(epoch + 1))},
+            "max_epoch": epoch, "key_cols": ["k"], "n_buckets": n, "stats_cols": None,
+            "schema": schema, "files": [f for f in prev if f["kb"] not in touched] + files,
+        })
+    v1 = {(k, v) for k, (v, _) in state.items()}
+    assert all("kbs" not in f for f in tx_table.read_manifest(tx, 1)["files"])
+    assert _content(spark, tx, version=0) == set(epochs[0])
+    assert _content(spark, tx, version=1) == v1
+
+    sink(_batch(spark, epochs[2]), 2)
+    v = tx_table.upsert(spark, tx, _batch(spark, epochs[2]), ["k"], n_buckets=n,
+                        order_col="v", epoch_id=2)
+    want = {(r.k, r.v) for r in spark.read.parquet(ref).select("k", "v").collect()}
+    assert _content(spark, tx) == want
+    touched = _buckets_of(spark, [k for k, _ in epochs[2]], n)
+    fresh = _packed_commit(tx, v - 1, v, touched)
+    assert fresh and all("kb" not in f and f["kbs"] for f in fresh)
+    carried = [f for f in tx_table.read_manifest(tx, v)["files"] if "kb" in f]
+    assert carried and all(f["kb"] not in touched for f in carried)
+    changes = {(r.k, r.v, r._change_type)
+               for r in tx_table.read_changes(spark, tx, v).select("k", "v", "_change_type")
+               .collect()}
+    assert changes == {
+        ("key5", 5, "update_preimage"), ("key5", 500, "update_postimage"),
+        ("key3", 300, "update_preimage"), ("key3", 301, "update_postimage"),
+        ("new2", 2, "insert"),
+    }
+
+    got = dict(want)
+    tx_table.delete(spark, tx, spark.createDataFrame([("key9",), ("key30",)], "k string"))
+    del got["key9"], got["key30"]
+    assert dict(_content(spark, tx)) == got
+    tx_table.merge(spark, tx, _batch(spark, [("key11", -11), ("new3", 3)]),
+                   when_matched_update={"v": F.col("_src_v")})
+    got.update({"key11": -11, "new3": 3})
+    assert dict(_content(spark, tx)) == got
+    tx_table.update_where(spark, tx, F.col("v") < 10, {"v": F.col("v") + 1000})
+    got = {k: (x + 1000 if x < 10 else x) for k, x in got.items()}
+    assert dict(_content(spark, tx)) == got
+    v = tx_table.compact(spark, tx)
+    assert all("kbs" in f for f in tx_table.read_manifest(tx, v)["files"])
+    assert dict(_content(spark, tx)) == got
+    assert _content(spark, tx, version=1) == v1  # legacy versions still time-travel
