@@ -72,9 +72,7 @@ def table_rows_metadata(sf_dir: str, name: str) -> int:
     data scan (r8 ADVICE: q_image_dedup_pairs ran an eager
     docs.count() at plan-construction time just to pick a candidate
     scheme, a full-scan job landing inside bench timing). Footers are
-    O(files), not O(bytes): at 100 TB this is a metadata listing, and
-    scale callers can still bypass it by passing the scheme
-    explicitly."""
+    O(files), not O(bytes): at 100 TB this is a metadata listing."""
     import pyarrow.parquet as pq
 
     path = table_path(sf_dir, name)
@@ -213,8 +211,7 @@ def _freshness_token(path: str) -> tuple:
 
 def clear_load_memo() -> None:
     """Escape hatch for harnesses that rewrite a table in place under
-    a path already loaded this process (mirrors
-    plans.llmdata.clear_ngram_route_cache)."""
+    a path already loaded this process."""
     _LOAD_MEMO.clear()
 
 

@@ -428,10 +428,9 @@ def _capped_bucket_lists(
     (dropped_buckets / max_bucket_seen) are computed from size(xs) and
     match the pre-size route's values exactly; results are identical
     (parity pinned in tests/test_scale_guards.py::
-    test_bucket_presize_routes_agree). Callers resolve the
-    route once per (process, corpus) from parquet footers
-    (plans.llmdata.resolved_bucket_presize) so query and oracle can
-    never straddle it mid-verify.
+    test_bucket_presize_routes_agree). Callers pick the route from
+    parquet footer row counts when the plan is built
+    (plans.llmdata.ngram_lsh_scale).
     """
     if not presize:
         grp = rows.groupBy(*keys).agg(

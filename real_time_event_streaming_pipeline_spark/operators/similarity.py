@@ -562,8 +562,8 @@ def scaled_cell_count(n: int) -> int:
     soak measured directly (per-cell population grows linearly with n,
     the per-cell GEMM quadratically). The 16384 cap bounds the
     driver-side Lloyd sample at 16·16384 = 262k rows (~134 MB at
-    dim 64, binding only past ~4.2M vectors — past THAT, switch
-    kmeans='aggs' and shard the index)."""
+    dim 64, binding only past ~4.2M vectors — past THAT, shard the
+    index)."""
     return int(min(16384, max(64, n // 256)))
 
 
@@ -631,8 +631,7 @@ def neardup_pairs_ivf_candidates(
     (exp 1.57/1.44 sf10→sf30) exactly as this docstring predicts for
     a fixed count. The new cap (≈4.2M vectors before it binds)
     bounds the driver-side Lloyd sample at 16·16384 = 262k rows
-    (~134 MB at dim 64) — past THAT, switch kmeans='aggs' and shard
-    the index."""
+    (~134 MB at dim 64) — past THAT, shard the index."""
     if cents is None:
         if n_centroids is None:
             # callers that already counted the corpus (the calibrated
@@ -1027,7 +1026,6 @@ def sample_centroids(
     sample_size: int | None = None,
     iters: int = 3,
     seed: int = 76923,
-    kmeans: str = "driver",
     order: str = "xxhash64",
     n_rows: int | None = None,
 ) -> list[tuple[int, list[float]]]:
@@ -1040,172 +1038,122 @@ def sample_centroids(
     — the right objective under the dot-product cell assignment,
     since the corpus vectors are unit-norm).
 
-    ``kmeans`` picks where the Lloyd rounds run:
-    - "driver" (default): numpy over the collected sample. The sample
-      is a BOUNDED artifact by construction (sample_size × dim
-      floats; the same contract as train_pq_codebooks), TakeOrdered
-      returns it in a total order, and fixed-order float64 numpy is
-      deterministic — and ~free, where per-round Spark jobs cost
-      ~1 s of scheduling each (measured: 3 agg rounds tripled
-      llm_semdedup's sf0.1 time).
-    - "aggs": each round as DataFrame aggregations — assignment
-      through the same JVM-literal nearest_cells fold the index uses,
-      means as integer-scaled int64 sums (shuffle merge order can
-      never flip a float bit). The path for a sample too large to
-      collect; only n_centroids × dim aggregate rows reach the
-      driver per round.
+    The Lloyd rounds run in numpy over the collected sample. The
+    sample is a BOUNDED artifact by construction (sample_size × dim
+    floats; the same contract as train_pq_codebooks), TakeOrdered
+    returns it in a total order, and fixed-order float64 numpy is
+    deterministic — and ~free, where per-round Spark jobs cost ~1 s
+    of scheduling each (measured: 3 agg rounds tripled llm_semdedup's
+    sf0.1 time).
 
     The returned centroid list is the index's immutable contract:
     cell assignment of any vector, whenever it arrives, depends only
     on this list. ``iters=0`` degrades to the plain sampled seed
     set."""
-    if kmeans not in ("driver", "aggs"):
-        raise ValueError(f"kmeans must be 'driver' or 'aggs', got {kmeans!r}")
     if sample_size is None:
         sample_size = lloyd_sample_size(n_centroids)
-    samp_df = (
-        _hash_ordered(emb, id_col, seed, order=order)
-        .limit(int(sample_size))
-        .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
-    )
-    if kmeans == "driver":
-        if sample_size >= 4096 and n_rows is not None and n_rows >= 4 * sample_size:
-            # r11 threshold fast path: the top-S rows by a UNIFORM
-            # hash all sit below the ~S/n quantile of the key space,
-            # so a pre-filter at 2.5× that quantile keeps ~2.5·S rows
-            # w.h.p. (binomial, mean 2.5·S — the uniformity of both
-            # hash families is distribution-pinned in
-            # tests/test_estimator_pins.py) and ONE scan collects
-            # (key, id, vec) for just those rows; the total ordering
-            # finishes driver-side over the ~2.5·S survivors. Same
-            # set, same (hash, id) order as the TakeOrdered — the
-            # threshold only prunes rows that cannot be in the top-S,
-            # and the explicit length check falls back to the skinny
-            # path in the astronomically-unlikely undershoot. n_rows
-            # is a HINT (footer count): a stale value cannot change
-            # the sample, only the prune efficiency.
-            if order == "md5h60":
-                key = F.conv(
-                    F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
-                ).cast("long")
-                thr = int(min(1.0, 2.5 * sample_size / n_rows) * (1 << 60))
-            else:
-                key = F.xxhash64(F.col(id_col), F.lit(int(seed)))
-                thr = -(1 << 63) + int(
-                    min(1.0, 2.5 * sample_size / n_rows) * (1 << 64)
-                )
-            cand = (
-                emb.select(
-                    key.alias("_k"),
-                    F.col(id_col).alias("_id"),
-                    F.col(vec_col).alias("_vec"),
-                )
-                .filter(F.col("_k") < thr)
-                .collect()  # bounded: ~2.5·sample_size rows w.h.p.
-            )
-            if len(cand) >= sample_size:
-                cand.sort(key=lambda r: (r["_k"], r["_id"]))
-                rows = cand[: int(sample_size)]
-                if len(rows) < n_centroids:
-                    raise ValueError(
-                        f"centroid training needs >= n_centroids vectors: "
-                        f"got {len(rows)} < {n_centroids}"
-                    )
-                X = np.array([list(r["_vec"]) for r in rows], dtype=np.float64)
-                C = _lloyd_spherical(X, n_centroids, iters)
-                return [(i, [float(x) for x in C[i]]) for i in range(n_centroids)]
-        if sample_size >= 4096:
-            # r11: skinny TakeOrdered for big samples. The naive
-            # orderBy(hash).limit(S) carries the FULL row (vector
-            # payload) through every partition's top-S heap and the
-            # driver merge of partitions×S rows — measured 7.1 s of
-            # the sf30 IVF face for a 37.5k-row sample of 600k
-            # vectors. The hash key is a function of the id alone, so
-            # the ordering runs over an id-only projection (parquet
-            # reads one column; the heap rows are 8 bytes), and the
-            # vectors are fetched afterwards with one broadcast join
-            # on the sampled ids, reordered driver-side to the exact
-            # (hash, id) order — SAME set, SAME order, bit-identical
-            # sample matrix (the DuckDB twin portable_sample_matrix
-            # is unchanged). Precondition: unique ids (the
-            # assign_cells_kernel contract) — a duplicated id would
-            # fan the fetch join.
-            ids_ordered = [
-                r[0]
-                for r in _hash_ordered(
-                    emb.select(F.col(id_col)), id_col, seed, order=order
-                )
-                .limit(int(sample_size))
-                .collect()
-            ]
-            if len(ids_ordered) < n_centroids:
-                raise ValueError(
-                    f"centroid training needs >= n_centroids vectors: "
-                    f"got {len(ids_ordered)} < {n_centroids}"
-                )
-            spark = emb.sparkSession
-            ids_df = spark.createDataFrame(
-                [(i,) for i in ids_ordered], emb.select(F.col(id_col)).schema
-            )
-            fetched = {
-                r["_id"]: r["_vec"]
-                for r in emb.join(F.broadcast(ids_df), id_col)
-                .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
-                .collect()  # bounded: sample_size rows
-            }
-            X = np.array(
-                [list(fetched[i]) for i in ids_ordered], dtype=np.float64
-            )
+    if sample_size >= 4096 and n_rows is not None and n_rows >= 4 * sample_size:
+        # r11 threshold fast path: the top-S rows by a UNIFORM
+        # hash all sit below the ~S/n quantile of the key space,
+        # so a pre-filter at 2.5× that quantile keeps ~2.5·S rows
+        # w.h.p. (binomial, mean 2.5·S — the uniformity of both
+        # hash families is distribution-pinned in
+        # tests/test_estimator_pins.py) and ONE scan collects
+        # (key, id, vec) for just those rows; the total ordering
+        # finishes driver-side over the ~2.5·S survivors. Same
+        # set, same (hash, id) order as the TakeOrdered — the
+        # threshold only prunes rows that cannot be in the top-S,
+        # and the explicit length check falls back to the skinny
+        # path in the astronomically-unlikely undershoot. n_rows
+        # is a HINT (footer count): a stale value cannot change
+        # the sample, only the prune efficiency.
+        if order == "md5h60":
+            key = F.conv(
+                F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
+            ).cast("long")
+            thr = int(min(1.0, 2.5 * sample_size / n_rows) * (1 << 60))
         else:
-            rows = samp_df.collect()  # bounded: sample_size rows, total order
+            key = F.xxhash64(F.col(id_col), F.lit(int(seed)))
+            thr = -(1 << 63) + int(
+                min(1.0, 2.5 * sample_size / n_rows) * (1 << 64)
+            )
+        cand = (
+            emb.select(
+                key.alias("_k"),
+                F.col(id_col).alias("_id"),
+                F.col(vec_col).alias("_vec"),
+            )
+            .filter(F.col("_k") < thr)
+            .collect()  # bounded: ~2.5·sample_size rows w.h.p.
+        )
+        if len(cand) >= sample_size:
+            cand.sort(key=lambda r: (r["_k"], r["_id"]))
+            rows = cand[: int(sample_size)]
             if len(rows) < n_centroids:
                 raise ValueError(
                     f"centroid training needs >= n_centroids vectors: "
                     f"got {len(rows)} < {n_centroids}"
                 )
             X = np.array([list(r["_vec"]) for r in rows], dtype=np.float64)
-        C = _lloyd_spherical(X, n_centroids, iters)
-        return [(i, [float(x) for x in C[i]]) for i in range(n_centroids)]
-
-    samp = samp_df.persist()
-    try:
-        init = samp.limit(n_centroids).collect()  # bounded: k rows
-        if len(init) < n_centroids:
+            C = _lloyd_spherical(X, n_centroids, iters)
+            return [(i, [float(x) for x in C[i]]) for i in range(n_centroids)]
+    if sample_size >= 4096:
+        # r11: skinny TakeOrdered for big samples. The naive
+        # orderBy(hash).limit(S) carries the FULL row (vector
+        # payload) through every partition's top-S heap and the
+        # driver merge of partitions×S rows — measured 7.1 s of
+        # the sf30 IVF face for a 37.5k-row sample of 600k
+        # vectors. The hash key is a function of the id alone, so
+        # the ordering runs over an id-only projection (parquet
+        # reads one column; the heap rows are 8 bytes), and the
+        # vectors are fetched afterwards with one broadcast join
+        # on the sampled ids, reordered driver-side to the exact
+        # (hash, id) order — SAME set, SAME order, bit-identical
+        # sample matrix (the DuckDB twin portable_sample_matrix
+        # is unchanged). Precondition: unique ids (the
+        # assign_cells_kernel contract) — a duplicated id would
+        # fan the fetch join.
+        ids_ordered = [
+            r[0]
+            for r in _hash_ordered(
+                emb.select(F.col(id_col)), id_col, seed, order=order
+            )
+            .limit(int(sample_size))
+            .collect()
+        ]
+        if len(ids_ordered) < n_centroids:
             raise ValueError(
                 f"centroid training needs >= n_centroids vectors: "
-                f"got {len(init)} < {n_centroids}"
+                f"got {len(ids_ordered)} < {n_centroids}"
             )
-        cents = [(i, list(r["_vec"])) for i, r in enumerate(init)]
-        dim = len(cents[0][1])
-        scale = float(1 << 24)  # exact int64 sums: |x|<=1, n<=sample_size
-        for _ in range(max(0, int(iters))):
-            rows = (
-                samp.withColumn(
-                    "cell", nearest_cells("_vec", cents, 1)[0]["cell"]
-                )
-                .select("cell", F.posexplode("_vec").alias("pos", "x"))
-                .groupBy("cell", "pos")
-                .agg(
-                    F.sum(F.round(F.col("x") * scale).cast("long")).alias("s"),
-                    F.count(F.lit(1)).alias("c"),
-                )
-                .collect()  # bounded: n_centroids x dim rows
+        spark = emb.sparkSession
+        ids_df = spark.createDataFrame(
+            [(i,) for i in ids_ordered], emb.select(F.col(id_col)).schema
+        )
+        fetched = {
+            r["_id"]: r["_vec"]
+            for r in emb.join(F.broadcast(ids_df), id_col)
+            .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
+            .collect()  # bounded: sample_size rows
+        }
+        X = np.array(
+            [list(fetched[i]) for i in ids_ordered], dtype=np.float64
+        )
+    else:
+        rows = (
+            _hash_ordered(emb, id_col, seed, order=order)
+            .limit(int(sample_size))
+            .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
+            .collect()  # bounded: sample_size rows, total order
+        )
+        if len(rows) < n_centroids:
+            raise ValueError(
+                f"centroid training needs >= n_centroids vectors: "
+                f"got {len(rows)} < {n_centroids}"
             )
-            acc: dict[int, list[float]] = {}
-            for r in rows:
-                acc.setdefault(r["cell"], [0.0] * dim)[r["pos"]] = r["s"] / r["c"] / scale
-            new = []
-            for cid, old_vec in cents:
-                if cid not in acc:
-                    new.append((cid, old_vec))  # empty cell keeps its seed
-                    continue
-                v = acc[cid]
-                nrm = math.sqrt(sum(x * x for x in v))
-                new.append((cid, [x / nrm for x in v] if nrm > 0 else old_vec))
-            cents = new
-    finally:
-        samp.unpersist()
-    return cents
+        X = np.array([list(r["_vec"]) for r in rows], dtype=np.float64)
+    C = _lloyd_spherical(X, n_centroids, iters)
+    return [(i, [float(x) for x in C[i]]) for i in range(n_centroids)]
 
 
 def assign_cells_kernel(
@@ -1425,7 +1373,6 @@ def ivf_ann_topk(
     order: str = "xxhash64",
     scheme: str = "expr",
     n_rows: int | None = None,
-    n_queries: int | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN — the other mandated scale path besides
     LSH: partition the corpus into Voronoi cells around centroids,
@@ -1481,28 +1428,11 @@ def ivf_ann_topk(
         # large query side) — then the filter costs more than the
         # rows it saves.
         q = q.localCheckpoint(eager=True)  # r13: lazy A/B'd SLOWER on this path (ivf noop 4.30 lazy vs 3.39 eager, interleaved) — keep eager
-        if n_queries is not None:
-            # r14 (r13 verdict #5): when the caller can bound the
-            # query count, the prune gate is decided from the BOUND
-            # (|probed| ≤ n_queries·n_probe, dedup only shrinks it)
-            # and the probed set attaches as a broadcast semi-join —
-            # one driver action (checkpoint) instead of two
-            # (checkpoint, then a distinct().collect() whose ids come
-            # back as an isin literal list). The broadcast build runs
-            # as a plan-internal future, not a blocking py4j round
-            # trip. Same rows: the semi-join keeps exactly the
-            # corpus cells some query probes, as the isin did.
-            if n_queries * n_probe <= n_centroids // 2:
-                probed_df = q.select("cell").distinct()
-                c = c.join(F.broadcast(probed_df), "cell", "leftsemi")
-        else:
-            # unknown query count (generic callers): the r11-r13
-            # collect+isin gate, unchanged — the probed set is a
-            # BOUNDED collect (≤ |queries|·n_probe cell ids, deduped
-            # by distinct)
-            probed = [r["cell"] for r in q.select("cell").distinct().collect()]
-            if len(probed) <= n_centroids // 2:
-                c = c.filter(F.col("cell").isin(probed))
+        # the probed set is a BOUNDED collect (≤ |queries|·n_probe
+        # cell ids, deduped by distinct)
+        probed = [r["cell"] for r in q.select("cell").distinct().collect()]
+        if len(probed) <= n_centroids // 2:
+            c = c.filter(F.col("cell").isin(probed))
         return _grouped_gemm_topk(c.unionByName(q), "cell", k)
     assert scheme == "expr", scheme
 
@@ -1876,7 +1806,6 @@ def lsh_ann_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_rows: int | None = None,
-    n_queries: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: bucket corpus by LSH signature, probe each
     query's own bucket plus all buckets within hamming distance
@@ -1934,15 +1863,7 @@ def lsh_ann_topk(
         # the pandas-UDF lsh_signature_kernel, not the literal-folded
         # expression. Result-identity, not plan byte-identity.)
         q = q.localCheckpoint(eager=True)  # r13: lazy A/B'd SLOWER on this family (lsh noop 1.35 lazy vs 1.17 eager; ivf 4.30 vs 3.39, interleaved) — keep eager
-        if n_queries is not None:
-            # r14 (r13 verdict #5): bound-gated broadcast semi-join —
-            # same mechanism as ivf_ann_topk; |probed| ≤
-            # n_queries·|masks|, so the gate needs no driver collect
-            if n_queries * len(masks) <= (1 << n_planes) // 2:
-                probed_df = q.select("bucket").distinct()
-                c = c.join(F.broadcast(probed_df), "bucket", "leftsemi")
-        else:
-            probed = [r["bucket"] for r in q.select("bucket").distinct().collect()]
-            if len(probed) <= (1 << n_planes) // 2:
-                c = c.filter(F.col("bucket").isin(probed))
+        probed = [r["bucket"] for r in q.select("bucket").distinct().collect()]
+        if len(probed) <= (1 << n_planes) // 2:
+            c = c.filter(F.col("bucket").isin(probed))
     return _grouped_gemm_topk(c.unionByName(q), "bucket", k, dedup=True)

@@ -140,7 +140,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-saturation counters.
 
     r12: at/above the shared presize switch (~20k docs, the
-    resolved_bucket_presize route also used by the minhash/simhash
+    llmdata.ngram_lsh_scale predicate also used by the minhash/simhash
     faces) the cap is applied BEFORE the per-split lists materialize —
     the r12 curation soak caught this face repeating the minhash
     cap-then-collect cliff (a closed-vocabulary shingle's tr/te lists
@@ -158,12 +158,12 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     (parity pinned in tests/test_llmdata.py). Both routes drop the
     middle 80-90 bucket band before the shuffle (those rows feed
     neither list)."""
-    from .llmdata import resolved_bucket_presize
+    from .llmdata import ngram_lsh_scale
 
     sh, sizes = _contamination_shingle_counts(spark, sf_dir)
     tr_of = F.collect_list(F.when(F.col("_b") < 80, F.col("doc_id"))).alias("tr")
     te_of = F.collect_list(F.when(F.col("_b") >= 90, F.col("doc_id"))).alias("te")
-    if resolved_bucket_presize(sf_dir):
+    if ngram_lsh_scale(sf_dir):
         kept = sizes.filter(
             (F.col("_ntr") >= 1) & (F.col("_ntr") <= _CONTAM_MAX_DF)
             & (F.col("_nte") >= 1) & (F.col("_nte") <= _CONTAM_MAX_DF)
@@ -392,9 +392,6 @@ LIMIT 50
 # bound — while a web-scale corpus, N ≥ 1e12 → V̂ ≥ 1.3e8, drops the
 # hint and leans on the AQE skew-split the docstring promises).
 # 5e6 terms ≈ 150 MB broadcast is the practical driver ceiling.
-# Memoized per (process, corpus) so query and oracle can never
-# straddle the route mid-verify (the _route_key discipline).
-_TFIDF_BROADCAST_CACHE: dict[str, bool] = {}
 _TFIDF_MAX_BROADCAST_VOCAB = 5_000_000
 _HEAPS_K, _HEAPS_BETA = 30.0, 0.55
 
@@ -406,23 +403,6 @@ def estimated_vocab(sf_dir: str) -> int:
 
     n_tokens = max(1, table_column_bytes_metadata(sf_dir, "documents", "text") // 5)
     return int(_HEAPS_K * n_tokens**_HEAPS_BETA)
-
-
-def resolved_tfidf_broadcast(
-    sf_dir: str, max_vocab: int = _TFIDF_MAX_BROADCAST_VOCAB
-) -> bool:
-    """True (hint-broadcast the df table) while the Heaps-estimated
-    vocabulary fits the driver; footer-resolved, memoized. max_vocab
-    is part of the memo key — a custom bound must never read a stale
-    default-bound route (r13 review)."""
-    from .llmdata import _route_key
-
-    key = f"{_route_key(sf_dir)}#{int(max_vocab)}"
-    got = _TFIDF_BROADCAST_CACHE.get(key)
-    if got is None:
-        got = estimated_vocab(sf_dir) <= max_vocab
-        _TFIDF_BROADCAST_CACHE[key] = got
-    return got
 
 
 def q_tfidf(
@@ -461,10 +441,10 @@ def q_tfidf(
     # posture). r13: the hint is now ROUTED, not assumed — a corpus
     # whose footer-estimated vocabulary exceeds the driver's broadcast
     # range drops the hint and leans on the AQE-chosen join + skew
-    # split (resolved_tfidf_broadcast above; route parity pinned in
+    # split (_TFIDF_MAX_BROADCAST_VOCAB above; route parity pinned in
     # tests/test_scale_guards.py::test_tfidf_broadcast_routes_agree).
     if df_broadcast is None:
-        df_broadcast = resolved_tfidf_broadcast(sf_dir)
+        df_broadcast = estimated_vocab(sf_dir) <= _TFIDF_MAX_BROADCAST_VOCAB
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     if df_broadcast:
         dfreq = F.broadcast(dfreq)

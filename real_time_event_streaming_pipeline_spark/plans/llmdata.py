@@ -6,10 +6,11 @@ semantics are SQL-expressible.
 The ANN faces (llm_emb_ann_lsh, llm_emb_ann_ivf, llm_emb_ann_pq) are
 BITWISE oracle-checked since r7: the seeded hyperplanes / trained
 centroids are deterministic md5-derived constructions the oracle SQL
-inlines as literals, and the r11 corpus-scaled scheme switches were
-verified on BOTH routes (fixed small-corpus scheme and the scaled
-one) — see resolved_lsh_planes / resolved_ivf_scheme below and
-tests/test_llmdata.py for the exact-ground-truth pins.
+inlines as literals. Every corpus-size route (the n-gram LSH switch,
+the LSH plane count, the IVF cell scheme, the image-dedup candidate
+scheme) is a plain predicate on parquet footer row counts, read when
+the plan is built; tests/test_llmdata.py and tests/test_gif_codec.py
+pin each scaled route against its DuckDB twin or its small-corpus arm.
 
 The MinHash/SimHash family is fully oracle-checked: signatures use the
 md5-derived 60-bit hash (`operators/dedup._h60`), which DuckDB
@@ -19,8 +20,6 @@ SQL (`_minhash_lsh_sql` / `_simhash_pairs_sql`).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -155,85 +154,28 @@ FROM documents GROUP BY md5(text)
 """
 
 
-# Route resolutions memoized per sf_dir for the life of the process
-# (r10 ADVICE #3): the query plan and its oracle callable are built at
-# different times during a verify run, so resolving the corpus-size
-# route independently in each could pick DIFFERENT routes if the
-# corpus is rewritten in between — a spurious verify mismatch with
-# both routes individually correct. One resolution per (process,
-# sf_dir) makes query and oracle structurally route-consistent; a
-# harness that legitimately rewrites a corpus in place must call
-# clear_ngram_route_cache() between generations (tests use unique tmp
-# dirs, so in practice the cache is write-once).
-_NGRAM_ROUTE_CACHE: dict[str, str] = {}
+# Corpus size (``documents`` rows, read from parquet footers when the
+# plan is built — no Spark job) at which the n-gram faces switch from
+# the exact one-shuffle shingle join to MinHash-LSH candidates + exact
+# verification (ngram_jaccard_pairs_lsh — the route for the
+# closed-vocabulary df-cap cliff, r8 verdict #4), and at which the
+# LSH/simhash bucket builders and q_contamination pre-size buckets
+# map-side. Below it the worst bucket is trivially small and the sizing
+# pass is two pure-overhead exchanges (~0.4-0.8 s per face at sf0.1);
+# results and saturation counters are identical either way (parity
+# pinned). sf0.1 (5k docs) stays exact; sf1 (50k) and every soak
+# corpus take the LSH route. A query and its oracle read the same
+# footers, so they take the same route.
+_NGRAM_LSH_SWITCH = 20_000
 
 
-def _route_key(sf_dir: str) -> str:
-    """Canonical memo key for the route caches (r11 ADVICE #4): two
-    spellings of the same directory (trailing slash, relative vs
-    absolute, symlink) must resolve to ONE cache entry, or the
-    query/oracle route-divergence hazard the memo closes reappears
-    between differently-spelled callers."""
-    return os.path.realpath(sf_dir)
+def ngram_lsh_scale(sf_dir: str) -> bool:
+    """True when ``documents`` under ``sf_dir`` has at least
+    _NGRAM_LSH_SWITCH rows (see above)."""
+    return table_rows_metadata(sf_dir, "documents") >= _NGRAM_LSH_SWITCH
 
 
-def resolved_ngram_route(sf_dir: str) -> str:
-    """'lsh' at/above _NGRAM_LSH_SWITCH docs else 'exact' — resolved
-    from parquet footers once per sf_dir and memoized (see above)."""
-    key = _route_key(sf_dir)
-    route = _NGRAM_ROUTE_CACHE.get(key)
-    if route is None:
-        route = (
-            "lsh"
-            if table_rows_metadata(sf_dir, "documents") >= _NGRAM_LSH_SWITCH
-            else "exact"
-        )
-        _NGRAM_ROUTE_CACHE[key] = route
-    return route
-
-
-def clear_ngram_route_cache() -> None:
-    """Escape hatch for harnesses that rewrite a corpus under an
-    sf_dir already routed this process."""
-    _NGRAM_ROUTE_CACHE.clear()
-
-
-# r12 (r11 verdict #1): whether the LSH/simhash bucket builders run
-# the map-side bucket-sizing pass (_capped_bucket_lists presize=True)
-# or the legacy collect-then-filter shape. The sizing pass exists to
-# bound aggregation buffers BEFORE materialization — load-bearing
-# only when a bucket could outgrow one reducer's memory, which a
-# corpus of n docs bounds at n structs; below the same ~20k-doc bound
-# the ngram route already uses, the worst bucket is trivially small
-# and the pass is two pure-overhead exchanges (~0.4-0.8 s/face at
-# sf0.1 — the r11 bench regression). Results and saturation counters
-# are identical on both routes (parity pinned); memoized per
-# (process, corpus) like the other route caches so query and oracle
-# resolve together.
-_BUCKET_PRESIZE_CACHE: dict[str, bool] = {}
-
-
-def resolved_bucket_presize(sf_dir: str) -> bool:
-    """True (pre-size buckets map-side) at/above _NGRAM_LSH_SWITCH
-    documents, else False — parquet-footer resolved, memoized."""
-    key = _route_key(sf_dir)
-    got = _BUCKET_PRESIZE_CACHE.get(key)
-    if got is None:
-        got = table_rows_metadata(sf_dir, "documents") >= _NGRAM_LSH_SWITCH
-        _BUCKET_PRESIZE_CACHE[key] = got
-    return got
-
-
-def clear_bucket_presize_cache() -> None:
-    """Escape hatch mirroring clear_ngram_route_cache."""
-    _BUCKET_PRESIZE_CACHE.clear()
-
-
-def q_ngram_jaccard(
-    spark: SparkSession,
-    sf_dir: str,
-    pair_method: str | None = None,
-) -> DataFrame:
+def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram Jaccard near-dup pairs, route-switched by corpus size
     exactly like q_dedup_clusters (r9 verdict #5 — this was the one
     registered superlinear face left): below _NGRAM_LSH_SWITCH docs
@@ -243,12 +185,9 @@ def q_ngram_jaccard(
     whose recall loss is the banding-miss bound (negligible at the
     0.5 threshold's planted margins; route parity pinned in
     tests/test_operators.py). The oracle callable switches with the
-    query via the SAME memoized resolution (resolved_ngram_route, r10
-    ADVICE #3), so the face stays bitwise at every sf including soak
-    corpora."""
-    if pair_method is None:
-        pair_method = resolved_ngram_route(sf_dir)
-    gen = D.ngram_jaccard_pairs if pair_method == "exact" else D.ngram_jaccard_pairs_lsh
+    query on the same predicate (ngram_lsh_scale), so the face stays
+    bitwise at every sf including soak corpora."""
+    gen = D.ngram_jaccard_pairs_lsh if ngram_lsh_scale(sf_dir) else D.ngram_jaccard_pairs
     return gen(
         load(spark, sf_dir, "documents"),
         k=3,
@@ -321,12 +260,11 @@ WHERE n_common / (sa.n_sh + sb.n_sh - n_common)::DOUBLE >= 0.5
 def _ngram_jaccard_oracle_sql(sf_dir: str) -> str:
     """Oracle generator: follows q_ngram_jaccard's corpus-size route
     switch (exact pair join below _NGRAM_LSH_SWITCH, LSH candidates +
-    exact verify at/above it) — through the memoized
-    resolved_ngram_route, so query and oracle can never disagree on
-    the route within a process (r10 ADVICE #3)."""
-    if resolved_ngram_route(sf_dir) == "exact":
-        return _NGRAM_JACCARD_SQL
-    return _ngram_jaccard_lsh_sql()
+    exact verify at/above it) through the same ngram_lsh_scale
+    predicate."""
+    if ngram_lsh_scale(sf_dir):
+        return _ngram_jaccard_lsh_sql()
+    return _NGRAM_JACCARD_SQL
 
 
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -345,7 +283,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_dedup_index.py)."""
     return D.minhash_lsh_pairs(
         load(spark, sf_dir, "documents"),
-        presize=resolved_bucket_presize(sf_dir),
+        presize=ngram_lsh_scale(sf_dir),
     )
 
 
@@ -355,7 +293,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the same md5-60bit token hash in SQL."""
     return D.simhash_neardup_pairs(
         load(spark, sf_dir, "documents"),
-        presize=resolved_bucket_presize(sf_dir),
+        presize=ngram_lsh_scale(sf_dir),
     )
 
 
@@ -606,37 +544,6 @@ WHERE round({_cos_sql('a.embedding', 'b.embedding')}, 6) >= 0.45
 """
 
 
-# Corpus-size plane switch for the LSH ANN face (r11, the IVF scheme
-# precedent): below _LSH_SCALED_SWITCH vectors the historical 6-plane
-# face (64 buckets — the r6-r10 oracle shape, plan byte-identical);
-# at/above it scaled_plane_count(n) planes (occupancy ~256) with the
-# probed-bucket corpus pruning. One SQL template serves any plane
-# count. Memoized per (process, sf_dir) like the ngram/IVF routes.
-_LSH_SCALED_SWITCH = 20_000
-_LSH_PLANES_CACHE: dict[str, tuple[str, int]] = {}
-
-
-def resolved_lsh_planes(sf_dir: str) -> tuple[str, int]:
-    """('fixed6', 6) below _LSH_SCALED_SWITCH embedding rows, else
-    ('scaled', scaled_plane_count(n)) — parquet-footer resolved,
-    memoized."""
-    key = _route_key(sf_dir)
-    got = _LSH_PLANES_CACHE.get(key)
-    if got is None:
-        n = table_rows_metadata(sf_dir, "embeddings")
-        if n >= _LSH_SCALED_SWITCH:
-            got = ("scaled", S.scaled_plane_count(n))
-        else:
-            got = ("fixed6", 6)
-        _LSH_PLANES_CACHE[key] = got
-    return got
-
-
-def clear_lsh_planes_cache() -> None:
-    """Escape hatch mirroring clear_ngram_route_cache."""
-    _LSH_PLANES_CACHE.clear()
-
-
 def q_emb_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitwise oracle-checked since r6: the hyperplanes are seeded and
     data-independent, so the SQL twin inlines them as list literals and
@@ -646,19 +553,14 @@ def q_emb_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the deduped candidates. Recall vs brute force additionally
     asserted in tests/test_llmdata.py.
 
-    r11: plane count route-switches by corpus size (resolved_lsh_planes
-    — fixed 6 below 20k vectors, scaled_plane_count(n) above, with the
-    probed-bucket pruning inside lsh_ann_topk); the twin follows the
-    SAME memoized resolution, so the face stays bitwise on both
-    routes."""
+    The plane count scales with the corpus: scaled_plane_count of the
+    footer row count (6 planes up to 16,384 vectors, so every driver
+    sf keeps the historical 6-plane face; more above, with the
+    probed-bucket pruning inside lsh_ann_topk). The twin reads the
+    same footers, so the face stays bitwise at every size."""
     emb = load(spark, sf_dir, "embeddings")
-    _, n_planes = resolved_lsh_planes(sf_dir)
-    return S.lsh_ann_topk(
-        emb, emb.filter(F.col("vec_id") < 5), k=5, n_planes=n_planes,
-        # static query-count bound (vec_id < 5): lets the probed-bucket
-        # prune gate decide without a driver collect (r14)
-        n_queries=5,
-    )
+    n_planes = S.scaled_plane_count(table_rows_metadata(sf_dir, "embeddings"))
+    return S.lsh_ann_topk(emb, emb.filter(F.col("vec_id") < 5), k=5, n_planes=n_planes)
 
 
 def _emb_ann_lsh_sql(
@@ -671,10 +573,14 @@ def _emb_ann_lsh_sql(
     seeded generator the Spark plan folds in; dot products use the
     proven left-to-right list_sum fold (bitwise equal to both the
     zip_with/aggregate expression and the kernel's dimension-at-a-time
-    GEMM accumulation). ``n_planes=None`` follows the query's memoized
-    route resolution for ``sf_dir`` (r11)."""
+    GEMM accumulation). ``n_planes=None`` takes the face's plane count
+    for ``sf_dir``, or 6 without one."""
     if n_planes is None:
-        n_planes = resolved_lsh_planes(sf_dir)[1] if sf_dir is not None else 6
+        n_planes = (
+            S.scaled_plane_count(table_rows_metadata(sf_dir, "embeddings"))
+            if sf_dir is not None
+            else 6
+        )
     planes = S._hyperplanes(64, n_planes)
     lits = ["[" + ", ".join(repr(float(v)) for v in p) + "]" for p in planes]
     bucket = " + ".join(
@@ -720,34 +626,11 @@ WHERE rank <= {k}
 # expression scheme (literal-folded assignment, the original
 # oracle-frozen face); at/above it the corpus-scaled kernel scheme —
 # scaled_cell_count(n) cells (occupancy ~256 held constant) assigned
-# by the Arrow two-stage kernel. The assignment kernel is bit-identical
-# to the expression (pinned), so ONE SQL template serves both routes;
-# only the centroid count (and hence the regenerated literals) differs.
-# Resolution is memoized per (process, sf_dir) exactly like the ngram
-# route (r10 ADVICE #3) so query and oracle can never disagree.
+# by the Arrow two-stage kernel. The assignment kernel is
+# bit-identical to the expression (pinned), so ONE SQL template serves
+# both routes; only the centroid count (and hence the regenerated
+# literals) differs. Query and twin read the same footers.
 _IVF_SCALED_SWITCH = 20_000
-_IVF_SCHEME_CACHE: dict[str, tuple[str, int]] = {}
-
-
-def resolved_ivf_scheme(sf_dir: str) -> tuple[str, int]:
-    """('fixed16', 16) below _IVF_SCALED_SWITCH embedding rows, else
-    ('scaled', scaled_cell_count(n)) — resolved from parquet footers
-    once per sf_dir and memoized."""
-    key = _route_key(sf_dir)
-    got = _IVF_SCHEME_CACHE.get(key)
-    if got is None:
-        n = table_rows_metadata(sf_dir, "embeddings")
-        if n >= _IVF_SCALED_SWITCH:
-            got = ("scaled", S.scaled_cell_count(n))
-        else:
-            got = ("fixed16", 16)
-        _IVF_SCHEME_CACHE[key] = got
-    return got
-
-
-def clear_ivf_scheme_cache() -> None:
-    """Escape hatch mirroring clear_ngram_route_cache."""
-    _IVF_SCHEME_CACHE.clear()
 
 
 def q_emb_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -759,32 +642,29 @@ def q_emb_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     probing, scoring, and ranking replay in ANSI SQL. Recall vs brute
     force additionally asserted in tests/test_llmdata.py.
 
-    r11: scheme-switched by corpus size (resolved_ivf_scheme) — large
+    r11: scheme-switched by corpus size (_IVF_SCALED_SWITCH) — large
     corpora get scaled_cell_count(n) cells assigned by the two-stage
     Arrow kernel instead of the fixed 16-cell literal expression, so
     per-cell population (and with it the probed-cell GEMM) stays
     bounded as n grows. The oracle callable regenerates the centroid
-    literals at the matching cell count via the same memoized
-    resolution, so the face stays bitwise on BOTH routes (scaled-route
-    pin in tests/test_llmdata.py)."""
+    literals at the matching cell count from the same footer count, so
+    the face stays bitwise on BOTH routes (scaled-route pin in
+    tests/test_llmdata.py)."""
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    scheme, k_cells = resolved_ivf_scheme(sf_dir)
-    if scheme == "fixed16":
+    n = table_rows_metadata(sf_dir, "embeddings")
+    if n < _IVF_SCALED_SWITCH:
         return S.ivf_ann_topk(emb, queries, k=5, order="md5h60")
     return S.ivf_ann_topk(
         emb,
         queries,
         k=5,
-        n_centroids=k_cells,
+        n_centroids=S.scaled_cell_count(n),
         order="md5h60",
         scheme="kernel",
         # footer count: a pure prune hint for the sampler's threshold
         # fast path — cannot change the sample (see sample_centroids)
-        n_rows=table_rows_metadata(sf_dir, "embeddings"),
-        # static query-count bound (vec_id < 5): lets the probed-cell
-        # prune gate decide without a driver collect (r14)
-        n_queries=5,
+        n_rows=n,
     )
 
 
@@ -795,10 +675,10 @@ def _emb_ann_ivf_sql(
     n_probe: int = 4,
     iters: int = 3,
 ) -> str:
-    """Twin generator: replays sample_centroids(order='md5h60',
-    kmeans='driver') via portable_sample_matrix + _lloyd_spherical —
-    the same numpy code path the Spark face runs on the same float64
-    matrix, hence bit-identical centroid literals. The SQL then
+    """Twin generator: replays sample_centroids(order='md5h60') via
+    portable_sample_matrix + _lloyd_spherical — the same numpy code
+    path the Spark face runs on the same float64 matrix, hence
+    bit-identical centroid literals. The SQL then
     re-derives every downstream step: per-row nearest cell (dot DESC,
     cell ASC — nearest_cells' (−dot, cell) struct sort), n_probe
     probed cells per query, candidate scoring with the proven
@@ -807,13 +687,13 @@ def _emb_ann_ivf_sql(
     rank — which equals the per-cell-topk ∪ global-rank decomposition
     because each corpus vector lives in exactly one cell.
 
-    ``n_centroids=None`` follows the query's memoized scheme
-    resolution (resolved_ivf_scheme): 16 literals on the fixed route,
-    scaled_cell_count(n) on the scaled route — the assignment kernel
-    is bit-identical to the expression the SQL replays, so the same
-    template serves both routes."""
+    ``n_centroids=None`` follows the face's scheme switch: 16 literals
+    below _IVF_SCALED_SWITCH vectors, scaled_cell_count(n) at/above it
+    — the assignment kernel is bit-identical to the expression the SQL
+    replays, so the same template serves both routes."""
     if n_centroids is None:
-        n_centroids = resolved_ivf_scheme(sf_dir)[1]
+        n = table_rows_metadata(sf_dir, "embeddings")
+        n_centroids = S.scaled_cell_count(n) if n >= _IVF_SCALED_SWITCH else 16
     C = S._lloyd_spherical(
         S.portable_sample_matrix(sf_dir, S.lloyd_sample_size(n_centroids)),
         n_centroids,
@@ -1117,18 +997,7 @@ FROM qq
 """
 
 
-# q_dedup_clusters routes pair generation by corpus size (parquet
-# footer row count — no Spark job): below this, the exact one-shuffle
-# n-gram join; at/above it, MinHash-LSH candidates + exact
-# verification (ngram_jaccard_pairs_lsh — the designated route for
-# the closed-vocabulary df-cap cliff, r8 verdict #4). sf0.1 (5k docs)
-# stays exact; sf1 (50k) and every soak corpus take the LSH route.
-_NGRAM_LSH_SWITCH = 20_000
-
-
-def q_dedup_clusters(
-    spark: SparkSession, sf_dir: str, pair_method: str | None = None
-) -> DataFrame:
+def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over n-gram near-dup pairs (the iterative
     min-label-propagation loop in operators/clustering.py). Pair
     generation is route-switched by corpus size (_NGRAM_LSH_SWITCH):
@@ -1139,15 +1008,12 @@ def q_dedup_clusters(
     by the banding miss probability (negligible on margin-bearing
     corpora; route parity pinned in tests/test_operators.py). Oracle:
     DuckDB recursive CTE computing min reachable id over the SAME
-    route's pair set (the twin switches with the query — see
-    _dedup_clusters_sql, both through the memoized
-    resolved_ngram_route — r10 ADVICE #3), so the row stays bitwise
-    at every sf."""
+    route's pair set (the twin switches with the query on the same
+    ngram_lsh_scale predicate — see _dedup_clusters_sql), so the row
+    stays bitwise at every sf."""
     from ..operators.clustering import dedup_clusters
 
-    if pair_method is None:
-        pair_method = resolved_ngram_route(sf_dir)
-    gen = D.ngram_jaccard_pairs if pair_method == "exact" else D.ngram_jaccard_pairs_lsh
+    gen = D.ngram_jaccard_pairs_lsh if ngram_lsh_scale(sf_dir) else D.ngram_jaccard_pairs
     pairs = gen(
         load(spark, sf_dir, "documents"), k=3, threshold=0.5, max_doc_freq=100
     )
@@ -1243,11 +1109,11 @@ FROM cc GROUP BY component
 def _dedup_clusters_sql(sf_dir: str) -> str:
     """Oracle generator: the twin follows q_dedup_clusters' corpus-size
     route switch (exact pair join below _NGRAM_LSH_SWITCH, LSH
-    candidates + exact verify at/above it) — through the memoized
-    resolved_ngram_route shared with the query (r10 ADVICE #3)."""
-    if resolved_ngram_route(sf_dir) == "exact":
-        return _DEDUP_CLUSTERS_SQL
-    return _dedup_clusters_lsh_sql()
+    candidates + exact verify at/above it) through the same
+    ngram_lsh_scale predicate as the query."""
+    if ngram_lsh_scale(sf_dir):
+        return _dedup_clusters_lsh_sql()
+    return _DEDUP_CLUSTERS_SQL
 
 
 def q_semdedup(
@@ -1788,30 +1654,9 @@ def _hamming_masks(w: int, r: int) -> list[int]:
     ]
 
 
-# The NEXT probe dial, pre-staged before it's needed (r8 verdict #6):
-# 2 blocks × 30 bits with ASYMMETRIC multi-probe — the probe side
-# enumerates hamming-≤3 variants of each block key (C(30,≤3) = 4,526
-# masks), the index side hamming-≤1 (31 masks); two keys match iff
-# their block-hamming ≤ 3+1 = 4, and ≤8 errors over 2 blocks leave
-# some block with ≤4 (pigeonhole) — so probe3 is COMPLETE at
-# hamming ≤ 8, like the other two schemes. Random-collision floor:
-# 2·4526·31/2^30 ≈ 2.6e-4·n², 2.3× below probe2's 3·211/2^20 ≈
-# 6.0e-4·n². The crossover arithmetic that sets the switch: probe2's
-# total row volume is (633 + 3)·n probes PLUS 6.0e-4·n² floor
-# candidates; probe3 trades a 14× larger linear term (9,052·n + 62·n)
-# for the 2.3× smaller quadratic one, and the totals cross near
-# n ≈ 3.0e7 — BELOW that, probe2 moves fewer rows and stays the
-# right scheme (measured sf10/500k: 67.7 s), ABOVE it the floor
-# dominates everything linear and probe3 wins. Scheme equivalence at
-# the switchover is pinned in tests/test_gif_codec.py (all three
-# schemes, identical filtered pair set); the ≥1M-doc one-point
-# measurement lives in SOAK_sf1.json["ahash_probe3_1m"].
-_AHASH_PROBE3_SWITCH = 30_000_000
-
-
 # Broadcast cap for the multi-probe index side (r14, r13 verdict #1):
 # the probe join is ASYMMETRIC — probe rows are 211·n_blocks per doc,
-# index rows only n_blocks (probe2) — yet a shuffle join moves BOTH
+# index rows only n_blocks — yet a shuffle join moves BOTH
 # sides. Broadcasting the index side removes the probe-side exchange
 # entirely (at sf30 that is ~950M exploded probe rows, the measured
 # wall after the r13 codec fusion) AND serializes the lazy-checkpoint
@@ -1821,9 +1666,8 @@ _AHASH_PROBE3_SWITCH = 30_000_000
 # decode twice. Cap chosen as rows, the unit the 512M-row broadcast
 # limit and the hash-relation build are linear in: 16M index rows ≈
 # 0.4-0.5 GB built (within the guide's "few hundred MB is fine"),
-# reached at n_docs ≈ 5.3M under probe2's 3 rows/doc. Above the cap
-# (and on probe3's 62 rows/doc index side, which blows past it by
-# construction at its ≥30M-doc switch) the shuffle join stays.
+# reached at n_docs ≈ 5.3M under the probe scheme's 3 rows/doc. Above
+# the cap the shuffle join stays.
 _AHASH_BCAST_MAX_INDEX_ROWS = 16_000_000
 
 
@@ -1878,14 +1722,8 @@ def _ahash_candidates(
             )
             .distinct()
         )
-    if scheme == "probe3":
-        # 2 blocks × 30 bits, asymmetric (radius-3 probes vs radius-1
-        # index keys) — see _AHASH_PROBE3_SWITCH for the completeness
-        # proof and crossover arithmetic
-        n_blocks, width, r_probe, r_index = 2, 30, 3, 1
-    else:
-        assert scheme == "probe", scheme
-        n_blocks, width, r_probe, r_index = 3, 20, 2, 0
+    assert scheme == "probe", scheme
+    n_blocks, width = 3, 20
 
     def block_key(j: int) -> F.Column:
         return F.shiftright("ahash", width * j).bitwiseAND(F.lit((1 << width) - 1))
@@ -1900,19 +1738,17 @@ def _ahash_candidates(
             ])
         ).alias("b"),
     ).select("doc_id", "ahash", "b.blk", "b.key")
-
-    def expand(side: DataFrame, radius: int) -> DataFrame:
-        if radius == 0:
-            return side
-        masks = F.lit(_hamming_masks(width, radius))
-        return side.select(
-            "doc_id",
-            "ahash",
-            "blk",
-            F.explode(
-                F.transform(masks, lambda m: F.col("key").bitwiseXOR(m))
-            ).alias("key"),
-        )
+    # probe side: every hamming-≤2 variant of each block key
+    probes = blocks.select(
+        "doc_id",
+        "ahash",
+        "blk",
+        F.explode(
+            F.transform(
+                F.lit(_hamming_masks(width, 2)), lambda m: F.col("key").bitwiseXOR(m)
+            )
+        ).alias("key"),
+    )
 
     # Fuse (blk, key) into ONE long join key (r14, guide §3.1): key <
     # 2^width, so bk = blk·2^width + key is a bijection and the join
@@ -1928,12 +1764,10 @@ def _ahash_candidates(
             (F.col("blk").cast("long") * (1 << width) + F.col("key")).alias("bk"),
         )
 
-    p = fused(expand(blocks, r_probe)).alias("p")
-    i = fused(expand(blocks, r_index)).alias("i")
-    # index-side rows per doc: n_blocks keys, each expanded to the
-    # radius-r_index mask count (1 for r_index=0)
-    idx_rows_per_doc = n_blocks * len(_hamming_masks(width, r_index))
-    if n_docs is not None and n_docs * idx_rows_per_doc <= _AHASH_BCAST_MAX_INDEX_ROWS:
+    p = fused(probes).alias("p")
+    i = fused(blocks).alias("i")
+    # index side: n_blocks exact block keys per doc
+    if n_docs is not None and n_docs * n_blocks <= _AHASH_BCAST_MAX_INDEX_ROWS:
         i = F.broadcast(i)
     return (
         p.join(
@@ -1952,9 +1786,7 @@ def _ahash_candidates(
     )
 
 
-def q_image_dedup_pairs(
-    spark: SparkSession, sf_dir: str, scheme: str | None = None
-) -> DataFrame:
+def q_image_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash image near-dup pairs — the multimodal and
     dedup families composed: every document's REAL PNG (planted
     60-bit patterns, 5 docs per group at hamming <= 8, cross-group
@@ -1979,16 +1811,10 @@ def q_image_dedup_pairs(
     # corpus size from parquet footers, not an eager docs.count()
     # Spark job at plan-construction time (r8 ADVICE): a query
     # builder must stay side-effect-free, and the scheme pick only
-    # needs metadata. Soak callers can pass scheme explicitly; the
-    # footer count still feeds the broadcast gate (r14).
+    # needs metadata. The footer count also feeds the probe scheme's
+    # broadcast gate (r14).
     n_docs = table_rows_metadata(sf_dir, "documents")
-    if scheme is None:
-        if n_docs >= _AHASH_PROBE3_SWITCH:
-            scheme = "probe3"
-        elif n_docs >= _AHASH_PROBE_SWITCH:
-            scheme = "probe"
-        else:
-            scheme = "banded"
+    scheme = "probe" if n_docs >= _AHASH_PROBE_SWITCH else "banded"
     hashes = M.image_ahash(docs).localCheckpoint(eager=False)
     return _ahash_candidates(hashes, scheme, n_docs=n_docs).filter(
         F.col("hamming") <= 8

@@ -1703,13 +1703,18 @@ def compact(
     prune_files then skips on conjunctive multi-column ranges, which
     a single-column sort cannot give. Mutually exclusive with
     ``sort_cols``; stats_cols should cover the z-ordered columns for
-    the skipping to bite."""
+    the skipping to bite.
+
+    A snapshot with no live files (an emptied table) has nothing to
+    rewrite: its version is returned and no commit is made."""
     if sort_cols and zorder_cols:
         raise ValueError("pass sort_cols or zorder_cols, not both")
     snap = snapshot(table_dir)
     if snap is None:
         return None
     version, manifest = snap
+    if not manifest["files"]:
+        return version
     df = read_table(spark, table_dir, version)
     groups = _write_groups(spark, _bucket_bytes(table_dir, manifest["files"]))
     if zorder_cols:

@@ -138,30 +138,15 @@ def test_gemm_topk_zero_vector_fails_loudly_like_rowexpr(spark):
 
 def test_centroid_training_is_distributed_and_deterministic(spark, clustered):
     """The r5 training path (VERDICT r4 #3): a seeded hash-ordered
-    distributed sample + spherical k-means as DataFrame aggs with
-    integer-scaled sums. Pins (a) bit-identical artifacts across
-    repartitionings (no dependence on file layout or shuffle merge
-    order), (b) coverage where first-n-by-id sampling provably fails,
-    (c) the refinement actually tightens the centroids."""
-    # (a) determinism under different physical layouts — both the
-    # default driver-side numpy Lloyd rounds and the "aggs" path
-    # (DataFrame aggregations with integer-scaled sums, for samples
-    # too large to collect)
+    distributed sample + driver-side spherical k-means. Pins (a)
+    bit-identical artifacts across repartitionings (no dependence on
+    file layout), (b) coverage where first-n-by-id sampling provably
+    fails, (c) the refinement actually tightens the centroids."""
+    # (a) determinism under different physical layouts
     c1 = S.sample_centroids(clustered, 16)
     c2 = S.sample_centroids(clustered.repartition(7), 16)
     c3 = S.sample_centroids(clustered.coalesce(1), 16)
     assert c1 == c2 == c3
-    a1 = S.sample_centroids(clustered, 16, kmeans="aggs")
-    a2 = S.sample_centroids(clustered.repartition(7), 16, kmeans="aggs")
-    assert a1 == a2
-    # both paths optimize the same spherical objective from the same
-    # sampled init, so their centroids agree to within the aggs path's
-    # integer quantization (1/2^24 per coordinate per round)
-    import numpy as np
-
-    D1 = np.array([v for _, v in c1])
-    D2 = np.array([v for _, v in a1])
-    assert float(np.abs(D1 - D2).max()) < 1e-4
 
     # (b) adversarial id order: the lowest PER_CLUSTER ids all sit in
     # cluster 0, so first-n sampling would seed every centroid inside

@@ -248,24 +248,18 @@ def test_image_dedup_pairs_exactly_the_planted_groups(spark, sf_small):
         assert 0 <= r.hamming <= 8  # 0 possible: a doc's flips may collide and cancel
 
 
-def test_image_dedup_probe_scheme_equals_banded(spark, sf_small):
+def test_image_dedup_probe_scheme_equals_banded(spark, sf_small, monkeypatch):
     """The r8 scale path (3×20-bit multi-probe, radius 2 — engaged
-    above _AHASH_PROBE_SWITCH docs) must emit EXACTLY the banded
+    at/above _AHASH_PROBE_SWITCH docs) must emit EXACTLY the banded
     scheme's pair set: both candidate generators are pigeonhole-
     complete at hamming ≤ 8, so the filtered output is scheme-
     independent by construction — this pins it."""
-    from real_time_event_streaming_pipeline_spark.plans.llmdata import (
-        q_image_dedup_pairs,
-    )
+    from real_time_event_streaming_pipeline_spark.plans import llmdata as L
 
-    banded = {tuple(r) for r in q_image_dedup_pairs(spark, sf_small, scheme="banded").collect()}
-    probe = {tuple(r) for r in q_image_dedup_pairs(spark, sf_small, scheme="probe").collect()}
+    banded = {tuple(r) for r in L.q_image_dedup_pairs(spark, sf_small).collect()}
+    monkeypatch.setattr(L, "_AHASH_PROBE_SWITCH", 0)
+    probe = {tuple(r) for r in L.q_image_dedup_pairs(spark, sf_small).collect()}
     assert banded == probe and banded
-    # the pre-staged next dial (r9: 2×30-bit blocks, radius-3 probes
-    # vs radius-1 index keys, engaged above _AHASH_PROBE3_SWITCH):
-    # same pigeonhole completeness at hamming ≤ 8, same pair set
-    probe3 = {tuple(r) for r in q_image_dedup_pairs(spark, sf_small, scheme="probe3").collect()}
-    assert probe3 == banded
 
 
 def test_image_dedup_probe_shuffle_join_equals_broadcast(spark, sf_small, monkeypatch):
@@ -276,9 +270,10 @@ def test_image_dedup_probe_shuffle_join_equals_broadcast(spark, sf_small, monkey
     both join strategies provably emit the same pair set."""
     from real_time_event_streaming_pipeline_spark.plans import llmdata as L
 
-    bcast = {tuple(r) for r in L.q_image_dedup_pairs(spark, sf_small, scheme="probe").collect()}
+    monkeypatch.setattr(L, "_AHASH_PROBE_SWITCH", 0)
+    bcast = {tuple(r) for r in L.q_image_dedup_pairs(spark, sf_small).collect()}
     monkeypatch.setattr(L, "_AHASH_BCAST_MAX_INDEX_ROWS", 0)
-    shuffled = {tuple(r) for r in L.q_image_dedup_pairs(spark, sf_small, scheme="probe").collect()}
+    shuffled = {tuple(r) for r in L.q_image_dedup_pairs(spark, sf_small).collect()}
     assert bcast and shuffled == bcast
 
 

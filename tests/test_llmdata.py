@@ -819,7 +819,7 @@ def test_table_rows_metadata_recurses_and_rejects_empty(tmp_path, spark, sf_smal
         table_rows_metadata(str(tmp_path), "orders")
 
 
-def test_ngram_face_route_switch_and_lsh_twin(spark, sf_small):
+def test_ngram_face_route_switch_and_lsh_twin(spark, sf_small, monkeypatch):
     """r9 verdict #5: the registered llm_dedup_ngram_jaccard face now
     route-switches by corpus size like q_dedup_clusters. Pins: (a) the
     oracle callable picks the twin matching the route the query takes;
@@ -829,83 +829,27 @@ def test_ngram_face_route_switch_and_lsh_twin(spark, sf_small):
     corpus both routes agree."""
     import duckdb
 
-    from real_time_event_streaming_pipeline_spark.plans.llmdata import (
-        _NGRAM_JACCARD_SQL,
-        _NGRAM_LSH_SWITCH,
-        _ngram_jaccard_lsh_sql,
-        _ngram_jaccard_oracle_sql,
-        q_ngram_jaccard,
-    )
+    from real_time_event_streaming_pipeline_spark.plans import llmdata as L
     from real_time_event_streaming_pipeline_spark.catalog import table_rows_metadata
 
     n_docs = table_rows_metadata(sf_small, "documents")
-    assert n_docs < _NGRAM_LSH_SWITCH  # driver corpora stay exact
-    assert _ngram_jaccard_oracle_sql(sf_small) == _NGRAM_JACCARD_SQL
+    assert n_docs < L._NGRAM_LSH_SWITCH  # driver corpora stay exact
+    assert L._ngram_jaccard_oracle_sql(sf_small) == L._NGRAM_JACCARD_SQL
 
-    exact = {tuple(map(str, r)) for r in q_ngram_jaccard(spark, sf_small).collect()}
-    lsh = {
-        tuple(map(str, r))
-        for r in q_ngram_jaccard(spark, sf_small, pair_method="lsh").collect()
-    }
+    exact = {tuple(map(str, r)) for r in L.q_ngram_jaccard(spark, sf_small).collect()}
+    # lower the switch below the driver corpus: query and oracle both
+    # take the LSH route
+    monkeypatch.setattr(L, "_NGRAM_LSH_SWITCH", n_docs)
+    assert L._ngram_jaccard_oracle_sql(sf_small) == L._ngram_jaccard_lsh_sql()
+    lsh = {tuple(map(str, r)) for r in L.q_ngram_jaccard(spark, sf_small).collect()}
     assert exact and lsh == exact
 
     con = duckdb.connect()
     con.sql(
         f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
     )
-    twin = {tuple(map(str, r)) for r in con.sql(_ngram_jaccard_lsh_sql()).fetchall()}
+    twin = {tuple(map(str, r)) for r in con.sql(L._ngram_jaccard_lsh_sql()).fetchall()}
     assert twin == lsh
-
-
-def test_ngram_route_resolved_once_per_process(tmp_path, sf_small):
-    """r10 ADVICE #3: the route the query takes and the route its
-    oracle twin takes must come from ONE resolution — a corpus
-    rewritten between plan build and oracle resolution must not flip
-    the oracle onto the other route."""
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from real_time_event_streaming_pipeline_spark.plans.llmdata import (
-        _NGRAM_JACCARD_SQL,
-        _NGRAM_LSH_SWITCH,
-        clear_ngram_route_cache,
-        resolved_ngram_route,
-        _ngram_jaccard_oracle_sql,
-    )
-
-    sf = tmp_path / "corpus"
-    sf.mkdir()
-    shutil.copytree(
-        os.path.join(sf_small, "documents.parquet"),
-        sf / "documents.parquet",
-    ) if os.path.isdir(os.path.join(sf_small, "documents.parquet")) else shutil.copy(
-        os.path.join(sf_small, "documents.parquet"), sf / "documents.parquet"
-    )
-    clear_ngram_route_cache()
-    assert resolved_ngram_route(str(sf)) == "exact"
-    # grow the corpus past the switch IN PLACE — the memo must hold
-    # the original resolution so the oracle stays on the query's route
-    big = pa.table(
-        {
-            "doc_id": pa.array(range(_NGRAM_LSH_SWITCH + 1), type=pa.int64()),
-            "text": pa.array(["x"] * (_NGRAM_LSH_SWITCH + 1)),
-        }
-    )
-    target = sf / "documents.parquet"
-    if target.is_dir():
-        shutil.rmtree(target)
-        target.mkdir()
-        pq.write_table(big, target / "part-0.parquet")
-    else:
-        pq.write_table(big, target)
-    assert resolved_ngram_route(str(sf)) == "exact"  # memoized, not re-read
-    assert _ngram_jaccard_oracle_sql(str(sf)) == _NGRAM_JACCARD_SQL
-    # the documented escape hatch re-resolves
-    clear_ngram_route_cache()
-    assert resolved_ngram_route(str(sf)) == "lsh"
-    clear_ngram_route_cache()
 
 
 def test_ivf_kernel_scheme_matches_expr_scheme(spark, sf_small):
@@ -929,33 +873,20 @@ def test_ivf_kernel_scheme_matches_expr_scheme(spark, sf_small):
         ).collect()
     }
     assert expr and kern == expr
-    # r14: the bound-gated broadcast-semi-join probed-cell prune
-    # (n_queries known → no driver collect; 5·4 ≤ 16//2 is FALSE, so
-    # prune skipped — but an 8-probe call passes the gate): pin both
-    # gate outcomes row-identical to the expr scheme
-    kern_sj = {
+    # one query probes 4 of 16 cells, under the half-the-cells gate:
+    # the probed-cell prune engages and must not change the rows
+    one = queries.filter(F.col("vec_id") < 1)
+    expr_1q = {
         tuple(map(str, r))
-        for r in S.ivf_ann_topk(
-            emb, queries, k=5, n_centroids=16, order="md5h60",
-            scheme="kernel", n_queries=5,
-        ).collect()
-    }
-    assert kern_sj == expr
-    kern_sj_1q = {
-        tuple(map(str, r))
-        for r in S.ivf_ann_topk(
-            emb, queries.filter(F.col("vec_id") < 1), k=5, n_centroids=16,
-            order="md5h60", scheme="kernel", n_queries=1,
-        ).collect()
+        for r in S.ivf_ann_topk(emb, one, k=5, n_centroids=16, order="md5h60").collect()
     }
     kern_1q = {
         tuple(map(str, r))
         for r in S.ivf_ann_topk(
-            emb, queries.filter(F.col("vec_id") < 1), k=5, n_centroids=16,
-            order="md5h60", scheme="kernel",
+            emb, one, k=5, n_centroids=16, order="md5h60", scheme="kernel"
         ).collect()
     }
-    assert kern_sj_1q and kern_sj_1q == kern_1q
+    assert expr_1q and kern_1q == expr_1q
 
 
 def test_ivf_scaled_route_bitwise_vs_twin(spark, monkeypatch):
@@ -970,54 +901,32 @@ def test_ivf_scaled_route_bitwise_vs_twin(spark, monkeypatch):
 
     sf_dir = "/root/testdata/sf0.1"  # 2000 vectors — over the patched switch
     monkeypatch.setattr(L, "_IVF_SCALED_SWITCH", 1000)
-    L.clear_ivf_scheme_cache()
-    try:
-        scheme, k_cells = L.resolved_ivf_scheme(sf_dir)
-        assert scheme == "scaled" and k_cells == S.scaled_cell_count(2000) == 64
-        got = {
-            tuple(map(str, r)) for r in L.q_emb_ann_ivf(spark, sf_dir).collect()
-        }
-        sql = L._emb_ann_ivf_sql(sf_dir)
-        assert sql.count("\n    (") >= 64  # scaled literals, not 16
-        con = duckdb.connect()
-        con.sql(
-            f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'"
-        )
-        twin = {tuple(map(str, r)) for r in con.sql(sql).fetchall()}
-        assert got and twin == got
-    finally:
-        L.clear_ivf_scheme_cache()
+    assert S.scaled_cell_count(2000) == 64
+    got = {tuple(map(str, r)) for r in L.q_emb_ann_ivf(spark, sf_dir).collect()}
+    sql = L._emb_ann_ivf_sql(sf_dir)
+    assert sql.count("\n    (") >= 64  # scaled literals, not 16
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'")
+    twin = {tuple(map(str, r)) for r in con.sql(sql).fetchall()}
+    assert got and twin == got
 
 
-def test_ivf_scheme_resolved_once_and_occupancy_pins():
-    """(a) The scheme memo mirrors the ngram-route discipline: one
-    resolution per (process, sf_dir). (b) Sizing negative control: the
-    scaled cell count holds occupancy bounded (~256, never >512 below
-    the cap) where ANY fixed cell count's occupancy grows linearly —
-    the measured sf30 failure mode of the old fixed-16 face."""
+def test_ivf_occupancy_pins():
+    """Sizing negative control: the scaled cell count holds occupancy
+    bounded (~256, never >512 below the cap) where ANY fixed cell
+    count's occupancy grows linearly — the measured sf30 failure mode
+    of the old fixed-16 face. Driver corpora stay on the fixed route."""
     for n in [20_000, 100_000, 600_000, 4_000_000]:
         k = S.scaled_cell_count(n)
         assert n / k <= 512, (n, k)          # scaled: bounded occupancy
         assert n / 16 > 1000                  # fixed-16: already blown at 20k
     assert S.scaled_cell_count(4_200_000 * 2) == 16384  # cap binds
+    from real_time_event_streaming_pipeline_spark.catalog import table_rows_metadata
     from real_time_event_streaming_pipeline_spark.plans import llmdata as L
 
     from tests.conftest import SF_SMALL
 
-    L.clear_ivf_scheme_cache()
-    got = L.resolved_ivf_scheme(SF_SMALL)
-    assert got == ("fixed16", 16)
-    # memoized: a second call must not re-read footers (poison the
-    # reader to prove it)
-    import real_time_event_streaming_pipeline_spark.plans.llmdata as mod
-
-    orig = mod.table_rows_metadata
-    mod.table_rows_metadata = lambda *a, **k: (_ for _ in ()).throw(AssertionError)
-    try:
-        assert L.resolved_ivf_scheme(SF_SMALL) == got
-    finally:
-        mod.table_rows_metadata = orig
-        L.clear_ivf_scheme_cache()
+    assert table_rows_metadata(SF_SMALL, "embeddings") < L._IVF_SCALED_SWITCH
 
 
 def test_df_cap_profile_counters(spark):
@@ -1125,8 +1034,9 @@ def test_contamination_presize_routes_agree(spark, tmp_path, monkeypatch):
         sf / "documents.parquet",
     )
     out = {}
-    for route in (True, False):
-        monkeypatch.setattr(L, "resolved_bucket_presize", lambda d, _r=route: _r)
+    for route, switch in ((True, 0), (False, 10**9)):
+        monkeypatch.setattr(L, "_NGRAM_LSH_SWITCH", switch)
+        assert L.ngram_lsh_scale(str(sf)) is route
         out[route] = {
             tuple(map(str, r))
             for r in q_contamination(spark, str(sf)).collect()
@@ -1201,57 +1111,29 @@ def test_asym_pairing_subset_and_bitwise_at_noise_threshold(spark, sf_med):
     assert all(exact[k] == v for k, v in asym.items())
 
 
-def test_lsh_scaled_route_bitwise_vs_twin(spark, tmp_path):
-    """r11: the LSH face's corpus-scaled plane route, end-to-end
-    bitwise. A synthetic 20k-vector corpus sits exactly at the switch:
-    the resolver must pick ('scaled', 7) and the regenerated 7-plane
-    twin must reproduce every row bitwise. (At 7 planes = 128 buckets
-    the probed-bucket corpus pruning is deliberately SKIPPED — the
-    `(1 << n_planes) >= _LSH_PRUNE_MIN_BUCKETS` gate in lsh_ann_topk
-    — so this pin covers the scaled-signature path, not the pruning
-    branch; that branch is pinned by
-    test_lsh_probed_bucket_prune_is_result_neutral below.)"""
+def test_lsh_scaled_route_bitwise_vs_twin(spark, sf_med, monkeypatch):
+    """The LSH face's corpus-scaled plane count, end-to-end bitwise:
+    with the footer count patched to report 20,000 vectors, the face
+    and its twin both take scaled_plane_count(20_000) = 7 planes, and
+    the regenerated 7-plane twin must reproduce every row bitwise. (At
+    7 planes = 128 buckets the probed-bucket corpus pruning is
+    deliberately SKIPPED — the `(1 << n_planes) >=
+    _LSH_PRUNE_MIN_BUCKETS` gate in lsh_ann_topk — so this pin covers
+    the scaled-signature path, not the pruning branch; that branch is
+    pinned by test_lsh_probed_bucket_prune_is_result_neutral below.)"""
     import duckdb
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from real_time_event_streaming_pipeline_spark.plans import llmdata as L
 
-    rng = np.random.default_rng(53)
-    n = 20_000
-    V = rng.standard_normal((n, 64))
-    V /= np.linalg.norm(V, axis=1, keepdims=True)
-    sf = tmp_path / "corpus"
-    sf.mkdir()
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array(range(n), type=pa.int64()),
-                "embedding": pa.array([[float(x) for x in v] for v in V],
-                                      type=pa.list_(pa.float64())),
-            }
-        ),
-        sf / "embeddings.parquet",
-    )
-    L.clear_lsh_planes_cache()
-    try:
-        scheme, planes = L.resolved_lsh_planes(str(sf))
-        assert scheme == "scaled" and planes == S.scaled_plane_count(n) == 7
-        got = {
-            tuple(map(str, r)) for r in L.q_emb_ann_lsh(spark, str(sf)).collect()
-        }
-        con = duckdb.connect()
-        con.sql(
-            f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'"
-        )
-        twin = {
-            tuple(map(str, r))
-            for r in con.sql(L._emb_ann_lsh_sql(str(sf))).fetchall()
-        }
-        assert got and twin == got
-    finally:
-        L.clear_lsh_planes_cache()
+    monkeypatch.setattr(L, "table_rows_metadata", lambda sf_dir, name: 20_000)
+    assert S.scaled_plane_count(20_000) == 7
+    sql = L._emb_ann_lsh_sql(sf_med)
+    assert sql == L._emb_ann_lsh_sql(None, n_planes=7)
+    got = {tuple(map(str, r)) for r in L.q_emb_ann_lsh(spark, sf_med).collect()}
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{sf_med}/embeddings.parquet'")
+    twin = {tuple(map(str, r)) for r in con.sql(sql).fetchall()}
+    assert got and twin == got
 
 
 def test_lsh_probed_bucket_prune_is_result_neutral(spark, monkeypatch):
@@ -1278,38 +1160,32 @@ def test_lsh_probed_bucket_prune_is_result_neutral(spark, monkeypatch):
     )
     kw = dict(k=5, n_planes=8, dim=dim, multiprobe=2)
     pruned = {tuple(map(str, r)) for r in S.lsh_ann_topk(emb, queries, **kw).collect()}
-    # r14: the bound-gated broadcast-semi-join prune (n_queries known,
-    # no driver collect) must also be row-identical
-    pruned_sj = {
-        tuple(map(str, r))
-        for r in S.lsh_ann_topk(emb, queries, n_queries=3, **kw).collect()
-    }
     monkeypatch.setattr(S, "_LSH_PRUNE_MIN_BUCKETS", 1 << 60)
     full = {tuple(map(str, r)) for r in S.lsh_ann_topk(emb, queries, **kw).collect()}
     assert pruned and pruned == full
-    assert pruned_sj == full
 
 
 def test_lsh_plane_count_pins():
     """Sizing negative control (the IVF occupancy-pin analogue): the
     scaled plane count holds bucket occupancy ~256 (never > 512 below
-    the cap) where the fixed 6-plane scheme's occupancy grows with n;
-    driver corpora stay on the historical fixed route."""
+    the cap) where a fixed 6-plane scheme's occupancy grows with n;
+    driver corpora keep the historical 6 planes."""
     for n in (20_000, 100_000, 600_000, 10_000_000):
         p = S.scaled_plane_count(n)
         assert n / (1 << p) <= 512, (n, p)
         assert n / 64 > 256  # fixed-6: occupancy already blown at 20k
     assert S.scaled_plane_count(100) == 6      # floor
     assert S.scaled_plane_count(10**9) == 16   # cap
+    # 6 planes hold up to 16,384 vectors, 7 from the next one on
+    assert S.scaled_plane_count(16_384) == 6
+    assert S.scaled_plane_count(16_385) == 7
     from real_time_event_streaming_pipeline_spark.plans import llmdata as L
 
-    L.clear_lsh_planes_cache()
-    assert L.resolved_lsh_planes("/root/testdata/sf0.01") == ("fixed6", 6)
-    # the fixed-route twin is byte-identical to the historical 6-plane SQL
+    # the driver corpus twin is byte-identical to the historical
+    # 6-plane SQL
     assert L._emb_ann_lsh_sql("/root/testdata/sf0.01") == L._emb_ann_lsh_sql(
         None, n_planes=6
     )
-    L.clear_lsh_planes_cache()
 
 
 def test_lsh_signature_kernel_matches_expression(spark, sf_med):

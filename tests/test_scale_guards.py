@@ -259,16 +259,12 @@ def test_zorder_clusters_both_dimensions(spark, tmp_path):
     assert spark.read.parquet(p).count() == 200_000
 
 
-def test_tfidf_broadcast_routes_agree(spark, tmp_path):
+def test_tfidf_broadcast_routes_agree(spark, tmp_path, monkeypatch):
     """r12 verdict #6 / ADVICE: the tfidf df-broadcast hint is now a
     footer-resolved route, and BOTH routes (hinted broadcast vs the
     AQE-chosen join) must emit bitwise-identical rows on a planted
     wide-vocabulary corpus — the regime where the route matters."""
-    from real_time_event_streaming_pipeline_spark.plans.curation import (
-        estimated_vocab,
-        q_tfidf,
-        resolved_tfidf_broadcast,
-    )
+    from real_time_event_streaming_pipeline_spark.plans import curation as C
 
     # open vocabulary: every doc contributes mostly-unique hash tokens
     rows = [
@@ -281,25 +277,22 @@ def test_tfidf_broadcast_routes_agree(spark, tmp_path):
     ).coalesce(1).write.parquet(os.path.join(sf_dir, "documents.parquet"))
 
     got = [
-        sorted(map(tuple, q_tfidf(spark, sf_dir, df_broadcast=b).collect()))
+        sorted(map(tuple, C.q_tfidf(spark, sf_dir, df_broadcast=b).collect()))
         for b in (True, False)
     ]
     assert got[0] == got[1] and len(got[0]) > 0
 
-    # the resolver flips exactly at the estimated-vocab bound; both
-    # sides of the flip resolve from footers only (no Spark job)
-    v = estimated_vocab(sf_dir)
-    assert v > 0
-    assert resolved_tfidf_broadcast(sf_dir, max_vocab=v) is True
-    # max_vocab is part of the memo key (r13 review): a different
-    # bound on the same corpus must re-resolve, not read a stale route
-    assert resolved_tfidf_broadcast(sf_dir, max_vocab=v - 1) is False
-    assert resolved_tfidf_broadcast(sf_dir, max_vocab=v) is True
-    from real_time_event_streaming_pipeline_spark.plans.curation import (
-        _TFIDF_BROADCAST_CACHE,
-    )
-
-    _TFIDF_BROADCAST_CACHE.clear()
+    # the footer-read route: the estimate fits the default bound, and
+    # a bound below it drops the df hint (the 1-row total keeps its
+    # own) — same rows either way
+    v = C.estimated_vocab(sf_dir)
+    assert 0 < v <= C._TFIDF_MAX_BROADCAST_VOCAB
+    for bound, hints in ((v, 2), (v - 1, 1)):
+        monkeypatch.setattr(C, "_TFIDF_MAX_BROADCAST_VOCAB", bound)
+        df = C.q_tfidf(spark, sf_dir)
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert plan.count("strategy=broadcast") == hints, plan
+        assert sorted(map(tuple, df.collect())) == got[0]
 
 
 def test_load_memo_is_session_correct(spark, sf_small):

@@ -252,6 +252,20 @@ def test_tx_compact_preserves_content_and_epochs(spark, tmp_path):
     assert _content(spark, tx) == FINAL
 
 
+def test_tx_compact_on_emptied_table_is_noop(spark, tmp_path):
+    """A table whose every row was deleted has no live files; compact
+    returns its version without committing (it used to divide by the
+    zero write groups of an empty snapshot)."""
+    tx = str(tmp_path / "tx")
+    tx_table.upsert(spark, tx, _batch(spark, [("a", 1), ("b", 2)]), ["k"],
+                    n_buckets=4, order_col="v", epoch_id=0)
+    v = tx_table.delete_where(spark, tx, F.lit(True))
+    assert tx_table.read_manifest(tx, v)["files"] == []
+    assert tx_table.compact(spark, tx) == v
+    assert tx_table.latest_version(tx) == v
+    assert _content(spark, tx) == set()
+
+
 def test_tx_bucket_pruned_point_lookup(spark, tmp_path, small_files):
     """Manifest-level pruning: a point lookup resolves the key's
     bucket on the driver, scans only the files that may hold it, and

@@ -1490,89 +1490,6 @@ def run_prune_demo(src_dir: str | None = None, threshold: float = 0.9) -> None:
     print("wrote prune_demo into SOAK_sf1.json")
 
 
-def run_probe3(n_docs: int = 1_000_000) -> None:
-    """One-point measurement of the pre-staged probe3 dial at ≥1M docs
-    (r8 verdict #6): synthesize n_docs 60-bit hashes with the SAME md5
-    closed form the image corpus plants (groups of 5, doc i carrying
-    i%5 extra bit flips — so (n/5)·C(5,2) true pairs at hamming ≤ 8
-    over a md5-random background), run the probe (3×20-bit, radius 2)
-    and probe3 (2×30-bit, radius 3 vs 1) candidate generators, and
-    record wall + pair counts + set equality into
-    SOAK_sf1.json["ahash_probe3_1m"]. The synthetic table skips PNG
-    decode deliberately: the measurement targets the CANDIDATE JOIN —
-    the part whose floor the dial moves — not the embarrassingly
-    parallel decode constant."""
-    from pyspark.sql import functions as F
-
-    from real_time_event_streaming_pipeline_spark.plans.llmdata import (
-        _ahash_candidates,
-    )
-    from real_time_event_streaming_pipeline_spark.session import get_spark
-
-    spark = get_spark("probe3_soak")
-    base = F.conv(
-        F.substring(F.md5((F.col("id") - F.col("id") % 5).cast("string")), 1, 15), 16, 10
-    ).cast("long")
-    flip_bits = F.filter(
-        F.sequence(F.lit(0), F.lit(3)), lambda j: j < F.col("id") % 5
-    )
-    def flip_mask(j):
-        bit = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws("#", F.col("id").cast("string"), j.cast("string"))
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 60
-        )
-        # 2^bit as a long: powers of two are exact in double out to 2^59
-        return F.pow(F.lit(2.0), bit.cast("double")).cast("long")
-
-    ahash = F.aggregate(flip_bits, base, lambda acc, j: acc.bitwiseXOR(flip_mask(j)))
-    _hygiene(spark)  # BEFORE the live checkpoints: hygiene unpersists
-    # every persistent RDD, so it must not run between the hashes
-    # build and the joins that read it
-    hashes = (
-        spark.range(n_docs)
-        .select(F.col("id").alias("doc_id"), ahash.alias("ahash"))
-        .repartition(32)
-        .localCheckpoint(eager=True)
-    )
-    out: dict = {"n_docs": n_docs}
-    frames = {}
-    for scheme in ("probe", "probe3"):
-        t0 = time.perf_counter()
-        cand = _ahash_candidates(hashes, scheme).filter(F.col("hamming") <= 8)
-        cand = cand.localCheckpoint(eager=True)
-        n = cand.count()
-        out[scheme] = {"pairs": n, "sec": round(time.perf_counter() - t0, 3)}
-        frames[scheme] = cand
-        print(f"  {scheme}: {out[scheme]}", flush=True)
-    diff = frames["probe"].exceptAll(frames["probe3"]).count() + frames[
-        "probe3"
-    ].exceptAll(frames["probe"]).count()
-    out["pair_sets_equal"] = diff == 0
-    print(f"  pair_sets_equal: {out['pair_sets_equal']}", flush=True)
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SOAK_sf1.json"
-    )
-    try:
-        with open(path) as fh:
-            existing = json.load(fh)
-    except (FileNotFoundError, ValueError):
-        existing = {}
-    existing["ahash_probe3_1m"] = out
-    with open(path, "w") as fh:
-        json.dump(existing, fh, indent=1, sort_keys=True)
-    print("wrote ahash_probe3_1m into SOAK_sf1.json")
-
-
 def main() -> None:
     if "--generate" in sys.argv:
         generate()
@@ -1629,8 +1546,6 @@ def main() -> None:
         run_prune_demo(SF1_DIR)
     if "--stream-semdedup" in sys.argv:
         run_stream_semdedup()
-    if "--probe3-1m" in sys.argv:
-        run_probe3()
     if len(sys.argv) == 1:
         print(__doc__)
 
