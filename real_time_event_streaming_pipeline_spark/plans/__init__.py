@@ -102,7 +102,9 @@ def all_oracles(sf_dir: str | None = None) -> dict[str, str]:
     default). Only missing-data errors (a corpus lacking a generator's
     table) degrade a row to rows-only, recorded in ``DEGRADED_ORACLES``;
     any other generator failure re-raises, and a ``sf_dir`` that is not
-    a directory raises NotADirectoryError up front."""
+    a directory raises NotADirectoryError up front. Generators run on
+    every call, unmemoized, so an oracle takes the route its query
+    takes on the corpus as it is now."""
     import sys
 
     import duckdb
@@ -123,7 +125,7 @@ def all_oracles(sf_dir: str | None = None) -> dict[str, str]:
     for k, v in merged.items():
         if callable(v):
             try:
-                out[k] = _oracle_gen_cached(v, sf_dir)
+                out[k] = v(sf_dir)
             except (FileNotFoundError, duckdb.IOException) as e:
                 DEGRADED_ORACLES[k] = f"{type(e).__name__}: {e}"
                 print(
@@ -134,17 +136,3 @@ def all_oracles(sf_dir: str | None = None) -> dict[str, str]:
         else:
             out[k] = v
     return _reorder(out)
-
-
-_GEN_CACHE: dict = {}
-
-
-def _oracle_gen_cached(gen, sf_dir: str) -> str:
-    """Memoize generator resolution per (generator, sf_dir): the
-    trained literals are deterministic functions of the corpus, and
-    repeated all_oracles() calls (tests, sweeps) shouldn't re-pay the
-    DuckDB scan + numpy training."""
-    key = (gen.__module__, gen.__qualname__, sf_dir)
-    if key not in _GEN_CACHE:
-        _GEN_CACHE[key] = gen(sf_dir)
-    return _GEN_CACHE[key]

@@ -34,27 +34,19 @@ def compact_parquet(
     path: str,
     target_bytes: int = 128 * 1024 * 1024,
     sort_cols: list[str] | None = None,
-    ttl_col: str | None = None,
-    now_epoch: int | None = None,
 ) -> dict:
-    """Rewrite a parquet directory into ~target_bytes files, optionally
-    dropping TTL-expired rows. The output is flat: a hive-partitioned
-    input comes back as root-level files. The one partitioned upsert
-    layout, `streaming/tx_table`, compacts through its own manifest
-    commit (`tx_table.compact`), never through this function.
+    """Rewrite a parquet directory into ~target_bytes files. The
+    output is flat: a hive-partitioned input comes back as root-level
+    files. The upsert sink's tables (`streaming/tx_table`) compact and
+    expire TTL rows through their own manifest commits
+    (`tx_table.compact`, `tx_table.delete_where`), never through this
+    function.
 
     File count = ceil(total_bytes / target_bytes) on the *compressed*
     size — the right granularity for scan parallelism. Optional
     sort_cols cluster rows inside the rewrite (repartitionByRange +
     sortWithinPartitions) so min/max row-group stats become selective
     — the poor man's Z-order, one dimension at a time.
-
-    ttl_col + now_epoch enable retention: rows whose epoch-seconds
-    expiry (functions.ttl_from) is <= now_epoch are dropped during the
-    rewrite — the reference's DynamoDB TTL expiry
-    (setup-dynamodb.sh:29-32) expressed as a maintenance pass, which is
-    exactly how file-backed stores apply TTL (expiry rides the
-    compaction write the table needs anyway, no extra I/O).
 
     The swap keeps a full table on disk at all times (old → ._old,
     staging → live, drop ._old; an interrupted swap is recovered from
@@ -73,14 +65,6 @@ def compact_parquet(
     stats = table_file_stats(spark, path)
     n_out = max(1, math.ceil(stats["total_bytes"] / target_bytes))
     df: DataFrame = spark.read.parquet(path)
-    expired = 0
-    if ttl_col is not None:
-        if now_epoch is None:
-            raise ValueError("ttl_col requires now_epoch (deterministic retention)")
-        from pyspark.sql import functions as F
-
-        expired = df.filter(F.col(ttl_col) <= F.lit(int(now_epoch))).count()
-        df = df.filter(F.col(ttl_col) > F.lit(int(now_epoch)))
     staging = path.rstrip("/") + "._compacting"
     if sort_cols:
         out = df.repartitionByRange(n_out, *sort_cols).sortWithinPartitions(
@@ -99,7 +83,6 @@ def compact_parquet(
         "before": stats,
         "after": after,
         "target_files": n_out,
-        "expired_rows": expired,
     }
 
 

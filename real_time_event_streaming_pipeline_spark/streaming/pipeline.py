@@ -5,6 +5,8 @@ Structured Streaming with the engine's shared batch plans:
   Q1 raw events    — project + derive → append → upsert sink by event_key
   Q2 windowed agg  — watermark + 5-min tumbling window → update →
                      upsert sink by partition_key
+  (both upsert sinks are tx_table.upsert_tx: manifest-committed,
+  exactly-once per epoch; read them back with tx_table.read_table)
   Q3 alerts        — severity IN (high, critical) → append sink
   Q4 counts        — global group-count → complete → memory/console
 
@@ -12,7 +14,8 @@ Differences from the reference, by design (SURVEY.md §7.0):
 - windows are event-time on the typed ts column, not processing time
   (the reference windows on current_timestamp() — §2.4 quirk);
   pass use_event_time=False to reproduce the reference exactly.
-- sinks are bulk columnar upserts, not per-row putItem.
+- sinks are bulk columnar upserts committed atomically per epoch,
+  not per-row putItem.
 
 Checkpointing: one checkpoint dir per query (reference S9/W7) —
 recovery is exercised in tests/test_streaming.py.
@@ -21,14 +24,14 @@ recovery is exercised in tests/test_streaming.py.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import InitVar, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import ALERT_SEVERITIES, event_key, ttl_from
 from ..plans.citystream import enrich_events, windowed_agg
-from .sinks import append_parquet, upsert_parquet
+from .sinks import append_parquet
 from .tx_table import upsert_tx
 
 
@@ -68,36 +71,41 @@ class PipelineConfig:
     # run_retention(), the maintenance pass standing in for DynamoDB's
     # background expiry
     with_ttl: bool = False
-    # atomic picks the upsert sink. False: sinks.upsert_parquet, the
-    # whole-table rewrite. True: tx_table.upsert_tx (64 buckets), which
-    # rewrites only the buckets an epoch's keys hash into and commits
-    # through the manifest log: all-or-nothing across buckets,
-    # exactly-once epoch application, snapshot-isolated readers. The
-    # tables are then read back with tx_table.read_table, not a bare
-    # spark.read.parquet (the data directory alone is not the table).
-    atomic: bool = False
+    # init-only: callers may still pass atomic=True, which selects
+    # nothing (tx_table.upsert_tx is the only upsert sink); False raises
+    atomic: InitVar[bool] = True
+
+    def __post_init__(self, atomic: bool) -> None:
+        if not atomic:
+            raise ValueError(
+                "PipelineConfig(atomic=False) is gone: every upsert sink commits "
+                "through tx_table.upsert_tx"
+            )
 
     def upsert(self, name: str, key_cols: list[str], order_col: str):
-        if self.atomic:
-            # raw_events carries ttl: record per-file ttl min/max so the
-            # atomic retention pass (delete_where) can skip files whose
-            # range never crosses the cutoff — without stats it would
-            # rewrite the whole table every time
-            stats = ["ttl"] if (self.with_ttl and name == "raw_events") else None
-            return upsert_tx(
-                self.path(name),
-                key_cols,
-                order_col=order_col,
-                stats_cols=stats,
-                # ledger scope rides the CHECKPOINT's identity: a query
-                # restarted from a fresh checkpoint restarts epoch ids
-                # at 0, and without a fresh app id the exactly-once
-                # ledger would swallow every one of them as a replay of
-                # the previous run — silent data loss upsert_tx's own
-                # docstring warns about but this caller never guarded
-                app_id=_checkpoint_app_id(self.checkpoint(name.replace("_", "-"))),
-            )
-        return upsert_parquet(self.path(name), key_cols, order_col=order_col)
+        """The tx_table upsert sink (64 buckets) for table ``name``:
+        it rewrites only the buckets an epoch's keys hash into and
+        commits through the manifest log — all-or-nothing across
+        buckets, exactly-once epoch application, snapshot-isolated
+        readers. Read it back with tx_table.read_table, not a bare
+        spark.read.parquet (the data directory alone is not the
+        table)."""
+        # raw_events carries ttl: record per-file ttl min/max so the
+        # retention pass (delete_where) can skip files whose range
+        # never crosses the cutoff — without stats it would rewrite the
+        # whole table every time
+        stats = ["ttl"] if (self.with_ttl and name == "raw_events") else None
+        return upsert_tx(
+            self.path(name),
+            key_cols,
+            order_col=order_col,
+            stats_cols=stats,
+            # ledger scope rides the CHECKPOINT's identity: a query
+            # restarted from a fresh checkpoint restarts epoch ids at 0,
+            # and without a fresh app id the exactly-once ledger would
+            # swallow every one of them as a replay of the previous run
+            app_id=_checkpoint_app_id(self.checkpoint(name.replace("_", "-"))),
+        )
 
     def path(self, name: str) -> str:
         return os.path.join(self.out_dir, name)
@@ -179,62 +187,52 @@ def start_pipeline(spark: SparkSession, source: DataFrame, cfg: PipelineConfig) 
 
 
 def run_retention(spark: SparkSession, cfg: PipelineConfig, now_epoch: int) -> dict:
-    """Drop TTL-expired rows from the pipeline's raw-events store —
+    """Drop TTL-expired rows from the pipeline's raw-events table —
     the reference's DynamoDB TTL expiry (setup-dynamodb.sh:29-32)
     reproduced end-to-end: events carry ttl = event_time + 30 d
     (cfg.with_ttl) and this maintenance pass removes rows whose ttl
-    has passed, riding the compaction rewrite the file-backed sink
-    needs anyway. Deterministic: the caller supplies now_epoch.
+    has passed. Deterministic: the caller supplies now_epoch.
 
-    Requires the pipeline to have run with cfg.with_ttl=True. In
-    atomic mode the expiry is a transactional DELETE WHERE with
-    ttl-stats file skipping instead of the full compaction rewrite —
-    only files whose ttl range crosses the cutoff are touched, and
-    readers never observe a half-expired table."""
-    from ..sources.maintenance import compact_parquet
+    Requires the pipeline to have run with cfg.with_ttl=True. The
+    expiry is a transactional DELETE WHERE with ttl-stats file
+    skipping: only files whose ttl range crosses the cutoff are
+    touched, and readers never observe a half-expired table."""
     from . import tx_table
 
     if not cfg.with_ttl:
         raise ValueError("retention requires PipelineConfig(with_ttl=True)")
-    if cfg.atomic:
-        table = cfg.path("raw_events")
+    table = cfg.path("raw_events")
 
-        def _count_at(version: int) -> int:
-            # manifest n_rows stats first (stats_cols=['ttl'] implies
-            # per-file counts, so this is metadata-only); real count()
-            # only when some live file predates the stats pass
-            c = tx_table.table_count(table, version)
-            if c is not None:
-                return c
-            df = tx_table.read_table(spark, table, version=version)
-            return 0 if df is None else df.count()  # None: every file gone
+    def _count_at(version: int) -> int:
+        # manifest n_rows stats first (stats_cols=['ttl'] implies
+        # per-file counts, so this is metadata-only); real count()
+        # only when some live file predates the stats pass
+        c = tx_table.table_count(table, version)
+        if c is not None:
+            return c
+        df = tx_table.read_table(spark, table, version=version)
+        return 0 if df is None else df.count()  # None: every file gone
 
-        v0 = tx_table.latest_version(table)
-        if v0 is None:
-            return {"expired_rows": 0, "rows_after": 0}
-        v_new = tx_table.delete_where(
-            spark,
-            table,
-            F.col("ttl") <= F.lit(int(now_epoch)),
-            between={"ttl": (None, int(now_epoch))},
-        )
-        after = _count_at(v_new)
-        if v_new == v0 or tx_table.read_manifest(table, v_new)["op"] != "delete_where":
-            # stats-proven no-op: delete_where returned its snapshot
-            # version (ours, or a concurrent writer's) without
-            # committing anything — including the idempotent repeat,
-            # where the snapshot is a PAST retention commit
-            return {"expired_rows": 0, "rows_after": after}
-        # both counts come from the pinned manifest versions around the
-        # retention commit, so a concurrent writer can't skew the delta
-        before = _count_at(v_new - 1)
-        return {"expired_rows": before - after, "rows_after": after}
-    return compact_parquet(
+    v0 = tx_table.latest_version(table)
+    if v0 is None:
+        return {"expired_rows": 0, "rows_after": 0}
+    v_new = tx_table.delete_where(
         spark,
-        cfg.path("raw_events"),
-        ttl_col="ttl",
-        now_epoch=now_epoch,
+        table,
+        F.col("ttl") <= F.lit(int(now_epoch)),
+        between={"ttl": (None, int(now_epoch))},
     )
+    after = _count_at(v_new)
+    if v_new == v0 or tx_table.read_manifest(table, v_new)["op"] != "delete_where":
+        # stats-proven no-op: delete_where returned its snapshot
+        # version (ours, or a concurrent writer's) without committing
+        # anything — including the idempotent repeat, where the
+        # snapshot is a PAST retention commit
+        return {"expired_rows": 0, "rows_after": after}
+    # both counts come from the pinned manifest versions around the
+    # retention commit, so a concurrent writer can't skew the delta
+    before = _count_at(v_new - 1)
+    return {"expired_rows": before - after, "rows_after": after}
 
 
 def start_reference_simulation(
@@ -280,9 +278,7 @@ def start_reference_simulation(
         agg.writeStream.outputMode("update")
         .option("checkpointLocation", cfg.checkpoint("sim-agg"))
         .foreachBatch(
-            upsert_parquet(
-                cfg.path("sim_agg"), ["window_start", "city", "event_type"], order_col="last_updated"
-            )
+            cfg.upsert("sim_agg", ["window_start", "city", "event_type"], "last_updated")
         ),
         cfg,
     )

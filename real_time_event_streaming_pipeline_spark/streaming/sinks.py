@@ -1,23 +1,18 @@
-"""Streaming sinks: upsert-by-key foreachBatch (the DynamoDB putItem
-replacement) and helpers.
+"""Streaming sinks: the row-at-a-time putItem writer and the
+append sink.
 
 The reference writes one DynamoDB putItem per row from a ForeachWriter
 (consumer/.../SparkDynamoDBConsumer.java:202-283) — a new client per
 partition per epoch, no batching (SURVEY.md §4.1 calls this an
-anti-optimization). Our sink is foreachBatch writing columnar files
-with last-writer-wins upsert semantics per key — identical observable
-semantics (putItem = upsert by PK), bulk I/O.
-
-Two implementations of that one contract exist, and
-`PipelineConfig.atomic` picks between them: `upsert_parquet` here
-(whole-table rewrite, the last-writer-wins reference) and
-`streaming/tx_table.upsert_tx` (hash-bucketed copy-on-write behind a
-manifest-committed log: an epoch rewrites only the buckets its keys
-hash into, commits atomically across buckets, applies each epoch
-exactly once, and gives readers snapshot isolation, time travel and
-vacuum). The second is the scale path; at 100 TB it is the
-Delta/Iceberg MERGE INTO shape without the external jars.
-"""
+anti-optimization). The engine's upsert sink is foreachBatch writing
+columnar files with last-writer-wins semantics per key — identical
+observable semantics (putItem = upsert by PK), bulk I/O. It has one
+implementation, `streaming/tx_table.upsert_tx`: hash-bucketed
+copy-on-write behind a manifest-committed log. An epoch rewrites only
+the files that may hold the buckets its keys hash into, commits
+atomically across buckets, applies each epoch exactly once, and gives
+readers snapshot isolation, time travel and vacuum — the Delta/Iceberg
+MERGE INTO shape without the external jars."""
 
 from __future__ import annotations
 
@@ -25,85 +20,6 @@ import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import Window
-
-
-def upsert_parquet(
-    out_dir: str,
-    key_cols: list[str],
-    order_col: str | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function: merge the micro-batch into a parquet
-    table, keeping one row per key — the row from the newest epoch
-    (ties within a batch broken by order_col descending). Last writer
-    wins, like the reference's putItem (SparkDynamoDBConsumer.java:264).
-
-    Every non-idle epoch rewrites the whole table: O(table) per epoch,
-    which is the fastest upsert at the sizes the tests and the default
-    pipeline run (a 20k-row epoch into a ~150k-row table merges in
-    under half the time `tx_table.upsert_tx` takes on 4 cores).
-    Past that, and wherever a half-swapped table must never be
-    visible, use `tx_table.upsert_tx` (`PipelineConfig(atomic=True)`).
-    """
-
-    def write(batch: DataFrame, epoch_id: int) -> None:
-        import shutil
-
-        spark = batch.sparkSession
-        bak = out_dir.rstrip("/") + ".bak"
-        # crash recovery: a previous epoch may have died between the
-        # two renames below — the live dir is missing but the backup
-        # holds the full pre-swap table
-        if not os.path.exists(out_dir) and os.path.exists(bak):
-            os.rename(bak, out_dir)
-        if os.path.exists(out_dir) and batch.isEmpty():
-            return  # idle trigger: don't rewrite the whole table for 0 rows
-        incoming = batch.withColumn("_epoch", F.lit(int(epoch_id)))
-        if os.path.exists(out_dir):
-            existing = spark.read.parquet(out_dir)
-            # allowMissingColumns: a restart that ADDS a column (e.g.
-            # enabling TTL on an existing table) rolls forward with
-            # NULLs for legacy rows instead of failing every epoch.
-            # Evolution is ADDITIVE-ONLY: a restart whose stream LOST a
-            # column the table already has would otherwise be silently
-            # accepted too, padding every new row with NULLs — fail
-            # loudly instead (ADVICE r6)
-            dropped = set(existing.columns) - set(incoming.columns)
-            if dropped:
-                raise ValueError(
-                    f"upsert sink at {out_dir}: incoming schema is missing "
-                    f"existing column(s) {sorted(dropped)} — only additive "
-                    "schema evolution is supported; if the column was "
-                    "intentionally removed, migrate the table explicitly"
-                )
-            merged = existing.unionByName(incoming, allowMissingColumns=True)
-        else:
-            merged = incoming
-        order = [F.desc("_epoch")] + ([F.desc(order_col)] if order_col else [])
-        w = Window.partitionBy(*key_cols).orderBy(*order)
-        deduped = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        # write once to a staging dir (can't overwrite the dir being
-        # read), then swap: rename the live dir ASIDE first so a full
-        # table always exists on disk (old → .bak, tmp → live, drop
-        # .bak). Not atomic — a concurrent reader can still catch the
-        # instant between the two renames; true atomicity needs a
-        # manifest commit, which tx_table.upsert_tx provides.
-        tmp = out_dir.rstrip("/") + ".tmp"
-        deduped.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(bak):
-            shutil.rmtree(bak)
-        if os.path.exists(out_dir):
-            os.rename(out_dir, bak)
-        os.rename(tmp, out_dir)
-        if os.path.exists(bak):
-            shutil.rmtree(bak)
-
-    return write
 
 
 class RowUpsertWriter:
@@ -117,7 +33,7 @@ class RowUpsertWriter:
 
     Parity completeness only: SURVEY.md §4.1 documents per-row writes
     as the reference's anti-optimization, and §2.1 S3 endorses the
-    foreachBatch bulk upsert (`upsert_parquet`) as the replacement.
+    foreachBatch bulk upsert (`tx_table.upsert_tx`) as the replacement.
     Atomicity note: the journal file is written to a temp name and
     renamed into place in close() — a crashed task leaves only temp
     files, which readers skip, and the task retry (same partition,

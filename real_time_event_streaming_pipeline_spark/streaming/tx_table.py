@@ -1,8 +1,7 @@
 """Manifest-committed transactional table: ATOMIC multi-bucket upsert.
 
-The engine's bucketed upsert sink (`upsert_tx`, chosen by
-`PipelineConfig(atomic=True)`; the other sink, `sinks.upsert_parquet`,
-rewrites the whole table). Every commit is one atomic filesystem
+The engine's one upsert sink (`upsert_tx`, which every `PipelineConfig`
+table commits through). Every commit is one atomic filesystem
 operation, whatever the number of buckets it rewrites, so a crash
 mid-write can never expose a half-upserted table.
 
@@ -1965,12 +1964,19 @@ def upsert_tx(
     stats_cols: list[str] | None = None,
     app_id: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch factory: the atomic, exactly-once upsert sink that
-    `PipelineConfig(atomic=True)` runs. Same last-writer-wins contract
-    as `sinks.upsert_parquet`, but an epoch rewrites only the files
-    that may hold the buckets its keys hash into and readers never
-    see a half-committed epoch. ``stats_cols`` records per-file
-    min/max for data skipping at read time.
+    """foreachBatch factory: the engine's upsert sink, atomic and
+    exactly-once. Last writer wins per key, like the reference's
+    putItem (SparkDynamoDBConsumer.java:264); an epoch rewrites only
+    the files that may hold the buckets its keys hash into, and
+    readers never see a half-committed epoch. ``stats_cols`` records
+    per-file min/max for data skipping at read time.
+
+    Schema evolution is additive-only: a batch that adds columns
+    rolls the table forward (older rows read back NULL for them — the
+    restart that turns on ``PipelineConfig.with_ttl``), while a batch
+    missing a column the table already has raises ``ValueError``
+    instead of padding every new row with NULLs. The check reads the
+    latest manifest's schema on the driver; it runs no Spark job.
 
     ``app_id`` scopes the replay ledger to this (query, checkpoint)
     pair; pass a fresh value when restarting a query from a FRESH
@@ -1978,6 +1984,17 @@ def upsert_tx(
     swallowed as replays of the previous run's epochs)."""
 
     def write(batch: DataFrame, epoch_id: int) -> None:
+        snap = snapshot(out_dir)
+        if snap is not None and snap[1].get("schema") is not None:
+            have = {f["name"] for f in json.loads(snap[1]["schema"])["fields"]}
+            dropped = have - set(batch.columns) - {"_epoch", "kb"}
+            if dropped:
+                raise ValueError(
+                    f"upsert sink at {out_dir}: incoming schema is missing "
+                    f"existing column(s) {sorted(dropped)} — only additive "
+                    "schema evolution is supported; if the column was "
+                    "intentionally removed, migrate the table explicitly"
+                )
         upsert(
             batch.sparkSession,
             out_dir,
@@ -1987,6 +2004,7 @@ def upsert_tx(
             order_col=order_col,
             epoch_id=int(epoch_id),
             stats_cols=stats_cols,
+            merge_schema=True,
             app_id=app_id,
         )
 

@@ -826,21 +826,26 @@ def test_ngram_face_route_switch_and_lsh_twin(spark, sf_small, monkeypatch):
     (b) forcing the LSH route on the driver corpus produces EXACTLY
     the rows the LSH SQL twin computes (bitwise, both engines), so the
     soak-scale route stays oracle-checked; (c) on this margin-bearing
-    corpus both routes agree."""
+    corpus both routes agree; (d) plans.all_oracles follows a route
+    flip within one process, as a corpus rewritten in place across the
+    switch would flip it, instead of serving an earlier call's twin."""
     import duckdb
 
+    from real_time_event_streaming_pipeline_spark.plans import all_oracles
     from real_time_event_streaming_pipeline_spark.plans import llmdata as L
     from real_time_event_streaming_pipeline_spark.catalog import table_rows_metadata
 
     n_docs = table_rows_metadata(sf_small, "documents")
     assert n_docs < L._NGRAM_LSH_SWITCH  # driver corpora stay exact
     assert L._ngram_jaccard_oracle_sql(sf_small) == L._NGRAM_JACCARD_SQL
+    assert all_oracles(sf_small)["llm_dedup_ngram_jaccard"] == L._NGRAM_JACCARD_SQL
 
     exact = {tuple(map(str, r)) for r in L.q_ngram_jaccard(spark, sf_small).collect()}
     # lower the switch below the driver corpus: query and oracle both
     # take the LSH route
     monkeypatch.setattr(L, "_NGRAM_LSH_SWITCH", n_docs)
     assert L._ngram_jaccard_oracle_sql(sf_small) == L._ngram_jaccard_lsh_sql()
+    assert all_oracles(sf_small)["llm_dedup_ngram_jaccard"] == L._ngram_jaccard_lsh_sql()
     lsh = {tuple(map(str, r)) for r in L.q_ngram_jaccard(spark, sf_small).collect()}
     assert exact and lsh == exact
 

@@ -23,6 +23,7 @@ from real_time_event_streaming_pipeline_spark.streaming.pipeline import (
     run_to_completion,
     start_reference_simulation,
 )
+from real_time_event_streaming_pipeline_spark.streaming.tx_table import read_table
 
 N_EVENTS = 2000
 
@@ -41,7 +42,7 @@ def test_reference_simulation_end_to_end(spark, tmp_path):
     run_to_completion(queries)
 
     raw = spark.read.parquet(cfg.path("sim_raw"))
-    agg = spark.read.parquet(cfg.path("sim_agg"))
+    agg = read_table(spark, cfg.path("sim_agg"))
 
     # parse round trip is lossless: every produced event landed
     n_raw = raw.count()

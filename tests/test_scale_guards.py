@@ -149,38 +149,6 @@ def test_spread_skips_repartition_when_parallel(spark, sf_small):
     assert "Exchange" in plan1
 
 
-def test_compact_parquet_ttl_retention(spark, tmp_path):
-    """TTL expiry rides the compaction rewrite (the DynamoDB-TTL
-    analogue): expired rows vanish, survivors are intact."""
-    from real_time_event_streaming_pipeline_spark.sources.maintenance import (
-        compact_parquet,
-    )
-
-    p = str(tmp_path / "ttl_table")
-    rows = [(i, 1000 + i) for i in range(100)]  # ttl = 1000..1099
-    spark.createDataFrame(rows, "k long, ttl long").write.parquet(p)
-    report = compact_parquet(spark, p, ttl_col="ttl", now_epoch=1049)
-    assert report["expired_rows"] == 50
-    kept = sorted(r.k for r in spark.read.parquet(p).collect())
-    assert kept == list(range(50, 100))
-
-
-def test_upsert_sink_recovers_interrupted_swap(spark, tmp_path):
-    """A crash between the two swap renames leaves only the .bak dir;
-    the next epoch must recover it instead of dropping the table."""
-    from real_time_event_streaming_pipeline_spark.streaming.sinks import upsert_parquet
-
-    out = str(tmp_path / "state")
-    sink = upsert_parquet(out, ["k"])
-    sink(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), 0)
-    # simulate the crash window: live dir renamed aside, new dir never landed
-    os.rename(out, out + ".bak")
-    sink(spark.createDataFrame([(2, "c")], "k long, v string"), 1)
-    got = {r.k: r.v for r in spark.read.parquet(out).select("k", "v").collect()}
-    assert got == {1: "a", 2: "c"}
-    assert not os.path.exists(out + ".bak")
-
-
 def test_aqe_splits_planted_skew_join(spark, tmp_path):
     """The relational module claims AQE handles fact-fact skew; prove
     the mechanism engages: one key holding ~all rows of the left fact

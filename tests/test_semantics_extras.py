@@ -12,7 +12,8 @@ from real_time_event_streaming_pipeline_spark.streaming.pipeline import (
     run_to_completion,
     start_pipeline,
 )
-from real_time_event_streaming_pipeline_spark.streaming.sinks import upsert_parquet
+from real_time_event_streaming_pipeline_spark.streaming import tx_table
+from real_time_event_streaming_pipeline_spark.streaming.tx_table import read_table, upsert_tx
 
 
 def test_processing_time_mode(spark, sf_small, tmp_path):
@@ -24,7 +25,7 @@ def test_processing_time_mode(spark, sf_small, tmp_path):
     cfg = PipelineConfig(out_dir=str(tmp_path), use_event_time=False)
     queries = start_pipeline(spark, events_file_stream(spark, sf_small), cfg)
     run_to_completion(queries)
-    agg = spark.read.parquet(cfg.path("aggregations"))
+    agg = read_table(spark, cfg.path("aggregations"))
     # all 1000 events counted, but windows collapse to the few wall-
     # clock buckets the run spanned (event time spans 30 days → would
     # be ~1000 distinct windows in event-time mode)
@@ -37,36 +38,52 @@ def test_upsert_sink_epoch_replay_idempotent(spark, tmp_path):
     not change the table — the putItem/upsert contract that makes
     foreachBatch effectively exactly-once."""
     out = str(tmp_path / "t")
-    sink = upsert_parquet(out, ["k"], order_col="v")
+    sink = upsert_tx(out, ["k"], order_col="v")
     sink(spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int"), 0)
-    before = {(r.k, r.v) for r in spark.read.parquet(out).select("k", "v").collect()}
+    before = {(r.k, r.v) for r in read_table(spark, out).select("k", "v").collect()}
     # replay epoch 0 with identical content
     sink(spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int"), 0)
-    after = {(r.k, r.v) for r in spark.read.parquet(out).select("k", "v").collect()}
+    after = {(r.k, r.v) for r in read_table(spark, out).select("k", "v").collect()}
     assert before == after == {("a", 1), ("b", 2)}
+    assert tx_table.latest_version(out) == 0
 
 
 def test_upsert_sink_rejects_column_removal(spark, tmp_path):
-    """Schema evolution is additive-only (ADVICE r6): a restarted
-    stream whose batches LOST a column the table already has must fail
-    loudly, not silently pad every new row with NULLs."""
+    """Schema evolution through the upsert sink is additive-only: a
+    restarted stream whose batches LOST a column the table already has
+    must fail loudly and commit nothing, not silently pad every new row
+    with NULLs; a batch that adds a column rolls the table forward. The
+    check reads the manifest, so a sink commit runs exactly the Spark
+    jobs a plain tx_table.upsert commit runs."""
     import pytest
 
+    narrow, wide = "k string, v int, extra string", "k string, v int, extra string, score double"
     out = str(tmp_path / "t")
-    sink = upsert_parquet(out, ["k"], order_col="v")
-    sink(spark.createDataFrame([("a", 1, "x")], "k string, v int, extra string"), 0)
+    sink = upsert_tx(out, ["k"], order_col="v")
+    sink(spark.createDataFrame([("a", 1, "x")], narrow), 0)
     with pytest.raises(ValueError, match="missing existing column.*extra"):
         sink(spark.createDataFrame([("b", 2)], "k string, v int"), 1)
-    # the additive direction still rolls forward
-    sink(
-        spark.createDataFrame(
-            [("c", 3, "y", 9.5)], "k string, v int, extra string, score double"
-        ),
-        2,
-    )
-    back = spark.read.parquet(out)
+    assert tx_table.latest_version(out) == 0
+    # the additive direction rolls forward
+    sink(spark.createDataFrame([("c", 3, "y", 9.5)], wide), 2)
+    back = read_table(spark, out)
     assert set(back.columns) >= {"k", "v", "extra", "score"}
-    assert back.count() == 2
+    assert {(r.k, r.score) for r in back.collect()} == {("a", None), ("c", 9.5)}
+
+    # the next commit, through the sink and through tx_table.upsert on a
+    # twin with the same history, runs the same number of Spark jobs
+    sc, twin = spark.sparkContext, str(tmp_path / "twin")
+    for epoch, rows, schema in [(0, [("a", 1, "x")], narrow), (2, [("c", 3, "y", 9.5)], wide)]:
+        tx_table.upsert(spark, twin, spark.createDataFrame(rows, schema), ["k"],
+                        order_col="v", epoch_id=epoch, merge_schema=True)
+    batch, n_jobs = spark.createDataFrame([("d", 4, "z", 1.5)], wide), []
+    for name, commit in [("sink", lambda: sink(batch, 3)), ("upsert", lambda: tx_table.upsert(
+            spark, twin, batch, ["k"], order_col="v", epoch_id=3, merge_schema=True))]:
+        sc.setJobGroup(f"{name}-{tmp_path.name}", "upsert sink job count")
+        commit()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"{name}-{tmp_path.name}")))
+    assert n_jobs[0] == n_jobs[1] > 0
 
 
 def test_dedup_index_format_marker_atomic(tmp_path):

@@ -1,6 +1,7 @@
 """Streaming semantics: the Dataflow identity (streaming query ==
-incremental view of the batch query), upsert sink last-writer-wins,
-checkpoint recovery, output modes, and the S6 generator domains.
+incremental view of the batch query), upsert sink (tx_table.upsert_tx)
+last-writer-wins, checkpoint recovery, output modes, TTL retention,
+and the S6 generator domains.
 """
 
 from __future__ import annotations
@@ -24,16 +25,24 @@ from real_time_event_streaming_pipeline_spark.streaming.pipeline import (
     run_to_completion,
     start_pipeline,
 )
-from real_time_event_streaming_pipeline_spark.streaming.sinks import upsert_parquet
+from real_time_event_streaming_pipeline_spark.streaming import tx_table
+from real_time_event_streaming_pipeline_spark.streaming.tx_table import read_table, upsert_tx
 
 
 def _rows(df):
     return {tuple(r) for r in df.collect()}
 
 
+def _kv(spark, table_dir):
+    return {(r.k, r.v) for r in read_table(spark, table_dir).select("k", "v").collect()}
+
+
 def test_pipeline_matches_batch(spark, sf_small, tmp_path):
     """End-to-end: run the 4-query pipeline over the file stream, then
-    check every sink equals its batch twin."""
+    check every sink equals its batch twin; the upsert tables are
+    committed through the manifest log, one version per epoch."""
+    from real_time_event_streaming_pipeline_spark.plans.citystream import enrich_events
+
     cfg = PipelineConfig(out_dir=str(tmp_path))
     src = events_file_stream(spark, sf_small)
     queries = start_pipeline(spark, src, cfg)
@@ -42,16 +51,21 @@ def test_pipeline_matches_batch(spark, sf_small, tmp_path):
     batch = city_events(spark, sf_small)
 
     # Q2: windowed aggregations == batch windowed agg
-    got = spark.read.parquet(cfg.path("aggregations")).drop("_epoch")
+    got = read_table(spark, cfg.path("aggregations")).drop("_epoch", "kb")
     want = windowed_agg(batch)
     assert _rows(got) == _rows(want)
+    # the log shows committed, epoch-tagged history
+    hist = tx_table.history(cfg.path("aggregations"))
+    assert hist and all(h["op"] == "upsert" for h in hist)
+    assert [h["epoch"] for h in hist] == sorted(h["epoch"] for h in hist)
 
-    # Q1: raw events — one row per event_key upsert
-    raw = spark.read.parquet(cfg.path("raw_events"))
+    # Q1: raw events — one row per event_key upsert, every event landed
+    raw = read_table(spark, cfg.path("raw_events"))
     assert raw.count() == raw.select("event_key").distinct().count()
     assert raw.count() == batch.select(
         F.concat_ws("-", "city", "event_type", "ts_iso")
     ).distinct().count()
+    assert raw.count() == enrich_events(batch).count()
 
     # Q3: alerts == batch severity filter
     alerts = spark.read.parquet(cfg.path("alerts"))
@@ -66,48 +80,49 @@ def test_pipeline_matches_batch(spark, sf_small, tmp_path):
 
 def test_upsert_last_writer_wins(spark, tmp_path):
     out = str(tmp_path / "t")
-    sink = upsert_parquet(out, ["k"], order_col="v")
+    sink = upsert_tx(out, ["k"], order_col="v")
     sink(spark.createDataFrame([("a", 1), ("b", 1)], "k string, v int"), 0)
     sink(spark.createDataFrame([("a", 99)], "k string, v int"), 1)
-    got = {(r.k, r.v) for r in spark.read.parquet(out).select("k", "v").collect()}
-    assert got == {("a", 99), ("b", 1)}
+    assert _kv(spark, out) == {("a", 99), ("b", 1)}
 
 
 def test_upsert_replay_same_epoch_idempotent(spark, tmp_path):
     """foreachBatch's exactly-once contract is at-least-once delivery +
-    idempotent sink: if the driver dies after the table swap but before
-    the checkpoint commit, Structured Streaming replays the SAME epoch
-    with the SAME data. Replaying must be a no-op — the reference's
-    putItem-retry semantics (SparkDynamoDBConsumer.java:267-271) at
-    batch granularity: same PK, same epoch → one row, same value."""
+    idempotent sink: if the driver dies after the manifest commit but
+    before the checkpoint commit, Structured Streaming replays the SAME
+    epoch with the SAME data. Replaying must be a no-op — the
+    reference's putItem-retry semantics
+    (SparkDynamoDBConsumer.java:267-271) at batch granularity: same PK,
+    same epoch → one row, same value."""
     out = str(tmp_path / "t")
-    sink = upsert_parquet(out, ["k"], order_col="v")
+    sink = upsert_tx(out, ["k"], order_col="v")
     sink(spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int"), 0)
     b1 = spark.createDataFrame([("a", 5), ("c", 3)], "k string, v int")
     sink(b1, 1)
-    snap = {(r.k, r.v) for r in spark.read.parquet(out).select("k", "v").collect()}
+    snap = _kv(spark, out)
     assert snap == {("a", 5), ("b", 2), ("c", 3)}
 
     # crash window 1: epoch 1 fully applied, checkpoint commit lost →
     # verbatim replay of epoch 1
+    v = tx_table.latest_version(out)
     sink(b1, 1)
-    table = spark.read.parquet(out)
-    assert {(r.k, r.v) for r in table.select("k", "v").collect()} == snap
+    assert tx_table.latest_version(out) == v
+    assert _kv(spark, out) == snap
     # dedupe is by (PK): one physical row per key even though the same
     # (PK, epoch) arrived twice
-    assert table.count() == 3
+    assert read_table(spark, out).count() == 3
 
-    # crash window 2: killed mid-write — a half-written staging dir is
-    # left behind; the replay must overwrite it, not trip on it
+    # crash window 2: killed mid-write — a half-written data dir the
+    # manifest never listed is left behind; readers and the next epoch
+    # must not trip on it
     import pathlib
 
-    stale = pathlib.Path(out + ".tmp")
-    stale.mkdir()
-    (stale / "part-garbage").write_text("not parquet")
-    sink(b1, 1)
-    assert {
-        (r.k, r.v) for r in spark.read.parquet(out).select("k", "v").collect()
-    } == snap
+    stale = pathlib.Path(out) / "data" / f"txn-{v + 1:010d}-garbage" / "b00000-00063"
+    stale.mkdir(parents=True)
+    (stale / "part-garbage.parquet").write_text("not parquet")
+    assert _kv(spark, out) == snap
+    sink(spark.createDataFrame([("d", 4)], "k string, v int"), 2)
+    assert _kv(spark, out) == snap | {("d", 4)}
 
 
 def test_checkpoint_recovery(spark, sf_small, tmp_path):
@@ -122,7 +137,7 @@ def test_checkpoint_recovery(spark, sf_small, tmp_path):
             .writeStream.outputMode("update")
             .option("checkpointLocation", cfg.checkpoint("agg2"))
             .foreachBatch(
-                upsert_parquet(cfg.path("agg2"), ["partition_key"], order_col="last_updated")
+                upsert_tx(cfg.path("agg2"), ["partition_key"], order_col="last_updated")
             )
             .start()
         )
@@ -137,7 +152,7 @@ def test_checkpoint_recovery(spark, sf_small, tmp_path):
     q2.processAllAvailable()
     q2.stop()
 
-    got = spark.read.parquet(cfg.path("agg2")).drop("_epoch")
+    got = read_table(spark, cfg.path("agg2")).drop("_epoch", "kb")
     want = windowed_agg(city_events(spark, sf_small))
     assert _rows(got) == _rows(want)
 
@@ -249,25 +264,28 @@ def test_pipeline_ttl_retention_drops_expired(spark, sf_small, tmp_path):
     (setup-dynamodb.sh:29-32): the pipeline stamps raw events with
     ttl = event_time + 30 d, and the retention pass drops rows whose
     ttl has passed — here, a now_epoch between the min and max expiry
-    removes exactly the older events and keeps the rest."""
+    removes exactly the older events and keeps the rest, through one
+    delete_where commit with ttl-stats file skipping."""
     from real_time_event_streaming_pipeline_spark.streaming.pipeline import run_retention
 
     cfg = PipelineConfig(out_dir=str(tmp_path), with_ttl=True)
     src = events_file_stream(spark, sf_small)
     run_to_completion(start_pipeline(spark, src, cfg))
 
-    raw = spark.read.parquet(cfg.path("raw_events"))
+    table = cfg.path("raw_events")
+    raw = read_table(spark, table)
     ttls = sorted(r.ttl for r in raw.select("ttl").collect())
     assert ttls, "pipeline wrote no raw events"
     n_total = len(ttls)
     cutoff = ttls[n_total // 2]  # expire the older half (ties keep)
 
     stats = run_retention(spark, cfg, now_epoch=cutoff)
-    kept = spark.read.parquet(cfg.path("raw_events"))
+    kept = read_table(spark, table)
     n_expired = sum(1 for t in ttls if t <= cutoff)
     assert stats["expired_rows"] == n_expired
     assert kept.count() == n_total - n_expired
     assert kept.filter(F.col("ttl") <= cutoff).count() == 0
+    assert tx_table.history(table)[-1]["op"] == "delete_where"
 
 
 def test_append_sink_epoch_replay_idempotent(spark, sf_small, tmp_path):
@@ -296,7 +314,6 @@ def test_atomic_pipeline_fresh_checkpoint_applies_epochs(spark, sf_small, tmp_pa
     import shutil
 
     from real_time_event_streaming_pipeline_spark.catalog import load
-    from real_time_event_streaming_pipeline_spark.streaming.tx_table import read_table
 
     raw = load(spark, sf_small, "events")
     src = str(tmp_path / "src")
@@ -310,7 +327,7 @@ def test_atomic_pipeline_fresh_checkpoint_applies_epochs(spark, sf_small, tmp_pa
         )
         run_to_completion(start_pipeline(spark, stream, cfg))
 
-    cfg = PipelineConfig(out_dir=str(tmp_path / "out"), atomic=True)
+    cfg = PipelineConfig(out_dir=str(tmp_path / "out"))
     run_once(cfg)
 
     # operator wipes checkpoints but keeps tables, then new data lands
@@ -319,11 +336,53 @@ def test_atomic_pipeline_fresh_checkpoint_applies_epochs(spark, sf_small, tmp_pa
     run_once(cfg)  # fresh checkpoint: reprocesses ALL files as epoch 0..N
 
     # reference: the same pipeline over the full source in one run
-    ref = PipelineConfig(out_dir=str(tmp_path / "ref"), atomic=True)
+    ref = PipelineConfig(out_dir=str(tmp_path / "ref"))
     run_once(ref)
     got = _rows(read_table(spark, cfg.path("raw_events")).drop("_epoch", "kb"))
     want = _rows(read_table(spark, ref.path("raw_events")).drop("_epoch", "kb"))
     assert got == want
+
+
+def test_pipeline_config_atomic_is_accepted_only_as_true(tmp_path):
+    """`atomic` once picked between two upsert sinks. It survives only
+    as an init parameter for old callers: True builds the default
+    config, False names the one sink and fails."""
+    import dataclasses
+
+    out = str(tmp_path)
+    assert PipelineConfig(out_dir=out, atomic=True) == PipelineConfig(out_dir=out)
+    assert "atomic" not in {f.name for f in dataclasses.fields(PipelineConfig)}
+    with pytest.raises(ValueError, match="tx_table"):
+        PipelineConfig(out_dir=out, atomic=False)
+
+
+def test_raw_events_sink_rolls_forward_when_ttl_is_enabled(spark, tmp_path):
+    """The restart that turns on with_ttl: a raw-events table written
+    without `ttl` takes batches that carry it. The sink widens the
+    table in the same commit, the old rows read back with ttl NULL,
+    and retention expires only stamped rows past the cutoff."""
+    from real_time_event_streaming_pipeline_spark.streaming.pipeline import run_retention
+
+    schema = "event_key string, ts timestamp, value double"
+    before = PipelineConfig(out_dir=str(tmp_path))
+    before.upsert("raw_events", ["event_key"], "ts")(
+        spark.createDataFrame([("old1", None, 1.0), ("old2", None, 2.0)], schema), 0
+    )
+    after = PipelineConfig(out_dir=str(tmp_path), with_ttl=True)
+    sink = after.upsert("raw_events", ["event_key"], "ts")
+    sink(
+        spark.createDataFrame(
+            [("new1", None, 3.0, 100), ("new2", None, 4.0, 200)], schema + ", ttl long"
+        ),
+        1,
+    )
+    table = after.path("raw_events")
+    got = {(r.event_key, r.ttl) for r in read_table(spark, table).collect()}
+    assert got == {("old1", None), ("old2", None), ("new1", 100), ("new2", 200)}
+
+    assert run_retention(spark, after, now_epoch=150) == {"expired_rows": 1, "rows_after": 3}
+    kept = {r.event_key for r in read_table(spark, table).collect()}
+    assert kept == {"old1", "old2", "new2"}
 
 
 def test_windowed_agg_out_of_domain_severity_fails_loudly(spark, tmp_path):

@@ -129,7 +129,7 @@ def test_cdf_stream_start_version_skips_history(spark, tmp_path):
 
 
 def test_cdf_stream_mirrors_atomic_pipeline_table(spark, sf_small, tmp_path):
-    """The whole loop: the 4-query atomic pipeline lands its Q2 table
+    """The whole loop: the 4-query pipeline lands its Q2 table
     through manifest commits; a txcdf subscriber drains the change
     feed and reconstructs the table from changes ALONE (last
     post-image/insert per key by commit version, minus deletes) —
@@ -142,7 +142,7 @@ def test_cdf_stream_mirrors_atomic_pipeline_table(spark, sf_small, tmp_path):
         start_pipeline,
     )
 
-    cfg = PipelineConfig(out_dir=str(tmp_path / "pipe"), atomic=True)
+    cfg = PipelineConfig(out_dir=str(tmp_path / "pipe"))
     run_to_completion(start_pipeline(spark, events_file_stream(spark, sf_small), cfg))
     table = cfg.path("aggregations")
 

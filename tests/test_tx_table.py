@@ -14,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from real_time_event_streaming_pipeline_spark.streaming import tx_table
-from real_time_event_streaming_pipeline_spark.streaming.sinks import upsert_parquet
 
 EPOCHS = [
     [("a", 1), ("b", 2), ("c", 3), ("d", 4)],
@@ -60,18 +59,28 @@ def tiny_files(spark):
     yield from _files_target(spark, "128b")
 
 
+def _lww(epochs):
+    """The last-writer-wins reference model: later epochs win per key,
+    and within one epoch the larger ``v`` (the order column) wins."""
+    state: dict[str, int] = {}
+    for rows in epochs:
+        best: dict[str, int] = {}
+        for k, v in rows:
+            best[k] = max(v, best.get(k, v))
+        state.update(best)
+    return set(state.items())
+
+
 def test_tx_upsert_matches_overwrite_sink_semantics(spark, tmp_path):
-    """Same epoch sequence through the whole-table-rewrite sink (the
-    last-writer-wins reference) and the transactional table must land
-    on identical contents."""
-    full, tx = str(tmp_path / "full"), str(tmp_path / "tx")
-    sink = upsert_parquet(full, ["k"], order_col="v")
+    """The same epoch sequence through the transactional table and
+    through the pure-Python last-writer-wins model must land on
+    identical contents, after every epoch."""
+    tx = str(tmp_path / "tx")
     for i, rows in enumerate(EPOCHS):
-        sink(_batch(spark, rows), i)
         tx_table.upsert(spark, tx, _batch(spark, rows), ["k"], n_buckets=8,
                         order_col="v", epoch_id=i)
-    want = {(r.k, r.v) for r in spark.read.parquet(full).select("k", "v").collect()}
-    assert _content(spark, tx) == want == FINAL
+        assert _content(spark, tx) == _lww(EPOCHS[: i + 1])
+    assert _lww(EPOCHS) == FINAL
 
 
 def test_tx_crash_before_commit_leaves_old_snapshot_bitwise(spark, tmp_path, monkeypatch):
@@ -328,38 +337,6 @@ def test_tx_foreachbatch_stream_matches_batch(spark, tmp_path):
     assert union.count() == 8  # sanity: all tiles fed the stream
 
 
-def test_pipeline_atomic_sink_matches_batch(spark, sf_small, tmp_path):
-    """The 4-query reference pipeline with atomic=True lands the same
-    Q1/Q2 tables as the batch twins, committed through the manifest
-    log with one version per micro-batch epoch."""
-    from real_time_event_streaming_pipeline_spark.plans.citystream import (
-        city_events,
-        enrich_events,
-        windowed_agg,
-    )
-    from real_time_event_streaming_pipeline_spark.sources import events_file_stream
-    from real_time_event_streaming_pipeline_spark.streaming.pipeline import (
-        PipelineConfig,
-        run_to_completion,
-        start_pipeline,
-    )
-
-    cfg = PipelineConfig(out_dir=str(tmp_path), atomic=True)
-    src = events_file_stream(spark, sf_small)
-    run_to_completion(start_pipeline(spark, src, cfg))
-
-    got = tx_table.read_table(spark, cfg.path("aggregations")).drop("_epoch", "kb")
-    want = windowed_agg(city_events(spark, sf_small))
-    assert {tuple(r) for r in got.collect()} == {tuple(r) for r in want.collect()}
-    # every raw event landed through the manifest too
-    raw = tx_table.read_table(spark, cfg.path("raw_events"))
-    assert raw.count() == enrich_events(city_events(spark, sf_small)).count()
-    # the log shows committed, epoch-tagged history
-    hist = tx_table.history(cfg.path("aggregations"))
-    assert hist and all(h["op"] == "upsert" for h in hist)
-    assert [h["epoch"] for h in hist] == sorted(h["epoch"] for h in hist)
-
-
 def test_tx_file_stats_and_data_skipping(spark, tmp_path, tiny_files):
     """With stats_cols set, every new file entry carries min/max and
     read_table(between=...) provably skips non-overlapping files while
@@ -530,36 +507,6 @@ def test_tx_delete_where_noop_when_stats_prove_empty(spark, tmp_path):
     v = tx_table.delete_where(spark, tx, F.col("v") > 100, between={"v": (101, None)})
     assert v == v0  # no commit at all: every file skipped
     assert _content(spark, tx) == {("a", 5), ("b", 9)}
-
-
-def test_tx_atomic_ttl_retention(spark, sf_small, tmp_path):
-    """run_retention on an atomic pipeline expires rows through
-    delete_where with ttl-stats skipping; the table never loses
-    unexpired rows and the commit log records the retention pass."""
-    from real_time_event_streaming_pipeline_spark.sources import events_file_stream
-    from real_time_event_streaming_pipeline_spark.streaming.pipeline import (
-        PipelineConfig,
-        run_retention,
-        run_to_completion,
-        start_pipeline,
-    )
-
-    cfg = PipelineConfig(out_dir=str(tmp_path), with_ttl=True, atomic=True)
-    src = events_file_stream(spark, sf_small)
-    run_to_completion(start_pipeline(spark, src, cfg))
-
-    table = cfg.path("raw_events")
-    raw = tx_table.read_table(spark, table)
-    ttls = sorted(r.ttl for r in raw.select("ttl").collect())
-    assert ttls
-    cutoff = ttls[len(ttls) // 2]
-    stats = run_retention(spark, cfg, now_epoch=cutoff)
-    kept = tx_table.read_table(spark, table)
-    n_expired = sum(1 for t in ttls if t <= cutoff)
-    assert stats["expired_rows"] == n_expired
-    assert kept.count() == len(ttls) - n_expired
-    assert kept.filter(F.col("ttl") <= cutoff).count() == 0
-    assert tx_table.history(table)[-1]["op"] == "delete_where"
 
 
 def test_tx_change_data_feed(spark, tmp_path):
@@ -840,7 +787,7 @@ def test_tx_atomic_retention_expiring_everything(spark, tmp_path):
         run_retention,
     )
 
-    cfg = PipelineConfig(out_dir=str(tmp_path), with_ttl=True, atomic=True)
+    cfg = PipelineConfig(out_dir=str(tmp_path), with_ttl=True)
     table = cfg.path("raw_events")
     rows = spark.createDataFrame([("e1", 100), ("e2", 200)], "event_key string, ttl long")
     tx_table.upsert(spark, table, rows, ["event_key"], n_buckets=4,
@@ -887,7 +834,7 @@ def test_tx_retention_counts_without_stats_fallback(spark, tmp_path):
         run_retention,
     )
 
-    cfg = PipelineConfig(out_dir=str(tmp_path), with_ttl=True, atomic=True)
+    cfg = PipelineConfig(out_dir=str(tmp_path), with_ttl=True)
     table = cfg.path("raw_events")
     rows = spark.createDataFrame(
         [("e1", 100), ("e2", 200), ("e3", 300)], "event_key string, ttl long"
@@ -1274,14 +1221,13 @@ def test_tx_per_bucket_manifests_stay_readable_and_writable(spark, tmp_path):
     update_where, read_changes, compact and time travel all match the
     last-writer-wins reference, and the next commit writes packed
     ``kbs`` entries while carrying untouched per-bucket files by path."""
-    tx, ref = str(tmp_path / "tx"), str(tmp_path / "ref")
+    tx = str(tmp_path / "tx")
     n = 8
     epochs = [
         [(f"key{i}", i) for i in range(40)],
         [("key3", 300), ("key17", 1700), ("new1", 1)],
         [("key5", 500), ("key3", 301), ("new2", 2)],
     ]
-    sink = upsert_parquet(ref, ["k"], order_col="v")
     bucket = {
         r.k: r.kb
         for r in _batch(spark, epochs[0] + epochs[1])
@@ -1290,7 +1236,6 @@ def test_tx_per_bucket_manifests_stay_readable_and_writable(spark, tmp_path):
     }
     state: dict[str, tuple[int, int]] = {}
     for epoch, rows in enumerate(epochs[:2]):
-        sink(_batch(spark, rows), epoch)
         state.update({k: (v, epoch) for k, v in rows})
         touched = {bucket[k] for k, _ in rows}
         prev = [] if epoch == 0 else tx_table.read_manifest(tx, epoch - 1)["files"]
@@ -1309,10 +1254,9 @@ def test_tx_per_bucket_manifests_stay_readable_and_writable(spark, tmp_path):
     assert _content(spark, tx, version=0) == set(epochs[0])
     assert _content(spark, tx, version=1) == v1
 
-    sink(_batch(spark, epochs[2]), 2)
     v = tx_table.upsert(spark, tx, _batch(spark, epochs[2]), ["k"], n_buckets=n,
                         order_col="v", epoch_id=2)
-    want = {(r.k, r.v) for r in spark.read.parquet(ref).select("k", "v").collect()}
+    want = _lww(epochs)
     assert _content(spark, tx) == want
     touched = _buckets_of(spark, [k for k, _ in epochs[2]], n)
     fresh = _packed_commit(tx, v - 1, v, touched)

@@ -131,8 +131,7 @@ def _hygiene(spark) -> int:
     blocks are dropped DETERMINISTICALLY instead: every
     still-persistent RDD is debris by construction here — each row
     rebuilds its plan from parquet, and nothing in the engine caches
-    DataFrames across invocations (the only cross-call cache is
-    plans._GEN_CACHE, SQL strings) — so unpersist them all, then
+    DataFrames across invocations — so unpersist them all, then
     python gc → gateway detach → System.gc() so the cleaner can also
     reap broadcasts and shuffle files. Runs OUTSIDE the timed window;
     returns the pinned-RDD count BEFORE the sweep (the leak
