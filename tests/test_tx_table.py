@@ -337,6 +337,42 @@ def test_tx_foreachbatch_stream_matches_batch(spark, tmp_path):
     assert union.count() == 8  # sanity: all tiles fed the stream
 
 
+def test_pipeline_atomic_sink_matches_batch(spark, sf_small, tmp_path):
+    """The 4-query reference pipeline built from an old caller's
+    atomic=True config lands the same Q1/Q2 tables as the batch twins,
+    committed through the manifest log with one version per
+    micro-batch epoch."""
+    from real_time_event_streaming_pipeline_spark.plans.citystream import (
+        city_events,
+        enrich_events,
+        windowed_agg,
+    )
+    from real_time_event_streaming_pipeline_spark.sources import events_file_stream
+    from real_time_event_streaming_pipeline_spark.streaming.pipeline import (
+        PipelineConfig,
+        run_to_completion,
+        start_pipeline,
+    )
+
+    cfg = PipelineConfig(out_dir=str(tmp_path), atomic=True)
+    src = events_file_stream(spark, sf_small)
+    run_to_completion(start_pipeline(spark, src, cfg))
+
+    got = tx_table.read_table(spark, cfg.path("aggregations")).drop("_epoch", "kb")
+    want = windowed_agg(city_events(spark, sf_small))
+    assert {tuple(r) for r in got.collect()} == {tuple(r) for r in want.collect()}
+    # every raw event landed through the manifest too
+    raw = tx_table.read_table(spark, cfg.path("raw_events"))
+    assert raw.count() == enrich_events(city_events(spark, sf_small)).count()
+    # the log shows committed, epoch-tagged history: one version per epoch
+    for name in ("aggregations", "raw_events"):
+        hist = tx_table.history(cfg.path(name))
+        assert hist and all(h["op"] == "upsert" for h in hist)
+        epochs = [h["epoch"] for h in hist]
+        assert epochs == sorted(set(epochs))
+        assert tx_table.latest_version(cfg.path(name)) == len(hist) - 1
+
+
 def test_tx_file_stats_and_data_skipping(spark, tmp_path, tiny_files):
     """With stats_cols set, every new file entry carries min/max and
     read_table(between=...) provably skips non-overlapping files while
@@ -507,6 +543,44 @@ def test_tx_delete_where_noop_when_stats_prove_empty(spark, tmp_path):
     v = tx_table.delete_where(spark, tx, F.col("v") > 100, between={"v": (101, None)})
     assert v == v0  # no commit at all: every file skipped
     assert _content(spark, tx) == {("a", 5), ("b", 9)}
+
+
+def test_tx_atomic_ttl_retention(spark, sf_small, tmp_path):
+    """run_retention expires rows through one delete_where commit with
+    ttl-stats skipping; the table never loses unexpired rows, and a
+    repeated pass at the same cutoff expires nothing and commits
+    nothing."""
+    from real_time_event_streaming_pipeline_spark.sources import events_file_stream
+    from real_time_event_streaming_pipeline_spark.streaming.pipeline import (
+        PipelineConfig,
+        run_retention,
+        run_to_completion,
+        start_pipeline,
+    )
+
+    cfg = PipelineConfig(out_dir=str(tmp_path), with_ttl=True, atomic=True)
+    src = events_file_stream(spark, sf_small)
+    run_to_completion(start_pipeline(spark, src, cfg))
+
+    table = cfg.path("raw_events")
+    raw = tx_table.read_table(spark, table)
+    ttls = sorted(r.ttl for r in raw.select("ttl").collect())
+    assert ttls
+    cutoff = ttls[len(ttls) // 2]
+    v0 = tx_table.latest_version(table)
+    stats = run_retention(spark, cfg, now_epoch=cutoff)
+    kept = tx_table.read_table(spark, table)
+    n_expired = sum(1 for t in ttls if t <= cutoff)
+    assert stats["expired_rows"] == n_expired
+    assert stats["rows_after"] == len(ttls) - n_expired
+    assert kept.count() == len(ttls) - n_expired
+    assert kept.filter(F.col("ttl") <= cutoff).count() == 0
+    assert tx_table.latest_version(table) == v0 + 1
+    assert tx_table.history(table)[-1]["op"] == "delete_where"
+
+    again = run_retention(spark, cfg, now_epoch=cutoff)
+    assert again == {"expired_rows": 0, "rows_after": len(ttls) - n_expired}
+    assert tx_table.latest_version(table) == v0 + 1
 
 
 def test_tx_change_data_feed(spark, tmp_path):
